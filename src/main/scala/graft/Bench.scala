@@ -24,6 +24,9 @@ object Bench {
     // absorb startup cost
     spark.range(1000000).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).count()
+    // lines whose query or build threw: still timed (the JSON keeps
+    // every line), but listed in both outputs and the exit status
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       // guide §1.5: label every query's jobs so a UI/event-log reading
       // of a bench run maps stages back to bench lines (thread-local,
@@ -34,6 +37,7 @@ object Bench {
         case e: Throwable =>
           // keep the JSON contract but never hide a broken query
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          failed += name
       }
       val elapsed = (System.nanoTime() - t0) / 1e9
       // queries persist() intermediates they branch over; drop them so 100+
@@ -59,7 +63,9 @@ object Bench {
       spark.sparkContext.setJobDescription(s"bench:$name")
       val t0 = System.nanoTime()
       try build catch {
-        case e: Throwable => System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          failed += name
       }
       name -> (System.nanoTime() - t0) / 1e9
     }
@@ -215,7 +221,7 @@ object Bench {
     }
     // per-job overhead calibration (µs per trivial 1-stage job): the
     // graph family's wall is job-count dominated at these SFs
-    // (GraphDecomp: identical job counts and near-identical walls at
+    // (measured r14: identical job counts and near-identical walls at
     // sf0.01 vs sf0.1) — this normalizer lets a future round decide
     // "slower box" vs "regression" from the artifact alone. It runs
     // OUTSIDE the timed masses_probe line (round-15, VERDICT r14 #5):
@@ -260,10 +266,11 @@ object Bench {
     } catch { case _: Throwable => "" }
     val ms = masses.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val fileJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"masses":$ms,"sf":"$sfDir","loadavg":"$loadavg"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"masses":$ms,"sf":"$sfDir","loadavg":"$loadavg","failed":$failedJson}"""
     val stdoutJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","loadavg":"$loadavg"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","loadavg":"$loadavg","failed":${failed.size}}"""
     // The driver parses this JSON from stdout; round 1 failed to extract it
     // from interleaved log noise. Stop Spark FIRST (its shutdown WARNs go to
     // stderr/before us), persist a file copy, then emit the JSON as the
@@ -278,5 +285,6 @@ object Bench {
     System.out.flush(); System.err.flush()
     println(stdoutJson)
     System.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

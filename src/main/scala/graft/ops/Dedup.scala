@@ -28,6 +28,10 @@ import LoopScope.CkptOps
   * most of a near-dup graph's depth collapses locally in that one pass,
   * cutting global rounds (sf0.1: 8 rounds → 3; each round is ~0.8 s of
   * fixed job overhead at small SF, so this is the q56/q57 perf lever).
+  * The alternating large-star/small-star rival (Kiveris et al., SoCC
+  * 2014) was raced on identical pair inputs and measured 3.1× slower
+  * at ×10 replica scale (2.48 s vs 7.60 s at sf0.1; 2.6 s vs 7.2 s on
+  * the r14 corpus): its state is edge-grained with no pre-collapse.
   *
   * Labels only ever decrease (the jump target `lbl(v)` already carries
   * a label ≤ `lbl(v)`) and the component minimum is a fixed point, so
@@ -171,7 +175,6 @@ object Dedup {
       edges: DataFrame,
       maxRounds: Int = 64,
       track: DataFrame => DataFrame = identity,
-      onRound: (Int, Long) => Unit = (_, _) => (),
       preCollapse: Boolean = true): (DataFrame, Int) = {
     // symmetrize once; both directions are needed for relaxation to pull
     // the min against the edge orientation
@@ -188,10 +191,7 @@ object Dedup {
           .select(col("id"), coalesce(col("lm"), col("id")).as("lbl"))
       else vertices.select(col("id"), col("id").as("lbl"))
     // convergence-detected rounds with per-round eager checkpoints;
-    // join keys are vertex ids with occupancy-capped degrees — AQE-off
-    // scope ([[LoopScope]] doc) so each round is one job, not one per
-    // exchange
-    graft.ops.LoopScope.aqeOff(vertices.sparkSession) {
+    // join keys are vertex ids with occupancy-capped degrees
     var lbl = init.loopCkpt
     // delta iteration (the Pregel message optimization): only vertices
     // whose label changed last round can tell their neighbors anything
@@ -221,9 +221,6 @@ object Dedup {
         case Some(n: java.lang.Long) => n.longValue()
         case _ => 0L
       }
-      // nChanged is also next round's frontier size — surfaced so
-      // callers can watch the delta iteration shrink (CcProbe prints it)
-      onRound(rounds, nChanged)
       converged = nChanged == 0L
       changed = next.filter(col("lbl") =!= col("prev")).select(col("id"), col("lbl"))
       lbl = next.select(col("id"), col("lbl"))
@@ -232,7 +229,7 @@ object Dedup {
       throw new IllegalStateException(
         s"connected components not converged after $maxRounds rounds")
     (lbl, rounds)
-  } }
+  }
 
   /** Connected components of the pair graph: returns `(id, lbl)` with
     * `lbl = min(component(id))`. `edges` needs columns `src`/`dst` (one
@@ -263,89 +260,6 @@ object Dedup {
       .union(pairs.select(col("db").as("id"))).distinct()
     val edges = pairs.select(col("da").as("src"), col("db").as("dst"))
     connectedComponents(verts, edges, maxRounds, track)
-  }
-
-  /** Alternating large-star / small-star connected components (Kiveris,
-    * Lattanzi, Mirrokni, Rastogi & Vassilvitskii, "Connected Components
-    * in MapReduce and Beyond", SoCC 2014) — implemented as the measured
-    * RIVAL to [[connectedComponents]], not the default: StressCc races
-    * both on identical pair inputs at ×1/×10 replica scale and the
-    * adoption bar is ≥1.5× at ×10 (PLANS.md records the outcome).
-    *
-    * State is the canonically-oriented edge set (src > dst, no self
-    * loops, distinct). One round = large-star (every node's
-    * strictly-larger neighbors re-point to m(u) = min(N(u) ∪ {u}))
-    * then small-star (every node's ≤-neighbors and the node itself
-    * re-point to the min ≤-neighbor); both emissions preserve the
-    * orientation invariant, and the fixpoint is the star forest where
-    * every vertex points at its component minimum. Convergence is an
-    * exact set comparison (anti-join + count — part of the algorithm's
-    * real cost, charged to its wall clock).
-    *
-    * Scale shape: each round is two groupBy-min + two equi-joins on
-    * long keys — same shuffle class as a [[roundPlan]] round but with
-    * EDGE-grained state (the label table is vertex-grained), and no
-    * partition-local pre-collapse to fast-forward it.
-    */
-  def connectedComponentsStarWithRounds(
-      vertices: DataFrame,
-      edges: DataFrame,
-      maxRounds: Int = 64): (DataFrame, Int) = {
-    // same per-round checkpoint discipline as the production path —
-    // AQE-off scope keeps the race fair (both rivals pay per-round
-    // jobs, not per-exchange jobs)
-    val (eF, roundsF) = graft.ops.LoopScope.aqeOff(vertices.sparkSession) {
-    var e = edges
-      .select(greatest(col("src"), col("dst")).as("src"),
-        least(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .loopCkpt
-    var rounds = 0
-    var done = e.isEmpty
-    while (!done && rounds < maxRounds) {
-      // large-star: (v, m(u)) for every neighbor v > u
-      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      val mL = sym.groupBy(col("src").as("u"))
-        .agg(min(col("dst")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      // v > u ≥ m(u), so the emitted (v, m) pair is already oriented
-      val afterL = sym.filter(col("dst") > col("src"))
-        .join(mL, col("src") === col("u"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .distinct()
-        .loopCkpt
-      // small-star on the oriented set: all dst < src, m = min neighbor
-      val mS = afterL.groupBy(col("src").as("u")).agg(min(col("dst")).as("m"))
-      val outV = afterL.join(mS, col("src") === col("u"))
-        .filter(col("dst") =!= col("m"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-      val outU = mS.select(col("u").as("src"), col("m").as("dst"))
-      val next = outV.union(outU)
-        .filter(col("src") =!= col("dst")).distinct()
-        .loopCkpt
-      rounds += 1
-      done = next.join(e, Seq("src", "dst"), "left_anti").isEmpty &&
-        next.count() == e.count()
-      e = next
-    }
-    if (!done)
-      throw new IllegalStateException(s"star CC not converged after $maxRounds rounds")
-    (e, rounds)
-    }
-    val lbl = vertices.select(col("id"))
-      .join(eF.select(col("src").as("id"), col("dst").as("plbl")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("plbl"), col("id")).as("lbl"))
-    (lbl, roundsF)
-  }
-
-  /** Star CC straight from an undirected pair table — the
-    * [[fromPairs]] twin for the StressCc comparison.
-    */
-  def fromPairsStar(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
-    val verts = pairs.select(col("da").as("id"))
-      .union(pairs.select(col("db").as("id"))).distinct()
-    val edges = pairs.select(col("da").as("src"), col("db").as("dst"))
-    connectedComponentsStarWithRounds(verts, edges, maxRounds)._1
   }
 
   /** Incremental label MAINTENANCE — the rolling-dedup twin of

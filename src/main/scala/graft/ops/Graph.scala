@@ -38,19 +38,17 @@ object Graph {
     val ids = nodes.select(col("id"))
     // fixed-iteration rank loop with per-round eager checkpoints over
     // node-grained tables (join keys are vertex ids, contributions
-    // degree-bounded) — AQE-off scope ([[LoopScope]] doc)
-    LoopScope.aqeOff(nodes.sparkSession) {
-      var r = ids.select(col("id"), lit(scale).as("r"))
-      for (_ <- 1 to iters) {
-        val contrib = eo.join(r, col("src") === col("id"))
-          .select(col("dst"), expr("r DIV odeg").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-        r = ids.join(contrib, col("id") === col("dst"), "left")
-          .select(col("id"),
-            (lit(15L * scale / 100) + expr("(85L * coalesce(s, 0L)) DIV 100")).as("r"))
-          .loopCkpt
-      }
-      r
+    // degree-bounded)
+    var r = ids.select(col("id"), lit(scale).as("r"))
+    for (_ <- 1 to iters) {
+      val contrib = eo.join(r, col("src") === col("id"))
+        .select(col("dst"), expr("r DIV odeg").as("c"))
+        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
+      r = ids.join(contrib, col("id") === col("dst"), "left")
+        .select(col("id"),
+          (lit(15L * scale / 100) + expr("(85L * coalesce(s, 0L)) DIV 100")).as("r"))
+        .loopCkpt
     }
+    r
   }
 }

@@ -85,11 +85,8 @@ object Ivf {
     val spark = emb.sparkSession
     import spark.implicits._
     // fixed [[Iters]]-step unrolled trainer with per-iteration eager
-    // checkpoints over a k-row state table — AQE-off scope
-    // ([[LoopScope]] doc): the assign pass is map-only (broadcast
-    // NearestCell) and the update join is k-row, so there is nothing
-    // for AQE to re-plan and each iteration collapses to one job
-    graft.ops.LoopScope.aqeOff(spark) {
+    // checkpoints over a k-row state table: the assign pass is map-only
+    // (broadcast NearestCell) and the update join is k-row
     var cent: DataFrame = emb.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("cid"), col("vq").as("S"), lit(1L).as("n"))
     for (_ <- 1 to Iters) {
@@ -139,7 +136,7 @@ object Ivf {
         .loopCkpt)
     }
     cent
-  } }
+  }
 
   /** Nearest trained cell for every vector: (vec_id, cell, v, nrm).
     * Map-only ([[trainCells]]'s NearestCell argmin): one pass, no

@@ -1,108 +1,28 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-
-/** Conf-gated AQE scope for the FIXED-SHAPE unrolled loops (beam hops,
-  * heuristic-2 prune steps, Lloyd iterations, CC rounds) — DORMANT BY
-  * DEFAULT after round-15 measurement; see the verdict below.
+/** The per-step eager checkpoint of the FIXED-SHAPE unrolled loops (beam
+  * hops, heuristic-2 prune steps, Lloyd iterations, CC rounds).
   *
-  * The hypothesis (VERDICT r14 #1): GraphDecomp proved the graph
-  * family's wall at test SFs per-JOB-overhead bound — the loops' job
-  * counts are code-fixed, and under AQE each eagerly-materialized step
-  * submits one job per exchange. The loops' shapes are KNOWN (that is
-  * what lets the DuckDB oracle unroll them), so adaptive re-planning
-  * buys nothing; with AQE off each step is one job.
+  * [[ckpt]] exists because a checkpoint taken under non-adaptive
+  * execution captures REAL physical partitioning/ordering, and a step
+  * whose tail sorts by columns the final projection drops (SMJ keys,
+  * window order columns) captures a SortOrder over pre-projection
+  * attributes — poisoning every persisted descendant's cache entry (see
+  * [[org.apache.spark.sql.graft.ColumnBridge.stripDanglingLayout]]). The
+  * strip makes every loop checkpoint safe whatever planner produced it.
   *
-  * The measurement (round 15, both on this box, masses identical):
-  * job counts DID fall 30–59% (GraphDecomp attach 87→36, repair
-  * 54→38, serve 50→33) and at `local[8]` walls fell 2–7× — but at the
-  * bench's `local[32]` the same scope made every family WORSE
-  * (BenchOne warm reps: q154 13.1→34.6 s, q148 5.1→44.0 s, q157
-  * 9.4→79.7 s; pinning loop shuffle partitions to 4 recovered only
-  * half). Verdict: at high thread counts the family's wall is
-  * stage×task-count bound, and AQE's post-shuffle coalescing (most
-  * loop stages collapse to 1 task) is itself the job-count optimizer —
-  * the r14 "jobs × overhead" model's constant silently included the
-  * coalescing. So the scope defaults OFF
-  * (`spark.graft.loopAqeOff=true` opts in).
-  *
-  * Round-16 crossover sweep (VERDICT r15 #6) — the "right for CPUS≤8"
-  * claim did NOT survive the r15 loop rework: on HEAD (invariant-8
-  * selections + fused beam hops) the scope is SLOWER at every width
-  * measured, warm rep2 at sf0.1: local[8] q148 5.78→11.93 s, q157
-  * 8.96→31.56 s, q154 8.37→17.85 s; local[16] 6.26→28.49 / 7.85→29.15
-  * / 9.71→21.01; local[32] as recorded above. The r15 local[8] win was
-  * measured on the PRE-rework loops — the AQE-compatible rework
-  * captured the same win portably, leaving the knob with no winning
-  * width on current code. It stays as the documented raced loser (and
-  * the carrier of the ACTIVE [[ckpt]] layout-strip hardening); re-race
-  * it only if a future loop shape regresses under AQE.
-  *
-  * Scope discipline when enabled (the q145 conf-gate rule): the body
-  * must materialize everything it returns — every loop step ends in an
-  * eager checkpoint via [[ckpt]], so the non-adaptive planning can
-  * never leak into a caller's plan; the conf restores in `finally`.
-  * Nesting is safe (each scope restores what it saw).
+  * The conf-gated AQE-off loop scope this object once carried was
+  * measured slower at every width (r15/r16, PLANS.md) and was removed.
   */
 object LoopScope {
-  private val Key = "spark.sql.adaptive.enabled"
 
-  /** The per-step eager checkpoint for loops running under [[aqeOff]]:
-    * `localCheckpoint(true)` + layout sanitation. Non-adaptive
-    * execution makes the checkpoint capture REAL physical
-    * partitioning/ordering, and a step whose tail sorts by columns the
-    * final projection drops (SMJ keys, window order columns) captures
-    * a SortOrder over pre-projection attributes — poisoning every
-    * persisted descendant's cache entry (see
-    * [[org.apache.spark.sql.graft.ColumnBridge.stripDanglingLayout]]).
-    * All scoped loops checkpoint through this helper.
-    */
+  /** `localCheckpoint(true)` + layout sanitation. All loops checkpoint
+    * through this helper. */
   def ckpt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.graft.ColumnBridge.stripDanglingLayout(df.localCheckpoint(true))
 
   /** `.loopCkpt` suffix form of [[ckpt]] for the loop bodies. */
   implicit class CkptOps(private val df: org.apache.spark.sql.DataFrame) extends AnyVal {
     def loopCkpt: org.apache.spark.sql.DataFrame = ckpt(df)
-  }
-
-  /** Session knobs: `spark.graft.loopAqeOff=true` OPTS IN to the
-    * non-adaptive scope (default false — see the measured verdict in
-    * the object doc); `spark.graft.loopShufflePartitions=<n>`
-    * additionally pins `spark.sql.shuffle.partitions` inside the
-    * scope — the loops' state tables are bounded (beam-, degree-, or
-    * k-row-bounded), so a partition count sized to the STATE is what
-    * AQE's coalescing was doing dynamically (measured: recovers about
-    * half the local[32] regression — not enough to beat AQE).
-    *
-    * SINGLE-THREADED-DRIVER ONLY (the q145 conf-gate precedent): an
-    * enabled scope mutates session-global conf for its duration, so
-    * any CONCURRENT action on the same SparkSession would plan
-    * non-adaptively too. Unreachable today — the knob is dormant,
-    * forked tests run sequentially, and structured streaming snapshots
-    * confs at query start — but a future multi-threaded driver must
-    * scope per-session or clone the session.
-    */
-  private val Enable = "spark.graft.loopAqeOff"
-  private val LoopParts = "spark.graft.loopShufflePartitions"
-  private val PartsKey = "spark.sql.shuffle.partitions"
-
-  def aqeOff[T](s: SparkSession)(body: => T): T = {
-    if (!s.conf.get(Enable, "false").toBoolean) return body
-    val prev = s.conf.getOption(Key)
-    val prevParts = s.conf.getOption(PartsKey)
-    val loopParts = s.conf.getOption(LoopParts)
-    s.conf.set(Key, "false")
-    loopParts.foreach(n => s.conf.set(PartsKey, n))
-    try body
-    finally {
-      prev match {
-        case Some(v) => s.conf.set(Key, v)
-        case None => s.conf.unset(Key)
-      }
-      if (loopParts.isDefined) prevParts match {
-        case Some(v) => s.conf.set(PartsKey, v)
-        case None => s.conf.unset(PartsKey)
-      }
-    }
   }
 }

@@ -107,8 +107,7 @@ object Pq {
     val spark = sub.sparkSession
     import spark.implicits._
     // fixed-iteration trainer over a 512-row state table, per-round
-    // eager checkpoints — AQE-off scope ([[LoopScope]] doc)
-    graft.ops.LoopScope.aqeOff(spark) {
+    // eager checkpoints
     var cent: DataFrame = sub.filter(col("vec_id") < KSub)
       .select(col("m"), col("vec_id").cast("int").as("cid"),
         col("svq").as("S"), lit(1L).as("n"))
@@ -138,7 +137,7 @@ object Pq {
         .loopCkpt)
     }
     cent
-  } }
+  }
 
   /** PQ codes: nearest code per (vec_id, subspace) — (vec_id, m, cid).
     * Map-only (the [[centsByM]] NearestCell argmin): one 1:1 broadcast

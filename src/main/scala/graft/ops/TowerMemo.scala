@@ -37,9 +37,9 @@ object TowerMemo {
     * WeakHashMap does NOT make stopped sessions collectable: the cached
     * DataFrames strongly reference their SparkSession
     * (Dataset.sparkSession), which is the map key — the classic
-    * value-refers-to-key cycle — so [[clear]] (or JVM exit) is the only
-    * reclamation path. Harmless for the one-session Bench/Verify
-    * processes this serves; loop-over-sessions tools must call clear().
+    * value-refers-to-key cycle — so JVM exit is the only reclamation
+    * path. Harmless for the one-session Bench/Verify processes this
+    * serves.
     */
   private val memo =
     new java.util.WeakHashMap[SparkSession,
@@ -146,7 +146,7 @@ object TowerMemo {
     * k = ⌈√n⌉ cells → occupancy ≈ √n → pair mass ≈ n^1.5 (the √n-cells
     * rule), and the rule survives exact-duplicate pileup too (replicas
     * multiply n, not any one cell disproportionately — the ×10
-    * StressEmbedding shape). One driver-side count() over the
+    * replica stress shape). One collected count() over the
     * checkpointed prep picks k; the DuckDB oracle computes the same k
     * as CAST(ceil(sqrt(count(*))) AS BIGINT) in-query, so the dynamic
     * cell count needs no interpolated constant (fixed SQL, any SF).
@@ -286,9 +286,4 @@ object TowerMemo {
       locals.foreach(_.unpersist(false))
       sl
     }
-
-  /** Drop all references (blocks freed by the ContextCleaner once
-    * unreachable). For loop-over-many-dirs tools, not Bench/Verify.
-    */
-  def clear(): Unit = this.synchronized { memo.clear() }
 }

@@ -1373,7 +1373,7 @@ object PipelineQueries {
   private[graft] def bpeFull(s: SparkSession, d: String)
       : (Vector[(Int, String, String, String, Long)], DataFrame) = {
     val enc = graft.ops.TowerMemo.memoize(s, d, "bpe_enc") {
-      val (m, cur) = bpeTrainOn(s, documents(s, d))
+      val (m, cur) = bpeTrainOn(documents(s, d))
       bpeMergesMemo.synchronized {
         val per = {
           val e = bpeMergesMemo.get(s)
@@ -1396,11 +1396,10 @@ object PipelineQueries {
     * tokenizer on the frozen generation and the refreshed one on the
     * full corpus, so the trainer must be corpus-parameterized.
     */
-  private def bpeTrainOn(s: SparkSession, docs: DataFrame)
-      : (Vector[(Int, String, String, String, Long)], DataFrame) =
+  private def bpeTrainOn(docs: DataFrame)
+      : (Vector[(Int, String, String, String, Long)], DataFrame) = {
     // per-round 1-row argmax collects over the persisted vocabulary —
-    // a fixed-shape driver loop (AQE-off scope, LoopScope doc)
-    graft.ops.LoopScope.aqeOff(s) {
+    // a fixed-shape Scala loop
     val enc0 = expr(
       s"array_join(transform(sequence(1, length(w)), i -> concat('$BpeSep', substring(w, i, 1), '$BpeSep')), '')")
     // the one heavy input: vocabulary aggregate over the corpus scan
@@ -1469,7 +1468,7 @@ object PipelineQueries {
   val q162BpeRefresh: Q = (s, d) => {
     import s.implicits._
     val cut = graft.Tables.rowCount(s, d, "documents") * 4 / 5
-    val oldM = bpeTrainOn(s, documents(s, d).filter(col("doc_id") < cut))._1
+    val oldM = bpeTrainOn(documents(s, d).filter(col("doc_id") < cut))._1
     val newM = bpeFull(s, d)._1
     // a tower that exhausts early truncates the audit to the common
     // rounds (the oracle's per-round cross join mirrors this)

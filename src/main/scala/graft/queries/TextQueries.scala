@@ -177,7 +177,7 @@ object TextQueries {
     * regeneration before round 12 shrank the corpus 10× (sf0.1
     * 50k → 5k docs), putting every test SF under the round-10 25k gate
     * — the sampled branch would never run on real data again. Round-12
-    * re-sweep on the regenerated corpus (SweepQ96, sf0.1 = 5k docs):
+    * re-sweep on the regenerated corpus (sf0.1 = 5k docs):
     * sampled recall tracks full within 0.0002 on the estimable deciles
     * (bar 0.15; jb=9 reads 1.0 exactly on both sides below the
     * estimability bar) and the audit drops 23.3 → 4.4 s, so the gate
@@ -926,7 +926,7 @@ object TextQueries {
     * same cap. Sized to bind only on pathology: the worst CLEAN bucket
     * at sf0.1 is 176 (one legitimate near-dup family; its pairs must
     * survive) while the 20%-identical adversarial corpus saturates a
-    * bucket at 1000+ (StressBandSkew prints both) — so 256 keeps every
+    * bucket at 1000+ (both measured) — so 256 keeps every
     * organic family and sheds only degenerate mass. At corpora where
     * EXPECTED occupancy n/2^bandBits approaches the cap, widen the band
     * keys instead (the fingerprint has the bits to spare).
@@ -981,14 +981,6 @@ object TextQueries {
   private[graft] def simhashDist(aPrefix: String, bPrefix: String): org.apache.spark.sql.Column =
     SimhashMods.indices.map(b =>
       bit_count(col(s"$aPrefix$b").bitwiseXOR(col(s"$bPrefix$b")))).reduce(_ + _).cast("int")
-
-  /** Diagnostic: worst (band, key) bucket occupancy of the q51 banding,
-    * pre-cap (StressBandSkew prints it to justify [[BandOccCap]]).
-    */
-  private[graft] def simhash64BandOccupancy(s: org.apache.spark.sql.SparkSession, d: String): Long =
-    simhashBands(simhashSig(documents(s, d)))
-      .groupBy(col("band"), col("key")).count()
-      .agg(max(col("count"))).first().getLong(0)
 
   /** q51/q56/q57's shared pair generation: verified 64-bit SimHash
     * near-dup pairs `(da < db, dist ≤ SimhashMaxDist)`, unordered.
@@ -1455,8 +1447,8 @@ object TextQueries {
     * richly live: 21/21/1170 verified pairs die and 8/8/718 are born
     * across sf0.001/0.01/0.1, including cap-flip births between
     * UNTOUCHED docs at sf0.1 (an updated doc leaving a saturated band
-    * bucket releases it — the StressR13 phenomenon, inside an
-    * oracle-able query).
+    * bucket releases it — the cap-flip seen at scale in rolling
+    * re-crawl waves, here inside an oracle-able query).
     *
     * The maintained path holds the original SIGNATURE table (the state
     * a production media pipeline persists — decode + perceptual hash is
@@ -1597,9 +1589,9 @@ object TextQueries {
     * Nothing else can change: an under-cap bucket stays under cap when
     * rows leave, and no pair can enter a bucket it was not already in.
     * Each output pair carries `born` (absent from the held pair set —
-    * a cap-release birth between UNTOUCHED docs, the StressR13
-    * phenomenon). Measured before wiring: 23/21/1179 held pairs die at
-    * sf0.001/0.01/0.1 and the born branch is LIVE at sf0.1 (453
+    * a cap-release birth between UNTOUCHED docs). Measured before
+    * wiring: 23/21/1179 held pairs die at sf0.001/0.01/0.1 and the
+    * born branch is LIVE at sf0.1 (453
     * cap-release births; 0 at the smaller SFs where the cap never
     * binds — the branch the oracle still replays everywhere).
     *
@@ -3364,7 +3356,7 @@ object TextQueries {
     // load-bearing at bench width: each hop's two references race the
     // cache inside one deep AQE DAG. The r15/r16 rule again — measure
     // a job-count lever at the bench's thread count before believing it.)
-    val beam = graft.ops.LoopScope.aqeOff(s) {
+    val beam = {
       var b = score(queries5.select(col("query_id")).crossJoin(entry))
         .loopCkpt
       for (_ <- 1 to GsHops) {
@@ -3540,7 +3532,7 @@ object TextQueries {
     // edges), per-hop eager checkpoints; each hop is one
     // collect_set + sorted-slice aggregation (the graphBeamSearch hop
     // shape — dedup and top-[[DivEfC]] in a single map-side-partial agg)
-    val abeam = graft.ops.LoopScope.aqeOff(s) {
+    val abeam = {
       var b = scoreN(newQ.select(col("nid")).crossJoin(entry)).loopCkpt
       for (_ <- 1 to GsHops) {
         val nbrs = b.select(col("nid"), col("vec_id").as("src"))
@@ -4538,7 +4530,7 @@ object TextQueries {
     * Probe shape (unchanged from the r16 factoring): slice-touching
     * pairs via the PROBE plan — slice bands against the full band
     * table, candidate mass Σ occ_slice·occ instead of the full
-    * self-join's Σ occ² (the q72/StressR13 build/probe shape); the
+    * self-join's Σ occ² (the q72 build/probe shape); the
     * occupancy cap applies over the SAME whole-universe banding the
     * full derivation uses, so the pair set is identical and the
     * full-universe oracle verifies the shortcut.

@@ -26,9 +26,10 @@ object ColumnBridge {
     *
     * `Dataset.localCheckpoint` captures the executed plan's
     * outputPartitioning/outputOrdering into the `LogicalRDD`
-    * (`LogicalRDD.fromDataset`). Under non-adaptive execution (the
-    * graft [[graft.ops.LoopScope]] scopes) a step whose physical tail
-    * is a sort-merge join or window SORTS BY columns the final
+    * (`LogicalRDD.fromDataset`). Under non-adaptive execution
+    * (`spark.sql.adaptive.enabled=false`; every
+    * [[graft.ops.LoopScope.ckpt]] passes through here) a step whose
+    * physical tail is a sort-merge join or window SORTS BY columns the final
     * projection then drops or renames — the captured SortOrder keeps
     * the PRE-projection attribute, producing a LogicalRDD whose
     * outputOrdering references attributes not in its output. That

@@ -4,9 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.LoopScope
 
-/** The round-15 loop machinery: conf-gate hygiene of
-  * [[graft.ops.LoopScope.aqeOff]] and the dangling-layout strip of
-  * [[graft.ops.LoopScope.ckpt]] /
+/** The dangling-layout strip of [[graft.ops.LoopScope.ckpt]] /
   * [[org.apache.spark.sql.graft.ColumnBridge.stripDanglingLayout]].
   *
   * The hazard under test (measured live on q90/q92/q144 before the
@@ -29,34 +27,21 @@ class LoopScopeSpec extends AnyFunSuite {
       case p => fail(s"expected a LogicalRDD, got ${p.getClass}")
     }
 
-  test("aqeOff restores the conf, including on exception, and nests") {
+  /** The hazard needs the non-adaptive planner: run `body` with AQE
+    * off, restoring the session's previous setting afterwards. */
+  private def nonAdaptive(body: => Unit): Unit = {
     val key = "spark.sql.adaptive.enabled"
-    val before = spark.conf.get(key)
-    spark.conf.set("spark.graft.loopAqeOff", "true")
-    try {
-      LoopScope.aqeOff(spark) {
-        assert(spark.conf.get(key) == "false")
-        LoopScope.aqeOff(spark) { assert(spark.conf.get(key) == "false") }
-        assert(spark.conf.get(key) == "false")
-      }
-      assert(spark.conf.get(key) == before)
-      intercept[RuntimeException] {
-        LoopScope.aqeOff(spark) { throw new RuntimeException("boom") }
-      }
-      assert(spark.conf.get(key) == before)
-    } finally spark.conf.unset("spark.graft.loopAqeOff")
-  }
-
-  test("aqeOff is a pass-through unless the session opts in") {
-    val key = "spark.sql.adaptive.enabled"
-    val before = spark.conf.get(key)
-    // default: dormant (the round-15 local[32] race verdict)
-    LoopScope.aqeOff(spark) { assert(spark.conf.get(key) == before) }
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("ckpt keeps ordering references within the output; self-consistent ordering survives") {
-    spark.conf.set("spark.graft.loopAqeOff", "true")
-    try LoopScope.aqeOff(spark) {
+    nonAdaptive {
       val a = (1L to 64L).map(i => (i % 8, i, i * 1.5)).toDF("k", "id", "v")
       val b = (1L to 64L).map(i => (i % 8, i * 2.0)).toDF("k", "w")
       // force a sort-merge join so the executed plan sorts by k, then
@@ -87,12 +72,11 @@ class LoopScopeSpec extends AnyFunSuite {
         keptC.queryExecution.analyzed.output)
       val keptOrd = orderingOf(keptC)
       assert(keptOrd.nonEmpty && keptOrd.forall(_.references.subsetOf(keptOut)))
-    } finally spark.conf.unset("spark.graft.loopAqeOff")
+    }
   }
 
   test("persisted descendants of a stripped checkpoint survive cache reuse with fresh exprIds") {
-    spark.conf.set("spark.graft.loopAqeOff", "true")
-    try LoopScope.aqeOff(spark) {
+    nonAdaptive {
       val a = (1L to 32L).map(i => (i % 4, i)).toDF("k", "id")
       val b = (1L to 32L).map(i => (i % 4, i * 3)).toDF("k", "m")
       // st's RAW checkpoint would carry the SMJ's dangling k-ordering
@@ -112,6 +96,6 @@ class LoopScopeSpec extends AnyFunSuite {
           "re-derivation did not hit the cache — the test stopped exercising withOutput")
         assert(y.count() == x.count())
       } finally x.unpersist(true); ()
-    } finally spark.conf.unset("spark.graft.loopAqeOff")
+    }
   }
 }

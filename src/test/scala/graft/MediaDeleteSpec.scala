@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   1. a pair with a dead endpoint dies,
   *   2. an untouched under-cap pair passes through born = 0,
   *   3. a death releases an over-cap bucket and BIRTHS the surviving
-  *      pair (born = 1) — the StressR13 cap-flip, deterministic here,
+  *      pair (born = 1) — the cap-flip of rolling re-crawl waves,
+  *      deterministic here,
   * and asserts the whole output equals a from-scratch recompute over
   * the survivor signatures driven through the identical core.
   */

@@ -20,18 +20,15 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("every registered query plans cartesian-free (wholesale guard)") {
-    // The curated lists below assert STRONGER properties (broadcast
+    // The curated tests below assert STRONGER properties (broadcast
     // presence, WindowGroupLimit, pruning); this guard makes the
     // baseline property — no CartesianProduct anywhere — automatic for
     // every query ever registered, so new queries are born guarded.
     // 1-row broadcast totals plan as BroadcastNestedLoopJoin (intended);
     // CartesianProduct is never intended, so no allowlist is needed.
-    for (q <- SparkEntry.queries.keys.toSeq.sorted) {
-      assert(!finalPlan(q).contains("CartesianProduct"),
-        s"$q planned a cartesian product")
-      graft.queries.releasePersisted()
-      spark.catalog.clearCache()
-    }
+    // Reads the plans of the one shared execution in QuerySweep.
+    assert(QuerySweep.cartesian.isEmpty,
+      s"planned a cartesian product: ${QuerySweep.cartesian}")
   }
 
   test("banded candidate generation never plans an all-pairs join") {
@@ -48,32 +45,6 @@ class PlanShapeSpec extends AnyFunSuite {
       val p = finalPlan(q)
       assert(!p.contains("CartesianProduct"), s"$q planned a cartesian product")
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$q planned a nested-loop join")
-      graft.queries.releasePersisted()
-      spark.catalog.clearCache()
-    }
-  }
-
-  test("pipeline aggregates never plan a cartesian product (1-row broadcast totals excepted)") {
-    // q58/q60 crossJoin a broadcast 1-row total — BroadcastNestedLoopJoin
-    // over a single row is the intended plan; CartesianProduct is not
-    for (q <- Seq("q57_corpus_funnel", "q58_vocab_prune", "q59_bigram_lift",
-        "q60_token_budget", "q61_line_dedup", "q64_seq_pack", "q65_bigram_lm",
-        "q66_source_overlap", "q67_bpe_train", "q77_tfidf_topk",
-        "q78_epoch_draw", "q84_cms_heavy", "q86_domain_affinity")) {
-      assert(!finalPlan(q).contains("CartesianProduct"), s"$q planned a cartesian product")
-      graft.queries.releasePersisted()
-      spark.catalog.clearCache()
-    }
-  }
-
-  test("tiny-side cross joins stay broadcast nested-loop, never cartesian") {
-    // q29 broadcasts 5 query vectors, q42/q76/q82 broadcast ≤16
-    // centroids — BroadcastNestedLoopJoin over a bounded build side is
-    // the intended plan; an unbroadcast CartesianProduct would be a
-    // regression
-    for (q <- Seq("q29_topk_cosine", "q42_ann_ivf", "q76_semantic_dedup",
-        "q82_balanced_sample")) {
-      assert(!finalPlan(q).contains("CartesianProduct"), s"$q planned a cartesian product")
       graft.queries.releasePersisted()
       spark.catalog.clearCache()
     }
@@ -99,7 +70,7 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  test("q106's query side broadcasts; retrieval/split/profile plans stay cartesian-free") {
+  test("q106's query side broadcasts; q107's shortlist stages stay cartesian-free") {
     // BM25's benchmark asymmetry (the q80 shape): the eval postings are
     // small and must broadcast into the corpus postings join
     val p106 = finalPlan("q106_bm25")
@@ -108,21 +79,6 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p106.contains("CartesianProduct"), "q106 planned a cartesian product")
     graft.queries.releasePersisted()
     spark.catalog.clearCache()
-    // q108's CC labelling, q109's profile melt, q110's fence join,
-    // q111's merge, q113's interval lookup, q114's weighted fold:
-    // equi-joins, bounded broadcast lookups, and single aggregates only
-    // (q112/q115 broadcast ≤20 anchors/queries — BNLJ is the q29
-    // intended plan, CartesianProduct is not)
-    // (q116's source×histogram grid and q117's per-user window are
-    // bounded; q118 rides the trained-IVF path)
-    for (q <- Seq("q108_group_split", "q109_profile", "q110_outliers",
-        "q111_incremental_merge", "q112_hard_negatives", "q113_quantile_norm",
-        "q114_effective_size", "q115_filtered_ann", "q116_drift_ks",
-        "q117_burstiness", "q118_cell_purity")) {
-      assert(!finalPlan(q).contains("CartesianProduct"), s"$q planned a cartesian product")
-      graft.queries.releasePersisted()
-      spark.catalog.clearCache()
-    }
     // q107's greedy loop localCheckpoints, which would make a guard on
     // the OUTPUT plan vacuous (it shows only the checkpoint scan) — so
     // inspect the real shortlist stages directly: the query-vs-corpus

@@ -9,7 +9,7 @@ exists to close).
         [--exclude q1,q2]   # drop named lines from the subset estimator
                             # (deliberately reworked plans skew it)
 
-Decision procedure per the round-14 GraphDecomp findings, widened in
+Decision procedure per the round-14 job-decomposition findings, widened in
 round 17 (VERDICT r16 #1) so EVERY line self-adjudicates instead of 40
 falling through to "plan-read needed":
   - masses moved >2x        -> the DATA moved; name the mass and the
@@ -67,7 +67,7 @@ MASS_STAGES = {
 }
 
 # bench lines whose wall is per-job-overhead bound at test SFs
-# (GraphDecomp r14: job counts code-fixed, jobs x overhead reconstructs
+# (r14 job decomposition: job counts code-fixed, jobs x overhead reconstructs
 # the r12/r13/r14 readings) — for these, the old wall scaled by the
 # job_overhead_us ratio is the box-expected wall
 OVERHEAD_BOUND = {
@@ -178,7 +178,7 @@ def main():
                 # regression, so it does not need adjudication
                 verdict = f"BOX or improvement (below the expected floor {lo:.1f}s{fam} — not a regression)"
             else:
-                verdict = f"REGRESSION? (above expected-box band [{lo:.1f}, {hi:.1f}]s{fam} — git log / explain / BenchOne)"
+                verdict = f"REGRESSION? (above expected-box band [{lo:.1f}, {hi:.1f}]s{fam} — git log / explain / perfbench/run.py --trace 1)"
                 unadjudicated += 1
         else:
             verdict = "no box estimators (job_overhead_us missing) — plan-read needed"
