@@ -267,10 +267,13 @@ object Bench {
     val ms = masses.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
+    // the width the lines ran at (the local[N] thread count), on both
+    // outputs like loadavg: walls compare only across equal widths
+    val width = spark.sparkContext.defaultParallelism
     val fileJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"masses":$ms,"sf":"$sfDir","loadavg":"$loadavg","failed":$failedJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"masses":$ms,"sf":"$sfDir","loadavg":"$loadavg","cpus":$width,"failed":$failedJson}"""
     val stdoutJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","loadavg":"$loadavg","failed":${failed.size}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","loadavg":"$loadavg","cpus":$width,"failed":${failed.size}}"""
     // The driver parses this JSON from stdout; round 1 failed to extract it
     // from interleaved log noise. Stop Spark FIRST (its shutdown WARNs go to
     // stderr/before us), persist a file copy, then emit the JSON as the

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.functions.DotFold
 import LoopScope.CkptOps
 
@@ -183,14 +184,14 @@ object Ivf {
     * probes touch exactly one corpus-sized table.
     */
   def buildIndex(s: SparkSession, sfDir: String, indexDir: String): Unit = {
-    val emb = prep(s.read.parquet(s"$sfDir/embeddings.parquet")).persist()
+    val emb = prep(Tables.embeddings(s, sfDir)).persist()
     // per-iteration centroid persists (each iteration's table feeds both
     // the next update's sums and its carry-forward join — invariant 6);
     // released once the index is on disk
     val iterCents = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val cent = trainCells(emb, df => { iterCents += df.persist(); df })
     cent.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val centBack = s.read.parquet(s"$indexDir/centroids")
+    val centBack = Tables.parquet(s, s"$indexDir/centroids")
     assignAll(emb, centBack)
       .write.mode("overwrite").parquet(s"$indexDir/assignments")
     iterCents.foreach(_.unpersist(false))
@@ -203,8 +204,8 @@ object Ivf {
     * from the assignments table's stored (v, nrm) payload.
     */
   def probeTopK(s: SparkSession, sfDir: String, indexDir: String, k: Int = 5): DataFrame = {
-    val cent = s.read.parquet(s"$indexDir/centroids")
-    val assigned = s.read.parquet(s"$indexDir/assignments")
+    val cent = Tables.parquet(s, s"$indexDir/centroids")
+    val assigned = Tables.parquet(s, s"$indexDir/assignments")
     val probes = probeCells(
       assigned.filter(col("vec_id") < Ivf.ProbeN)
         .select(col("vec_id").as("query_id"), col("v"), col("nrm")), cent)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.functions.DotFold
 import LoopScope.CkptOps
 
@@ -266,11 +267,11 @@ object Pq {
     * plus shortlist-sized vector fetches for the re-rank.
     */
   def buildIndex(s: SparkSession, sfDir: String, indexDir: String): Unit = {
-    val sub = subvectors(Ivf.prep(s.read.parquet(s"$sfDir/embeddings.parquet"))).persist()
+    val sub = subvectors(Ivf.prep(Tables.embeddings(s, sfDir))).persist()
     val iterCents = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val cent = trainCodebooks(sub, df => { iterCents += df.persist(); df })
     cent.write.mode("overwrite").parquet(s"$indexDir/codebooks")
-    val centBack = s.read.parquet(s"$indexDir/codebooks")
+    val centBack = Tables.parquet(s, s"$indexDir/codebooks")
     encode(sub, centBack).write.mode("overwrite").parquet(s"$indexDir/codes")
     iterCents.foreach(_.unpersist(false))
     sub.unpersist()
@@ -284,9 +285,9 @@ object Pq {
     * side of an ANN service; re-prepping 5 rows is free).
     */
   def probeTopK(s: SparkSession, sfDir: String, indexDir: String, k: Int = 5): DataFrame = {
-    val cent = s.read.parquet(s"$indexDir/codebooks")
-    val codes = s.read.parquet(s"$indexDir/codes")
-    val emb = Ivf.prep(s.read.parquet(s"$sfDir/embeddings.parquet"))
+    val cent = Tables.parquet(s, s"$indexDir/codebooks")
+    val codes = Tables.parquet(s, s"$indexDir/codes")
+    val emb = Ivf.prep(Tables.embeddings(s, sfDir))
     val qsub = subvectors(emb.filter(col("vec_id") < Ivf.ProbeN))
     rerankTopK(adcShortlist(codes, distanceTables(qsub, cent)), emb, k)
   }

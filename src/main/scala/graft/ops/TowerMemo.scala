@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Session-scoped memo of the deterministic trained ANN towers.
   *
@@ -115,7 +116,7 @@ object TowerMemo {
 
   /** [[Ivf.prep]] of the corpus embeddings. */
   def prep(s: SparkSession, d: String): DataFrame =
-    get(s, d, "prep")(Ivf.prep(s.read.parquet(s"$d/embeddings.parquet")))
+    get(s, d, "prep")(Ivf.prep(Tables.embeddings(s, d)))
 
   /** Full-corpus IVF centroid state (the q42 training tower). */
   def cent(s: SparkSession, d: String): DataFrame =

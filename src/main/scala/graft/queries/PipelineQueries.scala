@@ -234,7 +234,7 @@ object PipelineQueries {
   def materialize(s: SparkSession, d: String, outDir: String): Long = {
     survivors(s, d).write.mode("overwrite").partitionBy("lang")
       .parquet(s"$outDir/corpus")
-    s.read.parquet(s"$outDir/corpus").count()
+    graft.Tables.parquet(s, s"$outDir/corpus").count()
   }
 
   /** The [[materialize]] twin on ORC — the second columnar format this
@@ -1744,7 +1744,7 @@ object PipelineQueries {
       .sortWithinPartitions(col("shard"), col("pos"))
     ordered.write.mode("overwrite").partitionBy("shard")
       .parquet(s"$outDir/shuffled")
-    s.read.parquet(s"$outDir/shuffled").count()
+    graft.Tables.parquet(s, s"$outDir/shuffled").count()
   }
 
   /** Sketch size for [[q83KmvDistinct]] — the standard KMV accuracy

@@ -6139,7 +6139,7 @@ object TextQueries {
         () => {
           val cut = StreamingIndex.buildFrozen(s, d, stores.indexDir)
           StreamingIndex.appendBatch(stores.indexDir)(
-            s.read.parquet(s"$d/embeddings.parquet")
+            embeddings(s, d)
               .select(col("vec_id"), col("embedding"))
               .filter(col("vec_id") >= cut), 0L)
         },

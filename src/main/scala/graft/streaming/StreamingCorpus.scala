@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
 import graft.streaming.StreamingDedup.DocSig
@@ -269,12 +270,12 @@ object StreamingCorpus {
     if (dirs.isEmpty)
       return s.range(0).select(col("id").as("doc_id"),
         lit("").as("source"), lit("").as("lang"), lit("").as("text"))
-    val rows = s.read.option("basePath", s"$outDir/corpus").parquet(dirs: _*)
+    val rows = Tables.parquet(s, dirs, Some(s"$outDir/corpus"))
       .select(col("doc_id"), col("source"), col("lang"), col("text"),
         col("batch_id").cast("long").as("b"))
     val tombDirs = completeDirs(s, s"$outDir/tombs", "gen=").filter(keep)
     val alive = if (tombDirs.isEmpty) rows else {
-      val tombs = s.read.option("basePath", s"$outDir/tombs").parquet(tombDirs: _*)
+      val tombs = Tables.parquet(s, tombDirs, Some(s"$outDir/tombs"))
         .select(col("doc_id"), col("gen").cast("long").as("tgen"))
         .groupBy(col("doc_id")).agg(max(col("tgen")).as("tgen"))
       rows.join(tombs, Seq("doc_id"), "left")
@@ -401,7 +402,7 @@ object StreamingCorpus {
         new org.apache.hadoop.fs.Path(s"$outDir/corpus_compacting/_HORIZON"), true)
       try out.write(s"$horizon\n".getBytes("UTF-8")) finally out.close()
     }
-    val after = digest(s.read.parquet(newDir)
+    val after = digest(Tables.parquet(s, newDir)
       .select(col("doc_id"), col("source"), col("lang"), col("text")))
     if (before != after)
       throw new IllegalStateException(

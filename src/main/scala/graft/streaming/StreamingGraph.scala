@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** The graph-ANN index as a SERVED artifact — [[StreamingIndex]]'s
   * twin for the NSW family, completing the serving-tier parity the
@@ -134,8 +135,7 @@ object StreamingGraph {
   private def genRows(s: SparkSession, root: String, gens: Seq[Long],
       cols: Seq[String]): Option[DataFrame] =
     if (gens.isEmpty) None
-    else Some(s.read.option("basePath", root)
-      .parquet(gens.map(g => s"$root/gen=$g"): _*)
+    else Some(Tables.parquet(s, gens.map(g => s"$root/gen=$g"), Some(root))
       .select(cols.map(col): _*))
 
   private def committedTombs(s: SparkSession, indexDir: String): Option[DataFrame] =
@@ -201,7 +201,7 @@ object StreamingGraph {
     val dirs = committedMemberDirs(s, indexDir)
     val m =
       if (dirs.isEmpty) s.range(0).select(col("id").as("vec_id"))
-      else s.read.option("basePath", s"$indexDir/members").parquet(dirs: _*)
+      else Tables.parquet(s, dirs, Some(s"$indexDir/members"))
         .select(col("vec_id"))
     if (!tombsExist(s, indexDir)) m
     else m.join(tombs(s, indexDir), Seq("vec_id"), "left_anti")
@@ -234,7 +234,7 @@ object StreamingGraph {
       cols: Seq[String]): Option[DataFrame] = {
     val dirs = GenStore.completeGenDirs(s, root, Some(upTo))
     if (dirs.isEmpty) None
-    else Some(s.read.option("basePath", root).parquet(dirs: _*)
+    else Some(Tables.parquet(s, dirs, Some(root))
       .select(cols.map(col): _*))
   }
 
@@ -273,7 +273,7 @@ object StreamingGraph {
     val mDirs = committedMemberDirs(s, indexDir, Some(batchId))
     val members =
       if (mDirs.isEmpty) s.range(0).select(col("id").as("vec_id"))
-      else s.read.option("basePath", s"$indexDir/members").parquet(mDirs: _*)
+      else Tables.parquet(s, mDirs, Some(s"$indexDir/members"))
         .select(col("vec_id"))
     val corp = graft.ops.TowerMemo.prep(s, sfDir)
       .join(minus(members, "vec_id"), Seq("vec_id"), "left_semi")
@@ -352,7 +352,7 @@ object StreamingGraph {
     GenStore.writeHorizon(s, s"$indexDir/edges_compacting/_HORIZON_DELETE",
       (foldedTombs ++ GenStore.readHorizon(s, s"$indexDir/edges/_HORIZON_DELETE"))
         .foldLeft(-1L)(math.max))
-    val after = digest(s.read.parquet(newEdges))
+    val after = digest(Tables.parquet(s, newEdges))
     if (before != after)
       throw new IllegalStateException(
         s"graph compaction digest mismatch: $before before, $after read back")
@@ -369,7 +369,7 @@ object StreamingGraph {
       val mDirs = foldedEdges.map(g => s"$indexDir/members/gen=$g")
         .filter(dd => fhdfs.exists(new org.apache.hadoop.fs.Path(dd)))
       val m = if (mDirs.isEmpty) s.range(0).select(col("id").as("vec_id"))
-        else s.read.option("basePath", s"$indexDir/members").parquet(mDirs: _*)
+        else Tables.parquet(s, mDirs, Some(s"$indexDir/members"))
           .select(col("vec_id"))
       m.join(t, Seq("vec_id"), "left_anti")
         .write.mode("overwrite").parquet(s"$indexDir/members_compacting/gen=-1")

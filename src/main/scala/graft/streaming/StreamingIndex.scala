@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.ops.{Ivf, Pq}
 
 /** Streaming freshness twin of q92 (frozen-quantizer index append):
@@ -54,17 +55,17 @@ object StreamingIndex {
   def buildFrozen(s: SparkSession, sfDir: String, indexDir: String): Long = {
     val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def hold(df: DataFrame): DataFrame = { locals += df.persist(); df }
-    val emb = hold(Ivf.prep(s.read.parquet(s"$sfDir/embeddings.parquet")))
+    val emb = hold(Ivf.prep(Tables.embeddings(s, sfDir)))
     val cut = emb.count() * 4 / 5
     val old = hold(emb.filter(col("vec_id") < cut))
     val cent = Ivf.trainCells(old, hold)
     cent.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val centB = s.read.parquet(s"$indexDir/centroids")
+    val centB = Tables.parquet(s, s"$indexDir/centroids")
     val oldAsg = hold(Ivf.assignAll(old, centB))
     val rsub = hold(Pq.subvectors(Pq.residuals(oldAsg, centB)))
     val cb = Pq.trainCodebooks(rsub, hold)
     cb.write.mode("overwrite").parquet(s"$indexDir/codebooks")
-    val cbB = s.read.parquet(s"$indexDir/codebooks")
+    val cbB = Tables.parquet(s, s"$indexDir/codebooks")
     Pq.encode(rsub, cbB)
       .join(oldAsg.select(col("vec_id"), col("cell")), Seq("vec_id"))
       .write.mode("overwrite").parquet(s"$indexDir/codes/gen=-1")
@@ -92,8 +93,8 @@ object StreamingIndex {
     // (round-14 review + the spec's independent-sequence lesson).
     if (batchId <= GenStore.readHorizon(
         s, s"$indexDir/codes/_HORIZON_APPEND").getOrElse(-1L)) return
-    val cent = s.read.parquet(s"$indexDir/centroids")
-    val cb = s.read.parquet(s"$indexDir/codebooks")
+    val cent = Tables.parquet(s, s"$indexDir/centroids")
+    val cb = Tables.parquet(s, s"$indexDir/codebooks")
     val asg = Ivf.assignAll(Ivf.prep(batch), cent)
     Pq.encode(Pq.subvectors(Pq.residuals(asg, cent)), cb)
       .join(asg.select(col("vec_id"), col("cell")), Seq("vec_id"))
@@ -169,8 +170,8 @@ object StreamingIndex {
       s.range(0).select(col("id").as("vec_id"),
         col("id").cast("int").as("m"), col("id").cast("int").as("cid"),
         col("id").cast("int").as("cell"))
-    else s.read.option("basePath", s"$indexDir/codes")
-      .parquet(gens.map(g => s"$indexDir/codes/gen=$g"): _*)
+    else Tables.parquet(s, gens.map(g => s"$indexDir/codes/gen=$g"),
+      Some(s"$indexDir/codes"))
       .select(col("vec_id"), col("m"), col("cid"), col("cell"))
 
   /** Distinct tombstoned ids over an explicit committed-generation
@@ -180,8 +181,8 @@ object StreamingIndex {
   private def tombsOver(s: SparkSession, indexDir: String,
       gens: Seq[Long]): Option[DataFrame] =
     if (gens.isEmpty) None
-    else Some(s.read.option("basePath", s"$indexDir/tombs")
-      .parquet(gens.map(g => s"$indexDir/tombs/gen=$g"): _*)
+    else Some(Tables.parquet(s, gens.map(g => s"$indexDir/tombs/gen=$g"),
+      Some(s"$indexDir/tombs"))
       .select(col("vec_id")).distinct())
 
   private def minusTombs(codes: DataFrame, t: Option[DataFrame]): DataFrame =
@@ -313,7 +314,7 @@ object StreamingIndex {
     GenStore.writeHorizon(s, s"$indexDir/codes_compacting/_HORIZON_DELETE",
       (foldedTombs ++ GenStore.readHorizon(s, s"$indexDir/codes/_HORIZON_DELETE"))
         .foldLeft(-1L)(math.max))
-    val after = digest(s.read.parquet(newDir))
+    val after = digest(Tables.parquet(s, newDir))
     if (before != after)
       throw new IllegalStateException(
         s"compaction digest mismatch: $before before, $after read back")
@@ -417,9 +418,9 @@ object StreamingIndex {
     */
   private def searchOver(s: SparkSession, sfDir: String, codes: DataFrame,
       indexDir: String, k: Int): DataFrame = {
-    val cent = s.read.parquet(s"$indexDir/centroids")
-    val cb = s.read.parquet(s"$indexDir/codebooks")
-    val emb = Ivf.prep(s.read.parquet(s"$sfDir/embeddings.parquet"))
+    val cent = Tables.parquet(s, s"$indexDir/centroids")
+    val cb = Tables.parquet(s, s"$indexDir/codebooks")
+    val emb = Ivf.prep(Tables.embeddings(s, sfDir))
     val cut = broadcast(emb.agg(expr("count(1) * 4 div 5").as("cut")))
     val probes = Ivf.probeCells(
       emb.filter(col("vec_id") < Ivf.ProbeN).withColumnRenamed("vec_id", "query_id"), cent)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Rolling duplicate-group labels at INGEST — the serving-side
   * counterpart of the batch q56 components and the maintenance twin of
@@ -109,7 +110,7 @@ object StreamingLabels {
         .exists(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith(".")))
     if (readable.isEmpty) emptyLabels(s)
-    else s.read.parquet(readable: _*).select(col("id"), col("lbl"))
+    else Tables.parquet(s, readable).select(col("id"), col("lbl"))
   }
 
   /** The current label table `(id, lbl)` — per bucket, the newest
@@ -152,7 +153,7 @@ object StreamingLabels {
     val tombGens = completeGenDirs(s, labelDir, "tombs", before)
     if (tombGens.isEmpty)
       s.range(0).select(col("id"), col("id").as("tgen"))
-    else s.read.option("basePath", s"$labelDir/tombs").parquet(tombGens: _*)
+    else Tables.parquet(s, tombGens, Some(s"$labelDir/tombs"))
       .select(col("id"), col("gen").cast("long").as("tgen"))
       .groupBy(col("id")).agg(max(col("tgen")).as("tgen"))
   }
@@ -170,7 +171,7 @@ object StreamingLabels {
     val tombs = latestTombs(s, labelDir, before)
     if (revGens.isEmpty) tombs.select(col("id"))
     else {
-      val rev = s.read.option("basePath", s"$labelDir/revives").parquet(revGens: _*)
+      val rev = Tables.parquet(s, revGens, Some(s"$labelDir/revives"))
         .select(col("id"), col("gen").cast("long").as("rgen"))
         .groupBy(col("id")).agg(max(col("rgen")).as("rgen"))
       tombs.join(rev, Seq("id"), "left")
@@ -191,7 +192,7 @@ object StreamingLabels {
     // tombstone naming it); the strictness is what lets an update wave
     // co-commit tombstones (killing the old content's pairs) and the
     // re-crawled content's pairs at ONE batchId.
-    val pairs = s.read.option("basePath", s"$labelDir/pairlog").parquet(logGens: _*)
+    val pairs = Tables.parquet(s, logGens, Some(s"$labelDir/pairlog"))
       .select(col("da"), col("db"), col("gen").cast("long").as("pgen"))
     val tombs = latestTombs(s, labelDir, before)
     pairs
@@ -292,7 +293,7 @@ object StreamingLabels {
       val out = f.create(path(labelDir, "pairlog_compacting", "_HORIZON"), true)
       try out.write(s"$horizon\n".getBytes("UTF-8")) finally out.close()
     }
-    val after = digest(s.read.parquet(newDir))
+    val after = digest(Tables.parquet(s, newDir))
     if (before != after)
       throw new IllegalStateException(
         s"pair-log compaction digest mismatch: $before before, $after read back")

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Streaming maintenance of the q155 admission-LM state — the service
   * twin q156 proved the fold law for (VERDICT r13 #4: every other
@@ -141,15 +142,15 @@ object StreamingLm {
     val cb =
       if (gens.isEmpty)
         s.range(0).select(lit("").as("ctx"), lit("").as("w"), col("id").as("cb"))
-      else s.read.parquet(dirs("cb"): _*).groupBy(col("ctx"), col("w"))
+      else Tables.parquet(s, dirs("cb")).groupBy(col("ctx"), col("w"))
         .agg(sum(col("cb")).as("cb"))
     val cu =
       if (gens.isEmpty) s.range(0).select(lit("").as("ctx"), col("id").as("cu"))
-      else s.read.parquet(dirs("cu"): _*).groupBy(col("ctx"))
+      else Tables.parquet(s, dirs("cu")).groupBy(col("ctx"))
         .agg(sum(col("cu")).as("cu"))
     val vocab =
       if (gens.isEmpty) s.range(0).select(lit("").as("w"))
-      else s.read.parquet(dirs("vocab"): _*).select(col("w")).distinct()
+      else Tables.parquet(s, dirs("vocab")).select(col("w")).distinct()
     (cb, cu, vocab)
   }
 
@@ -236,8 +237,8 @@ object StreamingLm {
     GenStore.writeHorizon(s, s"$next/_HORIZON",
       (gens ++ compactionHorizon(s, lmDir)).foldLeft(-1L)(math.max))
     s.catalog.refreshByPath(next)
-    val backMb = mass(s.read.parquet(s"$next/gen=-1/cb"), "cb")
-    val backNv = s.read.parquet(s"$next/gen=-1/vocab").count()
+    val backMb = mass(Tables.parquet(s, s"$next/gen=-1/cb"), "cb")
+    val backNv = Tables.parquet(s, s"$next/gen=-1/vocab").count()
     if (backMb != mb || backNv != nv)
       throw new IllegalStateException(
         s"LM compaction digest mismatch: mass $mb->$backMb vocab $nv->$backNv")
