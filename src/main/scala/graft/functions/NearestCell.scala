@@ -54,11 +54,36 @@ case class NearestCell(left: Expression, right: Expression) extends BinaryExpres
   override def prettyName: String = "graft_nearest_cell"
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
     val cs = b.asInstanceOf[ArrayData]
+    if (cs.numElements() == 0) null else NearestCell.argmin(a.asInstanceOf[ArrayData], cs)
+  }
+
+  // the generated code calls the same argmin: a row holding many
+  // NearestCells (one per PQ subspace) stays a small method the JIT
+  // compiles, where inlined loops would exceed its 8 KB method limit
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""
+         |if ($b.numElements() == 0) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = graft.functions.NearestCell$$.MODULE$$.argmin($a, $b);
+         |}
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): NearestCell =
+    copy(left = newLeft, right = newRight)
+}
+
+object NearestCell {
+  def apply(v: Column, cents: Column): Column =
+    ColumnBridge.column(NearestCell(ColumnBridge.expression(v), ColumnBridge.expression(cents)))
+
+  /** The cid of the centroid nearest to `v` in a non-empty `cs`. */
+  def argmin(v: ArrayData, cs: ArrayData): Int = {
     val n = v.numElements()
     val k = cs.numElements()
-    if (k == 0) return null
     var dvv = 0.0
     var i = 0
     while (i < n) { val x = v.getDouble(i); dvv += x * x; i += 1 }
@@ -91,68 +116,4 @@ case class NearestCell(left: Expression, right: Expression) extends BinaryExpres
     }
     bestCid
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val m = ctx.freshName("m")
-      val dvv = ctx.freshName("dvv")
-      val dvc = ctx.freshName("dvc")
-      val dcc = ctx.freshName("dcc")
-      val d2 = ctx.freshName("d2")
-      val best = ctx.freshName("best")
-      val bestCid = ctx.freshName("bestCid")
-      val found = ctx.freshName("found")
-      val st = ctx.freshName("st")
-      val cv = ctx.freshName("cv")
-      val cval = ctx.freshName("cval")
-      s"""
-         |int $n = $a.numElements();
-         |int $k = $b.numElements();
-         |if ($k == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dvv = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $cval = $a.getDouble($i);
-         |    $dvv += $cval * $cval;
-         |  }
-         |  boolean $found = false;
-         |  double $best = 0.0;
-         |  int $bestCid = 0;
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    org.apache.spark.sql.catalyst.InternalRow $st = $b.getStruct($j, 2);
-         |    org.apache.spark.sql.catalyst.util.ArrayData $cv = $st.getArray(1);
-         |    int $m = java.lang.Math.min($n, $cv.numElements());
-         |    double $dvc = 0.0;
-         |    for (int $i = 0; $i < $m; $i++) {
-         |      $dvc += $a.getDouble($i) * $cv.getDouble($i);
-         |    }
-         |    double $dcc = 0.0;
-         |    for (int $i = 0; $i < $cv.numElements(); $i++) {
-         |      double $cval = $cv.getDouble($i);
-         |      $dcc += $cval * $cval;
-         |    }
-         |    double $d2 = $dvv - 2.0 * $dvc + $dcc;
-         |    if (!$found || $d2 < $best ||
-         |        (java.lang.Double.isNaN($best) && !java.lang.Double.isNaN($d2))) {
-         |      $found = true; $best = $d2; $bestCid = $st.getInt(0);
-         |    }
-         |  }
-         |  ${ev.value} = $bestCid;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): NearestCell =
-    copy(left = newLeft, right = newRight)
-}
-
-object NearestCell {
-  def apply(v: Column, cents: Column): Column =
-    ColumnBridge.column(NearestCell(ColumnBridge.expression(v), ColumnBridge.expression(cents)))
 }

@@ -1,29 +1,33 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.DotFold
-import LoopScope.CkptOps
+import graft.functions.{DotFold, NearestCell}
 
 /** Trained-IVF ANN index: integer-quantized Lloyd's training, cell
-  * assignment, multi-probe search. q42 composes these pieces IN-PLAN
-  * (training embedded in the query DAG so the DuckDB oracle can replay
-  * it bit-exactly); [[buildIndex]]/[[probeTopK]] compose the same
-  * pieces the way a 100 TB deployment would — train ONCE, persist the
-  * centroid and assignment tables as parquet, and serve queries from a
-  * probe-only plan whose explain() contains no training pass at all.
-  * Because training quantizes to integers (see [[K]] doc), the
-  * persisted (S, n) longs round-trip parquet losslessly and the
-  * probe-only top-k matches the in-plan q42 rows bit-for-bit
+  * assignment, multi-probe search. q42 composes these pieces over the
+  * session's held tower ([[TowerMemo]]); [[buildIndex]]/[[probeTopK]]
+  * compose the same pieces the way a 100 TB deployment would — train
+  * ONCE, persist the centroid and assignment tables as parquet, and
+  * serve queries from a probe-only plan whose explain() contains no
+  * training pass at all. Because training quantizes to integers (see
+  * [[K]] doc), the persisted (S, n) longs round-trip parquet losslessly
+  * and the probe-only top-k matches q42's rows bit-for-bit
   * (IvfRecallSpec proves it).
   *
-  * Shapes: every fact-table pass is MAP-ONLY — the centroid table
-  * broadcasts as one array row and [[graft.functions.NearestCell]]
-  * computes the argmin per vector in a single codegen loop (no n·k
-  * intermediate rows, no argmin shuffle, no window); the only windows
-  * run over query×[[K]] and candidate rows.
+  * Driver-held state: a trained quantizer is k rows of (cid, S, n) —
+  * k × dim longs, bounded by k and never by the corpus — so the
+  * trainers keep it on the driver ([[trainCells]], capped at
+  * [[MaxCells]]) and return it as a local frame. Operators whose
+  * centroid side is such a state ([[assign]], [[probes]], the Lloyd
+  * folds) inline it as a literal: the pass is map-only and needs no
+  * exchange job. [[assignAll]]/[[probeCells]] take any centroid frame
+  * (a persisted index table) and join it as a broadcast. Either way
+  * [[graft.functions.NearestCell]] computes the argmin per vector in
+  * one loop: no n·k intermediate rows, no argmin shuffle, no window;
+  * the only window ranks query × cell rows in [[probeCells]].
   */
 object Ivf {
 
@@ -39,6 +43,15 @@ object Ivf {
   val Iters = 2
   val Probes = 2
 
+  /** The most cells a trainer holds on the driver. The √n edge
+    * quantizer's k grows with the corpus (k = 1024 at n ≈ 1M vectors);
+    * above the cap [[trainCells]] throws before any job runs. The state
+    * is k × dim longs on the driver and its centroids ride in every
+    * assignment task as a literal: 1024 × 64 doubles is 512 KiB, under
+    * Spark's 1 MiB large-task-binary warning.
+    */
+  val MaxCells = 1024
+
   /** THE standard probe-set size: every ANN query/serving/audit draws
     * its query vectors as `vec_id < ProbeN` (round-17, r16 ADVICE:
     * q171's exact audit hardcoded the 5 separately from the memoized
@@ -53,109 +66,152 @@ object Ivf {
   def prep(raw: DataFrame): DataFrame =
     raw.select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("vq", transform(col("v"), x => floor(x * lit(1000000.0))))
+      .withColumn("vq", quantize(col("v")))
       .withColumn("nrm", sqrt(DotFold(col("v"), col("v"))))
 
-  /** Centroid table (cid, S, n) → (cid, cv) double centroids. */
-  private def centv(c: DataFrame): DataFrame = c.select(col("cid"),
-    transform(col("S"), q => q.cast("double") / (lit(1000000.0) * col("n"))).as("cv"))
+  /** floor(x·10⁶) per component: the integers Lloyd's sums. */
+  private[ops] def quantize(v: Column): Column =
+    transform(v, x => floor(x * lit(1000000.0)))
 
-  /** The whole centroid table as ONE row `cents:
-    * array<struct<cid, cv>>`, cid-ascending (array_sort on a struct
-    * array orders by the first field) — the broadcast operand of the
-    * [[graft.functions.NearestCell]] map-only argmin.
+  /** The double centroid of an integer state row: CAST(S AS DOUBLE) /
+    * (10⁶·n) per component, the one expression both engines use.
+    */
+  private[ops] def centroid(s: Column, n: Column): Column =
+    transform(s, q => q.cast("double") / (lit(1000000.0) * n))
+
+  /** Squared L2 distance |a|² − 2a·b + |b|² in [[DotFold]]s — the d2
+    * that NearestCell replays and the oracle computes.
+    */
+  private[ops] def d2(a: Column, b: Column): Column =
+    DotFold(a, a) - lit(2.0) * DotFold(a, b) + DotFold(b, b)
+
+  /** Centroid table (cid, S, n) → (cid, cv) double centroids. */
+  private def centv(c: DataFrame): DataFrame =
+    c.select(col("cid"), centroid(col("S"), col("n")).as("cv"))
+
+  /** One cell of a centroid operand (the struct NearestCell reads). */
+  private[ops] case class Cell(cid: Int, cv: Seq[Double])
+
+  /** A state frame (cid, S, n) as NearestCell's operand: a literal
+    * `array<struct<cid, cv>>` in cid order. The [[centroid]] projection
+    * of a local frame evaluates on the driver without a job.
+    */
+  private[ops] def centsLit(cent: DataFrame): Column =
+    typedLit(centv(cent).collect()
+      .map(r => Cell(r.getInt(0), r.getSeq[Double](1))).sortBy(_.cid).toSeq)
+
+  /** A centroid frame as ONE row `cents: array<struct<cid, cv>>`,
+    * cid-ascending (array_sort on a struct array orders by the first
+    * field) — the broadcast operand of [[assignAll]].
     */
   private def centsRow(c: DataFrame): DataFrame =
     centv(c).agg(array_sort(collect_list(struct(col("cid"), col("cv")))).as("cents"))
 
-  /** Squared distance of every base row to every centroid (broadcast). */
-  private def withD2(base: DataFrame, c: DataFrame): DataFrame =
-    base.crossJoin(broadcast(centv(c)))
-      .withColumn("d2", DotFold(col("v"), col("v"))
-        - lit(2.0) * DotFold(col("v"), col("cv")) + DotFold(col("cv"), col("cv")))
+  /** The [[Probes]] cells nearest to `v`, by (d2, cid): array_sort
+    * orders the (d2, cid) structs as [[probeCells]]' window (and the
+    * oracle's row_number) orders its rows, so it selects the same cells
+    * without a shuffle.
+    */
+  private def nearestCells(v: Column, cents: Column): Column =
+    transform(
+      slice(array_sort(transform(cents, c =>
+        struct(d2(v, c.getField("cv")).as("d2"), c.getField("cid").as("cid")))), 1, Probes),
+      c => c.getField("cid"))
 
   /** [[Iters]] Lloyd iterations from the first `k` vectors by id
-    * (default [[K]]); returns the integer centroid state
-    * (cid, S: array<long>, n). `k` is a plain Int so callers that scale
-    * the cell count with corpus size (the √n-cells rule — see
-    * [[graft.ops.TowerMemo.edgeCent]]) pay one driver-side count and
-    * keep the training plan itself unchanged.
+    * (default [[K]], at most [[MaxCells]]); returns the integer
+    * centroid state (cid, S: array<long>, n) as a local frame. `k` is
+    * a plain Int so callers that scale the cell count with corpus size
+    * (the √n-cells rule — see [[graft.ops.TowerMemo.edgeCent]]) pick it
+    * on the driver.
+    *
+    * The state lives on the driver: the seed is one collect of ≤ k
+    * rows, and each iteration is one map-only job — NearestCell against
+    * the state inlined as a literal, then [[lloydStep]]'s per-partition
+    * long sums merged on the driver. No checkpoint, no lineage: the
+    * returned frame is the k rows themselves.
     */
-  def trainCells(emb: DataFrame, track: DataFrame => DataFrame = identity,
-      k: Int = K): DataFrame = {
+  def trainCells(emb: DataFrame, k: Int = K): DataFrame = {
+    require(k <= MaxCells, s"trainCells: $k cells exceed the driver-held cap of $MaxCells")
     val spark = emb.sparkSession
     import spark.implicits._
-    // fixed [[Iters]]-step unrolled trainer with per-iteration eager
-    // checkpoints over a k-row state table: the assign pass is map-only
-    // (broadcast NearestCell) and the update join is k-row
-    var cent: DataFrame = emb.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("int").as("cid"), col("vq").as("S"), lit(1L).as("n"))
-    for (_ <- 1 to Iters) {
-      // map-only argmin ([[graft.functions.NearestCell]] against the
-      // 1-row broadcast centroid array): the relational
-      // crossJoin → min(struct(d2, cid)) form materializes n·k
-      // intermediate rows whose payload is the vector arrays — with
-      // the √n-cell edge quantizer that is n^1.5 rows of ~0.5 KB each
-      // and it dominated the build at stress scale (measured round 9:
-      // the ×10 q135 stress point went 32.8 s → 7.0 s across this
-      // rewrite, and the ×10/×4 ratio is now 1.4×).
-      // Same bits by construction: NearestCell replays the exact
-      // DotFold d2 expression and the (d2, cid) tie order.
-      val asg = emb.select(col("vec_id"), col("v"), col("vq"))
-        .crossJoin(broadcast(centsRow(cent)))
-        .select(graft.functions.NearestCell(col("v"), col("cents")).as("cid"),
-          col("vq"))
-      // one typed-aggregator pass (order-independent long sums — the
-      // DuckDB oracle's unnest+sum grouping produces identical values)
-      val sums = asg.as[(Int, Seq[Long])]
-        .groupByKey(_._1).mapValues(_._2)
-        .agg(Aggregators.LongVecSum.toColumn)
-        .toDF("cid", "sn")
-        .select(col("cid"), col("sn._1").as("S"), col("sn._2").as("n"))
-      // cells that attracted no vectors keep their previous (S, n).
-      // localCheckpoint truncates the lineage each round — without it
-      // every downstream consumer's logical plan embeds the whole
-      // training tower (multiplied per iteration by this self-join),
-      // and in stacked towers like IVFADC the PLANNING cost dwarfs the
-      // compute (measured: q91's 5k-row stages took seconds each on
-      // 4 MiB task binaries before; the 16-row checkpoint is free)
-      // track() wraps the CHECKPOINTED frame — safe because loopCkpt
-      // strips dangling layout claims before the persist can cache
-      // them (the round-15 InMemoryRelation.withOutput hazard: under
-      // non-adaptive execution the update join plans as an SMJ whose
-      // sort ordering the checkpoint would capture against a
-      // pre-projection attribute), and persisting the scan of
-      // already-materialized checkpoint blocks is nearly free. No
-      // broadcast hint on the k-row side: forcing it routed the
-      // corpus-wide sums aggregate through a broadcast-collect every
-      // iteration (measured ~+1 s per tower build) — AQE already
-      // makes the right call at runtime.
-      cent = track((cent.as("p")
-          .join(sums.as("u"), col("p.cid") === col("u.cid"), "left")
-          .select(col("p.cid").as("cid"), coalesce(col("u.S"), col("p.S")).as("S"),
-            coalesce(col("u.n"), col("p.n")).as("n")))
-        .loopCkpt)
-    }
-    cent
+    var state = emb.filter(col("vec_id") < k)
+      .select(col("vec_id").cast("int"), col("vq")).as[(Int, Array[Long])].collect()
+      .map { case (cid, vq) => cid.toLong -> (vq, 1L) }.toMap
+    def frame = state.toSeq.sortBy(_._1)
+      .map { case (cid, (s, n)) => (cid.toInt, s, n) }.toDF("cid", "S", "n")
+    for (_ <- 1 to Iters if state.nonEmpty)
+      state = lloydStep(state,
+        emb.select(array(NearestCell(col("v"), centsLit(frame))), col("vq")))
+    frame
   }
 
-  /** Nearest trained cell for every vector: (vec_id, cell, v, nrm).
-    * Map-only ([[trainCells]]'s NearestCell argmin): one pass, no
-    * intermediate n·k rows, no shuffle.
+  /** One Lloyd update of a driver-held state. `asg` rows are
+    * (codes: array<int>, vq: array<long>): code m of a row is the cell
+    * of vq's m-th slice (of vq.length / codes.length components), and
+    * the state key is (m << 32) | cell — a single code for an IVF cell,
+    * one per subspace for a PQ codebook. Each partition folds its rows
+    * into per-key long sums with [[Aggregators.LongVecSum]]'s
+    * arithmetic (order-independent), the driver merges the partials —
+    * one map-only job. Keys that attracted no rows keep their previous
+    * (S, n).
+    */
+  private[ops] def lloydStep(state: Map[Long, (Array[Long], Long)], asg: DataFrame)
+      : Map[Long, (Array[Long], Long)] = {
+    val spark = asg.sparkSession
+    import spark.implicits._
+    val sum = Aggregators.LongVecSum
+    val sums = asg.as[(Array[Int], Array[Long])]
+      .mapPartitions { rows =>
+        val acc = scala.collection.mutable.HashMap.empty[Long, (Array[Long], Long)]
+        rows.foreach { case (codes, vq) =>
+          val w = vq.length / codes.length
+          for (m <- codes.indices) {
+            val key = (m.toLong << 32) | codes(m)
+            acc(key) = sum.reduce(acc.getOrElse(key, sum.zero), vq.slice(m * w, m * w + w))
+          }
+        }
+        acc.iterator.map { case (key, (s, n)) => (key, s, n) }
+      }
+      .collect()
+      .groupMapReduce(_._1)(p => (p._2, p._3))(sum.merge)
+    state.map { case (key, old) => key -> sums.getOrElse(key, old) }
+  }
+
+  /** Nearest cell for every vector against a driver-held state (a
+    * trained local frame): (vec_id, cell, v, nrm), map-only, with the
+    * centroids inlined as a literal.
+    */
+  def assign(emb: DataFrame, cent: DataFrame): DataFrame =
+    emb.select(col("vec_id"), NearestCell(col("v"), centsLit(cent)).as("cell"),
+      col("v"), col("nrm"))
+
+  /** The [[Probes]] nearest cells per query vector against a
+    * driver-held state: (query_id, cell, qv, qnrm), map-only.
+    */
+  def probes(queries: DataFrame, cent: DataFrame): DataFrame =
+    queries.select(col("query_id"), explode(nearestCells(col("v"), centsLit(cent))).as("cell"),
+      col("v").as("qv"), col("nrm").as("qnrm"))
+
+  /** Nearest cell for every vector against a centroid frame read from
+    * anywhere (a persisted index table): (vec_id, cell, v, nrm). The
+    * frame joins as a broadcast one-row operand, so the pass stays
+    * map-only.
     */
   def assignAll(emb: DataFrame, cent: DataFrame): DataFrame =
     emb.select(col("vec_id"), col("v"), col("nrm"))
       .crossJoin(broadcast(centsRow(cent)))
-      .select(col("vec_id"),
-        graft.functions.NearestCell(col("v"), col("cents")).as("cell"),
+      .select(col("vec_id"), NearestCell(col("v"), col("cents")).as("cell"),
         col("v"), col("nrm"))
 
-  /** The [[Probes]] nearest cells per query vector:
-    * (query_id, cell, qv, qnrm).
+  /** The [[Probes]] nearest cells per query vector against a centroid
+    * frame read from anywhere: (query_id, cell, qv, qnrm). The
+    * centroids broadcast; a window over query × cell rows ranks them.
     */
   def probeCells(queries: DataFrame, cent: DataFrame): DataFrame = {
     val wq = Window.partitionBy(col("query_id")).orderBy(col("d2"), col("cid"))
-    withD2(queries, cent)
+    queries.crossJoin(broadcast(centv(cent)))
+      .withColumn("d2", d2(col("v"), col("cv")))
       .withColumn("crank", row_number().over(wq))
       .filter(col("crank") <= Probes)
       .select(col("query_id"), col("cid").as("cell"), col("v").as("qv"),
@@ -185,16 +241,10 @@ object Ivf {
     */
   def buildIndex(s: SparkSession, sfDir: String, indexDir: String): Unit = {
     val emb = prep(Tables.embeddings(s, sfDir)).persist()
-    // per-iteration centroid persists (each iteration's table feeds both
-    // the next update's sums and its carry-forward join — invariant 6);
-    // released once the index is on disk
-    val iterCents = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val cent = trainCells(emb, df => { iterCents += df.persist(); df })
-    cent.write.mode("overwrite").parquet(s"$indexDir/centroids")
+    trainCells(emb).write.mode("overwrite").parquet(s"$indexDir/centroids")
     val centBack = Tables.parquet(s, s"$indexDir/centroids")
     assignAll(emb, centBack)
       .write.mode("overwrite").parquet(s"$indexDir/assignments")
-    iterCents.foreach(_.unpersist(false))
     emb.unpersist()
   }
 

@@ -1,7 +1,8 @@
 package graft.ops
 
 /** The per-step eager checkpoint of the FIXED-SHAPE unrolled loops (beam
-  * hops, heuristic-2 prune steps, Lloyd iterations, CC rounds).
+  * hops, heuristic-2 prune steps, CC rounds). The Lloyd trainers hold
+  * their k-row state on the driver and need none.
   *
   * [[ckpt]] exists because a checkpoint taken under non-adaptive
   * execution captures REAL physical partitioning/ordering, and a step

@@ -1,11 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.DotFold
-import LoopScope.CkptOps
+import graft.functions.NearestCell
 
 /** Product-quantization ANN (Jégou, Douze, Schmid, "Product
   * Quantization for Nearest Neighbor Search", TPAMI 2011): split each
@@ -30,14 +29,16 @@ import LoopScope.CkptOps
   * as in the paper; here each is exercised separately against the
   * same oracle gate.
   *
-  * Plan shapes: training broadcasts the codebook as [[M]] array rows
-  * and argmins MAP-ONLY per subvector row
-  * ([[graft.functions.NearestCell]] — no ×[[KSub]] fan-out, no argmin
-  * shuffle, never a window over n·k rows); encoding is the same
-  * argmin; serving joins
-  * the codes table to a broadcast queries×[[M]]×[[KSub]] distance
-  * table, hash-aggregates the per-candidate sum, and re-ranks the
-  * shortlist exactly. No driver collect anywhere.
+  * Plan shapes: the codebook is [[M]] × [[KSub]] integer state rows
+  * held on the driver ([[trainCodebooks]]); training and encoding argmin
+  * MAP-ONLY per subvector ([[graft.functions.NearestCell]] against the
+  * subspace's codebook, inlined as a literal — no ×[[KSub]] fan-out, no
+  * argmin shuffle, never a window over n·k rows); serving joins the
+  * codes table to a broadcast queries×[[M]]×[[KSub]] distance table,
+  * hash-aggregates the per-candidate sum, and re-ranks the shortlist
+  * exactly. The only driver collects are of that bounded state: the
+  * trainer's seed and per-iteration sums, and a codebook or centroid
+  * table read to become a literal.
   */
 object Pq {
 
@@ -65,89 +66,78 @@ object Pq {
   def subvectors(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"),
         explode(array((0 until M).map(m => struct(lit(m).as("m"),
-          slice(col("v"), m * SubDim + 1, SubDim).as("sv"),
-          slice(col("vq"), m * SubDim + 1, SubDim).as("svq"))): _*)).as("s"))
+          slot(col("v"), m).as("sv"), slot(col("vq"), m).as("svq"))): _*)).as("s"))
       .select(col("vec_id"), col("s.m").as("m"), col("s.sv").as("sv"),
         col("s.svq").as("svq"))
 
   /** Integer codebook state (m, cid, S, n) → (m, cid, cv) doubles —
     * the [[Ivf]] centroid expression, verbatim, per subspace.
     */
-  private def centv(c: DataFrame): DataFrame = c.select(col("m"), col("cid"),
-    transform(col("S"), q => q.cast("double") / (lit(1000000.0) * col("n"))).as("cv"))
+  private def centv(c: DataFrame): DataFrame =
+    c.select(col("m"), col("cid"), Ivf.centroid(col("S"), col("n")).as("cv"))
 
   /** Squared distance of every subvector row to every code of its
-    * subspace (the codebook broadcasts — 64 rows total). Used where
-    * the FULL distance table is the product (ADC query tables); the
-    * corpus-grain argmins use [[centsByM]] + NearestCell instead.
+    * subspace (the codebook broadcasts — 512 rows total) — the
+    * [[distanceTables]] join, which keeps a persisted codebook table in
+    * the serving plan; the corpus-grain argmins use [[bookLit]] +
+    * NearestCell instead.
     */
   private def withD2(base: DataFrame, c: DataFrame): DataFrame =
     base.join(broadcast(centv(c)), Seq("m"))
-      .withColumn("d2", DotFold(col("sv"), col("sv"))
-        - lit(2.0) * DotFold(col("sv"), col("cv")) + DotFold(col("cv"), col("cv")))
+      .withColumn("d2", Ivf.d2(col("sv"), col("cv")))
 
-  /** Per-subspace codebook as ONE array row each (m, cents) —
-    * cid-ascending (array_sort orders by the leading struct field),
-    * the broadcast-hash-join operand of the
-    * [[graft.functions.NearestCell]] map-only argmin: the corpus-grain
-    * encode/train passes join 1:1 on `m` instead of fanning every
-    * subvector row out ×[[KSub]] through the relational min-struct
-    * (same bits — NearestCell replays the withD2 expression and the
-    * (d2, cid) tie order; the [[graft.ops.Ivf]] round-9 lesson applied
-    * to the subspace argmin).
+  /** A codebook state as a literal indexed by subspace: element m is
+    * subspace m's codes as `array<struct<cid, cv>>`, cid-ascending —
+    * the NearestCell operand of the corpus-grain argmins (the same bits
+    * as a per-subspace broadcast join: NearestCell replays the d2
+    * expression and the (d2, cid) tie order).
     */
-  private def centsByM(c: DataFrame): DataFrame =
-    centv(c).groupBy(col("m"))
-      .agg(array_sort(collect_list(struct(col("cid"), col("cv")))).as("cents"))
-
-  /** [[Iters]] Lloyd rounds per subspace, all subspaces trained in ONE
-    * plan (the subspace id is just another grouping key); seeded from
-    * the first [[KSub]] vectors' subvectors. Returns (m, cid, S, n).
-    */
-  def trainCodebooks(sub: DataFrame, track: DataFrame => DataFrame = identity): DataFrame = {
-    val spark = sub.sparkSession
-    import spark.implicits._
-    // fixed-iteration trainer over a 512-row state table, per-round
-    // eager checkpoints
-    var cent: DataFrame = sub.filter(col("vec_id") < KSub)
-      .select(col("m"), col("vec_id").cast("int").as("cid"),
-        col("svq").as("S"), lit(1L).as("n"))
-    for (_ <- 1 to Iters) {
-      val asg = sub.join(broadcast(centsByM(cent)), Seq("m"))
-        .select(col("m"),
-          graft.functions.NearestCell(col("sv"), col("cents")).as("cid"),
-          col("svq"))
-      val sums = asg.as[(Int, Int, Seq[Long])]
-        .groupByKey(t => (t._1, t._2)).mapValues(_._3)
-        .agg(Aggregators.LongVecSum.toColumn)
-        .toDF("key", "sn")
-        .select(col("key._1").as("m"), col("key._2").as("cid"),
-          col("sn._1").as("S"), col("sn._2").as("n"))
-      // localCheckpoint per round, as in Ivf.trainCells — the 512-row
-      // checkpoint is free and keeps downstream plans (encode, ADC,
-      // IVFADC stacking) from embedding the whole training tower.
-      // track-the-checkpoint, no broadcast hint: the Ivf.trainCells
-      // rationale (loopCkpt strips dangling layout, so the persist is
-      // safe; a forced broadcast routes the sums aggregate through a
-      // broadcast-collect every iteration)
-      cent = track((cent.as("p")
-          .join(sums.as("u"),
-            col("p.m") === col("u.m") && col("p.cid") === col("u.cid"), "left")
-          .select(col("p.m").as("m"), col("p.cid").as("cid"),
-            coalesce(col("u.S"), col("p.S")).as("S"), coalesce(col("u.n"), col("p.n")).as("n")))
-        .loopCkpt)
-    }
-    cent
+  private def bookLit(cb: DataFrame): Column = {
+    val byM = centv(cb).collect()
+      .groupMap(_.getInt(0))(r => Ivf.Cell(r.getInt(1), r.getSeq[Double](2)))
+    typedLit((0 until M).map(m => byM.getOrElse(m, Array.empty[Ivf.Cell]).sortBy(_.cid).toSeq))
   }
 
-  /** PQ codes: nearest code per (vec_id, subspace) — (vec_id, m, cid).
-    * Map-only (the [[centsByM]] NearestCell argmin): one 1:1 broadcast
-    * join on m, no ×[[KSub]] fan-out, no argmin shuffle.
+  /** The m-th [[SubDim]]-wide slice of a vector column. */
+  private def slot(v: Column, m: Int): Column = slice(v, m * SubDim + 1, SubDim)
+
+  /** [[Iters]] Lloyd rounds per subspace, all [[M]] subspaces trained
+    * in ONE fold per round (the subspace id is part of the state key);
+    * seeded from the first [[KSub]] vectors' subvectors. Input is vector
+    * rows (vec_id, v, vq) — [[Ivf.prep]] output or [[residuals]] — so a
+    * round reads n rows, not n × [[M]]: each row's [[M]] codes come from
+    * one projection and [[Ivf.lloydStep]] sums each subvector into its
+    * (m, cid) cell. Returns the state (m, cid, S, n) as a local frame:
+    * [[M]] × [[KSub]] rows held on the driver, each round one map-only
+    * job.
     */
-  def encode(sub: DataFrame, cent: DataFrame): DataFrame =
-    sub.join(broadcast(centsByM(cent)), Seq("m"))
-      .select(col("vec_id"), col("m"),
-        graft.functions.NearestCell(col("sv"), col("cents")).as("cid"))
+  def trainCodebooks(vecs: DataFrame): DataFrame = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    var state = vecs.filter(col("vec_id") < KSub)
+      .select(col("vec_id").cast("int"), col("vq")).as[(Int, Array[Long])].collect()
+      .flatMap { case (cid, vq) => (0 until M).map(m =>
+        ((m.toLong << 32) | cid) -> (vq.slice(m * SubDim, m * SubDim + SubDim), 1L)) }
+      .toMap
+    def frame = state.toSeq.sortBy(_._1)
+      .map { case (k, (s, n)) => ((k >>> 32).toInt, k.toInt, s, n) }.toDF("m", "cid", "S", "n")
+    for (_ <- 1 to Iters if state.nonEmpty)
+      state = Ivf.lloydStep(state, vecs.select(codes(col("v"), bookLit(frame)), col("vq")))
+    frame
+  }
+
+  /** The [[M]] codes of a vector column against a codebook literal. */
+  private def codes(v: Column, book: Column): Column =
+    array((0 until M).map(m => NearestCell(slot(v, m), book(m))): _*)
+
+  /** PQ codes: nearest code per (vec_id, subspace) — (vec_id, m, cid).
+    * Map-only: the codebook rides as a literal (no ×[[KSub]] fan-out,
+    * no argmin shuffle, no exchange).
+    */
+  def encode(sub: DataFrame, cent: DataFrame): DataFrame = {
+    val book = bookLit(cent)
+    sub.select(col("vec_id"), col("m"), NearestCell(col("sv"), book(col("m"))).as("cid"))
+  }
 
   /** The ADC distance table for a set of query vectors: one
     * floor(d²·10⁸) long per (query, subspace, code) — queries×[[M]]×
@@ -185,8 +175,7 @@ object Pq {
     val exact = shortlisted
       .join(emb.select(col("vec_id"), col("v")), Seq("vec_id"))
       .join(emb.select(col("vec_id").as("query_id"), col("v").as("qv")), Seq("query_id"))
-      .withColumn("d2", DotFold(col("qv"), col("qv"))
-        - lit(2.0) * DotFold(col("qv"), col("v")) + DotFold(col("v"), col("v")))
+      .withColumn("d2", Ivf.d2(col("qv"), col("v")))
     val w = Window.partitionBy(col("query_id")).orderBy(col("d2").asc, col("vec_id").asc)
     exact.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -197,60 +186,88 @@ object Pq {
 
   // ---------------------------------------------------------------- IVFADC
 
+  /** A centroid state (cid, S, n) as a literal map cid → centroid
+    * doubles ([[Ivf.centroid]]), for the residual subtraction.
+    */
+  private def ccvLit(cent: DataFrame): Column =
+    typedLit(cent.select(col("cid"), Ivf.centroid(col("S"), col("n"))).collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap)
+
+  /** r = v − c(cell), component-wise. */
+  private def residual(v: Column, cell: Column, ccv: Column): Column =
+    zip_with(v, element_at(ccv, cell), (a, b) => a - b)
+
   /** Residual encoding for IVFADC (the PQ paper's full system, §IV):
     * each vector is re-expressed relative to its IVF cell's centroid,
     * r = v − c(cell), and PQ codebooks are trained on the RESIDUALS —
     * quantizing what the coarse quantizer missed, which is where PQ's
-    * precision actually goes at scale. Input is [[Ivf.assignAll]]
-    * output (vec_id, cell, v, nrm) plus the INTEGER centroid state;
-    * the centroid double is the one canonical expression (S/10⁶n), so
+    * precision actually goes at scale. Input is an assignment
+    * (vec_id, cell, v, nrm) plus the INTEGER centroid state; the
+    * centroid double is the one canonical expression (S/10⁶n), so
     * both engines subtract bit-identical values and the residual —
     * and everything trained on it — replays exactly. Output has the
     * [[subvectors]] input contract (v = residual, vq = floor(r·10⁶))
     * with `cell` carried for the serving join.
     */
-  def residuals(assigned: DataFrame, cent: DataFrame): DataFrame = {
-    val cv = cent.select(col("cid").as("cell"),
-      transform(col("S"), q => q.cast("double") / (lit(1000000.0) * col("n"))).as("ccv"))
-    assigned.join(broadcast(cv), Seq("cell"))
-      .withColumn("r", zip_with(col("v"), col("ccv"), (a, b) => a - b))
-      .select(col("vec_id"), col("cell"), col("r").as("v"),
-        transform(col("r"), x => floor(x * lit(1000000.0))).as("vq"))
-  }
+  def residuals(assigned: DataFrame, cent: DataFrame): DataFrame =
+    assigned.withColumn("r", residual(col("v"), col("cell"), ccvLit(cent)))
+      .select(col("vec_id"), col("cell"), col("r").as("v"), Ivf.quantize(col("r")).as("vq"))
+
+  /** The residuals of `emb` under a driver-held IVF state — the
+    * codebook trainer's input, a lazy map-only projection.
+    */
+  def residualsUnder(emb: DataFrame, cent: DataFrame): DataFrame =
+    residuals(Ivf.assign(emb, cent), cent)
+
+  /** The held IVFADC tower's n-row output in ONE map-only pass against
+    * the driver-held states: (vec_id, cell, v, nrm, codes), where
+    * `codes(m)` is subspace m's residual code. Assignment, residual and
+    * encoding fuse into one projection, so a held tower materializes
+    * its corpus-sized rows once (no per-stage checkpoints, no n × [[M]]
+    * subvector rows). Same bits as [[residuals]] + [[encode]]: the
+    * same centroid doubles, the same slices, the same NearestCell.
+    */
+  def ivfadcRows(emb: DataFrame, cent: DataFrame, cb: DataFrame): DataFrame =
+    Ivf.assign(emb, cent)
+      .withColumn("r", residual(col("v"), col("cell"), ccvLit(cent)))
+      .select(col("vec_id"), col("cell"), col("v"), col("nrm"),
+        codes(col("r"), bookLit(cb)).as("codes"))
+
+  /** [[ivfadcRows]] as code rows (vec_id, m, cid, cell) — the layout
+    * of a persisted IVFADC codes table.
+    */
+  def codeRows(rows: DataFrame): DataFrame =
+    rows.select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "cid")), col("cell"))
 
   /** Per-probed-cell ADC distance tables: the query's residual is
     * DIFFERENT in each probed cell (r_q = q − c(cell)), so the table
     * is keyed (query_id, cell, m, cid) — queries × [[Ivf.Probes]] ×
     * [[M]] × [[KSub]] rows, still broadcast-sized. Input `probes` is
-    * [[Ivf.probeCells]] output (query_id, cell, qv, qnrm).
+    * (query_id, cell, qv, qnrm) ([[Ivf.probes]]/[[Ivf.probeCells]]);
+    * both states ride as literals, so the table is a projection.
     */
   def queryResidualTables(probes: DataFrame, cent: DataFrame, cb: DataFrame): DataFrame = {
-    val cv = cent.select(col("cid").as("cell"),
-      transform(col("S"), q => q.cast("double") / (lit(1000000.0) * col("n"))).as("ccv"))
-    val qsub = probes.join(broadcast(cv), Seq("cell"))
-      .withColumn("r", zip_with(col("qv"), col("ccv"), (a, b) => a - b))
+    val book = bookLit(cb)
+    probes.withColumn("r", residual(col("qv"), col("cell"), ccvLit(cent)))
       .select(col("query_id"), col("cell"),
-        explode(array((0 until M).map(m => struct(lit(m).as("m"),
-          slice(col("r"), m * SubDim + 1, SubDim).as("sv"))): _*)).as("s"))
+        explode(array((0 until M).map(m =>
+          struct(lit(m).as("m"), slot(col("r"), m).as("sv"))): _*)).as("s"))
       .select(col("query_id"), col("cell"), col("s.m").as("m"), col("s.sv").as("sv"))
-    qsub.join(broadcast(centv(cb)), Seq("m"))
-      .withColumn("d2", DotFold(col("sv"), col("sv"))
-        - lit(2.0) * DotFold(col("sv"), col("cv")) + DotFold(col("cv"), col("cv")))
-      .select(col("query_id"), col("cell"), col("m"), col("cid"),
-        floor(col("d2") * lit(1e8)).cast("long").as("qdt"))
+      .select(col("query_id"), col("cell"), col("m"), col("sv"), explode(book(col("m"))).as("c"))
+      .select(col("query_id"), col("cell"), col("m"), col("c.cid").as("cid"),
+        floor(Ivf.d2(col("sv"), col("c.cv")) * lit(1e8)).cast("long").as("qdt"))
   }
 
   /** IVFADC shortlist: candidates are only the vectors living in a
     * probed cell (the inverted-list cut — the scan IVF saves), scored
     * through their residual codes against the broadcast per-cell
-    * distance table (the I/O PQ saves). `cells` is the (vec_id, cell)
-    * assignment; at scale it IS the inverted-list table and this join
-    * is the list lookup.
+    * distance table (the I/O PQ saves). `codes` rows (vec_id, m, cid,
+    * cell) carry their vector's cell, as a persisted codes table does,
+    * so the list lookup is the distance-table join itself.
     */
-  def ivfAdcShortlist(codes: DataFrame, cells: DataFrame, dts: DataFrame,
+  def ivfAdcShortlist(codes: DataFrame, dts: DataFrame,
       shortlist: Int = Shortlist): DataFrame = {
-    val scored = codes.join(cells, Seq("vec_id"))
-      .join(broadcast(dts), Seq("cell", "m", "cid"))
+    val scored = codes.join(broadcast(dts), Seq("cell", "m", "cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("cell"), col("vec_id"))
       .agg(sum(col("qdt")).as("adc"))
@@ -267,14 +284,11 @@ object Pq {
     * plus shortlist-sized vector fetches for the re-rank.
     */
   def buildIndex(s: SparkSession, sfDir: String, indexDir: String): Unit = {
-    val sub = subvectors(Ivf.prep(Tables.embeddings(s, sfDir))).persist()
-    val iterCents = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val cent = trainCodebooks(sub, df => { iterCents += df.persist(); df })
-    cent.write.mode("overwrite").parquet(s"$indexDir/codebooks")
+    val emb = Ivf.prep(Tables.embeddings(s, sfDir)).persist()
+    trainCodebooks(emb).write.mode("overwrite").parquet(s"$indexDir/codebooks")
     val centBack = Tables.parquet(s, s"$indexDir/codebooks")
-    encode(sub, centBack).write.mode("overwrite").parquet(s"$indexDir/codes")
-    iterCents.foreach(_.unpersist(false))
-    sub.unpersist()
+    encode(subvectors(emb), centBack).write.mode("overwrite").parquet(s"$indexDir/codes")
+    emb.unpersist()
   }
 
   /** Probe-only ADC search against a persisted index: the ADC pass

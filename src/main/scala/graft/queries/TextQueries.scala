@@ -498,14 +498,15 @@ object TextQueries {
   private val IvfProbes = graft.ops.Ivf.Probes
 
   /** EXT-3 — trained IVF ANN ([[graft.ops.Ivf]]): k-means cells trained
-    * IN-PLAN (integer-quantized Lloyd's, [[IvfIters]] unrolled
-    * iterations seeded from the first k vectors) so the oracle can
-    * replay training exactly, every vector assigned to its nearest
-    * trained cell, queries probe their [[IvfProbes]] nearest cells,
-    * exact cosine + top-5 inside the probed cells only. Assignment is a
-    * broadcast crossJoin + min-struct hash aggregate (map-side partial
-    * reduction), never a global window; no driver-side collect. The
-    * at-scale train-ONCE composition over the same code is
+    * by integer-quantized Lloyd's ([[IvfIters]] iterations seeded from
+    * the first k vectors, the k-row state held on the driver) so the
+    * oracle can replay training exactly, every vector assigned to its
+    * nearest trained cell, queries probe their [[IvfProbes]] nearest
+    * cells, exact cosine + top-5 inside the probed cells only.
+    * Assignment and probing are map-only NearestCell passes, never a
+    * global window; the session holds the tower
+    * ([[graft.ops.TowerMemo]]). The at-scale train-ONCE composition
+    * over the same code is
     * [[graft.ops.Ivf.buildIndex]] → [[graft.ops.Ivf.probeTopK]]
     * (persisted centroid/assignment tables; IvfRecallSpec proves the
     * probe-only path reproduces this query's rows bit-for-bit with no
@@ -517,7 +518,7 @@ object TextQueries {
   }
 
   /** EXT-3c — product-quantization ANN ([[graft.ops.Pq]]): per-subspace
-    * codebooks trained IN-PLAN with the q42 integer-quantized Lloyd's
+    * codebooks trained with the q42 integer-quantized Lloyd's
     * (so the oracle replays training, encoding, and every ADC score
     * bit-for-bit), every vector encoded to [[graft.ops.Pq.M]] 4-bit
     * codes, queries ADC-scored through the codes alone (integer sums
@@ -535,7 +536,7 @@ object TextQueries {
     import graft.ops.{Pq, TowerMemo}
     val emb = TowerMemo.prep(s, d)
     val sub = tracked(Pq.subvectors(emb))
-    val cent = Pq.trainCodebooks(sub, tracked)
+    val cent = Pq.trainCodebooks(emb)
     val codes = Pq.encode(sub, cent)
     val dts = Pq.distanceTables(sub.filter(col("vec_id") < graft.ops.Ivf.ProbeN), cent)
     Pq.rerankTopK(Pq.adcShortlist(codes, dts), emb)
@@ -637,11 +638,9 @@ object TextQueries {
     import graft.ops.{Pq, TowerMemo}
     val liveCodes = TowerMemo.residualCodes(s, d)
       .join(dead, Seq("vec_id"), "left_anti")
-    val liveCells = TowerMemo.assigned(s, d).select(col("vec_id"), col("cell"))
-      .join(dead, Seq("vec_id"), "left_anti")
     val dts = Pq.queryResidualTables(TowerMemo.probes5(s, d), TowerMemo.cent(s, d),
       TowerMemo.residualCodebooks(s, d))
-    Pq.rerankTopK(Pq.ivfAdcShortlist(liveCodes, liveCells, dts),
+    Pq.rerankTopK(Pq.ivfAdcShortlist(liveCodes, dts),
       TowerMemo.prep(s, d), extra = Seq("cell"))
   }
 
@@ -746,22 +745,18 @@ object TextQueries {
     var servedC, exact, stale: org.apache.spark.sql.DataFrame = null
     parDrive(
       () => {
-        // 2. fresh quantizers trained on the survivors (fused single-
-        //    consumer build, the oldIvfadcShortlist accounting)
-        val cent = Ivf.trainCells(hold(liveOnly(emb)), hold)
-        val asgAll = hold(Ivf.assignAll(emb, cent))
-        val rsub = hold(Pq.subvectors(Pq.residuals(asgAll, cent)))
-        val cb = Pq.trainCodebooks(liveOnly(rsub), hold)
-        val codes = Pq.encode(rsub, cb)
+        // 2. fresh quantizers trained on the survivors; the new tower's
+        //    rows stream through the shortlist (one consumer)
+        val cent = Ivf.trainCells(hold(liveOnly(emb)))
+        val cb = Pq.trainCodebooks(liveOnly(Pq.residualsUnder(emb, cent)))
         // 3. live-only serving through the new tower (the q171 surgery,
         //    now over the compacted generation)
-        val probes = Ivf.probeCells(
+        val probes = Ivf.probes(
           emb.filter(col("vec_id") < Ivf.ProbeN).withColumnRenamed("vec_id", "query_id"), cent)
         val dts = Pq.queryResidualTables(probes, cent, cb)
         servedC = hold(Pq.rerankTopK(
-          Pq.ivfAdcShortlist(codes.join(dead, Seq("vec_id"), "left_anti"),
-            asgAll.select(col("vec_id"), col("cell")).join(dead, Seq("vec_id"), "left_anti"),
-            dts),
+          Pq.ivfAdcShortlist(Pq.codeRows(Pq.ivfadcRows(emb, cent, cb))
+            .join(dead, Seq("vec_id"), "left_anti"), dts),
           emb, extra = Seq("cell")))
         servedC.count(); ()
       },

@@ -45,7 +45,7 @@ object StreamingGraph {
     */
   def buildFrozen(s: SparkSession, sfDir: String, indexDir: String): Long = {
     import graft.ops.TowerMemo
-    val cut = TowerMemo.oldCut(s, sfDir).collect()(0).getLong(0)
+    val cut = TowerMemo.generationCut(s, sfDir)
     TowerMemo.oldEdgeAssigned(s, sfDir).select(col("vec_id"), col("cell"))
       .write.mode("overwrite").parquet(s"$indexDir/asg/gen=-1")
     TowerMemo.oldEdgeAssigned(s, sfDir).select(col("vec_id"))

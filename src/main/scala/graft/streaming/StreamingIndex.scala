@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.ops.{Ivf, Pq}
+import graft.ops.{Ivf, Pq, TowerMemo}
 
 /** Streaming freshness twin of q92 (frozen-quantizer index append):
   * q92 proves IN BATCH that appending a new generation to an IVFADC
@@ -39,8 +39,9 @@ import graft.ops.{Ivf, Pq}
   * spec-proven.
   *
   * Scale shape: the build is q92's train-once path; each append is one
-  * micro-batch-sized scan (assign → residual → encode are broadcast
-  * joins against the 40-row centroid / 512-row codebook tables); the
+  * micro-batch-sized scan (assign broadcast-joins the centroid table;
+  * residual and encode read the centroid and 512-row codebook states
+  * as literals); the
   * search reads codes + shortlist-sized vector fetches, exactly
   * [[graft.ops.Pq.probeTopK]]'s serving shape.
   */
@@ -53,23 +54,14 @@ object StreamingIndex {
     * Returns the cut.
     */
   def buildFrozen(s: SparkSession, sfDir: String, indexDir: String): Long = {
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def hold(df: DataFrame): DataFrame = { locals += df.persist(); df }
-    val emb = hold(Ivf.prep(Tables.embeddings(s, sfDir)))
-    val cut = emb.count() * 4 / 5
-    val old = hold(emb.filter(col("vec_id") < cut))
-    val cent = Ivf.trainCells(old, hold)
+    val cut = TowerMemo.generationCut(s, sfDir)
+    val old = TowerMemo.prep(s, sfDir).filter(col("vec_id") < cut)
+    val cent = Ivf.trainCells(old)
     cent.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val centB = Tables.parquet(s, s"$indexDir/centroids")
-    val oldAsg = hold(Ivf.assignAll(old, centB))
-    val rsub = hold(Pq.subvectors(Pq.residuals(oldAsg, centB)))
-    val cb = Pq.trainCodebooks(rsub, hold)
+    val cb = Pq.trainCodebooks(Pq.residualsUnder(old, cent))
     cb.write.mode("overwrite").parquet(s"$indexDir/codebooks")
-    val cbB = Tables.parquet(s, s"$indexDir/codebooks")
-    Pq.encode(rsub, cbB)
-      .join(oldAsg.select(col("vec_id"), col("cell")), Seq("vec_id"))
+    Pq.codeRows(Pq.ivfadcRows(old, cent, cb))
       .write.mode("overwrite").parquet(s"$indexDir/codes/gen=-1")
-    locals.foreach(_.unpersist(false))
     cut
   }
 
@@ -426,8 +418,7 @@ object StreamingIndex {
       emb.filter(col("vec_id") < Ivf.ProbeN).withColumnRenamed("vec_id", "query_id"), cent)
     val dts = Pq.queryResidualTables(probes, cent, cb)
     val sl = Pq.ivfAdcShortlist(
-      codes.select(col("vec_id"), col("m"), col("cid")),
-      codes.select(col("vec_id"), col("cell")).distinct(), dts)
+      codes.select(col("vec_id"), col("m"), col("cid"), col("cell")), dts)
     Pq.rerankTopK(sl, emb, k = k, extra = Seq("cell"))
       .crossJoin(cut)
       .withColumn("is_new", col("vec_id") >= col("cut"))

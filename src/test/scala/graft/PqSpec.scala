@@ -75,15 +75,14 @@ class PqSpec extends AnyFunSuite {
     // to the probed cells (the IVF cut — what IVFADC could possibly see)
     val truth = exactTop5(d)
     val emb = graft.ops.Ivf.prep(spark.read.parquet(s"$d/embeddings.parquet")).persist()
-    val iterCents = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    val cent = graft.ops.Ivf.trainCells(emb, df => { iterCents += df.persist(); df })
+    val cent = graft.ops.Ivf.trainCells(emb)
     val cells = graft.ops.Ivf.assignAll(emb, cent)
       .select(col("vec_id"), col("cell")).as[(Long, Int)].collect().toMap
     val probed = graft.ops.Ivf.probeCells(
         emb.filter(col("vec_id") < 5).withColumnRenamed("vec_id", "query_id"), cent)
       .select(col("query_id"), col("cell")).as[(Long, Int)].collect()
       .groupBy(_._1).map { case (q, cs) => q -> cs.map(_._2).toSet }
-    iterCents.foreach(_.unpersist(false)); emb.unpersist()
+    emb.unpersist()
     val vs = spark.read.parquet(s"$d/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Seq[Float])].collect()
@@ -135,18 +134,15 @@ class PqSpec extends AnyFunSuite {
     val emb = Ivf.prep(spark.read.parquet(s"$d/embeddings.parquet")).persist()
     val cut = emb.count() * 4 / 5
     val old = emb.filter(col("vec_id") < cut).persist()
-    val iterCents = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    val track = (df: org.apache.spark.sql.DataFrame) => { iterCents += df.persist(); df }
-    val cent = Ivf.trainCells(old, track)
-    val rsubOld = Pq.subvectors(Pq.residuals(Ivf.assignAll(old, cent), cent)).persist()
-    val cb = Pq.trainCodebooks(rsubOld, track)
-    val oldAlone = Pq.encode(rsubOld, cb).as[(Long, Int, Int)].collect().toSet
+    val cent = Ivf.trainCells(old)
+    val resOld = Pq.residuals(Ivf.assignAll(old, cent), cent).persist()
+    val cb = Pq.trainCodebooks(resOld)
+    val oldAlone = Pq.encode(Pq.subvectors(resOld), cb).as[(Long, Int, Int)].collect().toSet
     val rsubFull = Pq.subvectors(Pq.residuals(Ivf.assignAll(emb, cent), cent))
     val fullOld = Pq.encode(rsubFull, cb)
       .filter(col("vec_id") < cut).as[(Long, Int, Int)].collect().toSet
     assert(fullOld == oldAlone, "append changed an old vector's codes")
-    iterCents.foreach(_.unpersist(false))
-    rsubOld.unpersist(); old.unpersist(); emb.unpersist()
+    resOld.unpersist(); old.unpersist(); emb.unpersist()
     spark.catalog.clearCache()
   }
 
@@ -168,8 +164,7 @@ class PqSpec extends AnyFunSuite {
     val d = "/root/testdata/sf0.01"
     val emb = graft.ops.Ivf.prep(spark.read.parquet(s"$d/embeddings.parquet")).persist()
     val sub = Pq.subvectors(emb).persist()
-    val iterCents = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    val cent = Pq.trainCodebooks(sub, df => { iterCents += df.persist(); df })
+    val cent = Pq.trainCodebooks(emb)
     val codes = Pq.encode(sub, cent).as[(Long, Int, Int)].collect()
     val n = emb.count()
     assert(codes.length == n * Pq.M, "a (vector, subspace) lost its code")
@@ -181,7 +176,6 @@ class PqSpec extends AnyFunSuite {
     val cb = cent.select(col("m"), col("cid"), col("n")).as[(Int, Int, Long)].collect()
     assert(cb.length == Pq.M * Pq.KSub)
     assert(cb.forall(_._3 >= 1L))
-    iterCents.foreach(_.unpersist(false))
     sub.unpersist(); emb.unpersist()
     spark.catalog.clearCache()
   }

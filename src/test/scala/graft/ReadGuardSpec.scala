@@ -1,12 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -98,27 +95,7 @@ class ReadGuardSpec extends AnyFunSuite {
       hits.mkString(", "))
   }
 
-  /** Spark jobs submitted from this thread while `body` builds its frame. */
-  private def jobsWhile(body: => Unit): Int = {
-    val tag = s"read-guard-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.readGuard") == tag)
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.readGuard", tag)
-    try body
-    finally {
-      sc.setLocalProperty("graft.readGuard", null)
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get()
-  }
+  private def jobsWhile(body: => Unit): Int = TestJobs.submittedWhile(spark)(body)
 
   test("building every fixture table submits no Spark job") {
     val d = "/root/testdata/sf0.01"

@@ -17,6 +17,37 @@ object TestSpark {
   }
 }
 
+/** Counts the Spark jobs a piece of driver code submits. */
+object TestJobs {
+
+  /** Spark jobs submitted from this thread while `body` runs: a
+    * thread-local job property tags them, and draining the listener bus
+    * before and after makes the count exact.
+    */
+  def submittedWhile(spark: SparkSession)(body: => Unit): Int = {
+    import org.apache.spark.graft.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tag = s"job-count-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.jobCount") == tag)
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.jobCount", tag)
+    try body
+    finally {
+      sc.setLocalProperty("graft.jobCount", null)
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get()
+  }
+}
+
 /** THE reference model of the JSONL manifest digest (first-15-hex
   * sha256 prefix per line, exact sum mod ManifestMod) — one
   * definition for every spec that certifies file contents
