@@ -18,7 +18,9 @@ import graft.ops.{Ivf, TowerMemo}
 class HeldBuildBudgetSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.session
-  val d = "/root/testdata/sf0.01"
+  // the benchmark's byte copy of the sf0.01 tables (500 vectors), from
+  // the repository root the suite runs in
+  val d = "perfbench/data/sf0.01"
 
   test("a fresh session builds the held ANN artifacts within their job budgets") {
     // a new session is a fresh memo key: nothing is held yet
