@@ -116,7 +116,9 @@ object Tables {
     * inside Bench's timed window that charged a full table scan to
     * whatever query asked. Values are plain Longs (no value-refers-to-key
     * cycle, unlike TowerMemo), so a stopped session's entries really are
-    * weakly reclaimable here.
+    * weakly reclaimable here. The count is one job: a column-free scan
+    * counted as RDD rows (`Dataset.count` plans an aggregate, two jobs
+    * under AQE).
     */
   private val countMemo =
     new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Long]]()
@@ -131,6 +133,7 @@ object Tables {
           countMemo.put(spark, n); n
         }
       }
-      perSession.getOrElseUpdate(s"$sfDir|$name", table(spark, sfDir, name).count())
+      perSession.getOrElseUpdate(s"$sfDir|$name",
+        table(spark, sfDir, name).select().queryExecution.toRdd.count())
     }
 }

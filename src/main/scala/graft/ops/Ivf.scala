@@ -20,14 +20,15 @@ import graft.functions.{DotFold, NearestCell}
   * Driver-held state: a trained quantizer is k rows of (cid, S, n) —
   * k × dim longs, bounded by k and never by the corpus — so the
   * trainers keep it on the driver ([[trainCells]], capped at
-  * [[MaxCells]]) and return it as a local frame. Operators whose
-  * centroid side is such a state ([[assign]], [[probes]], the Lloyd
-  * folds) inline it as a literal: the pass is map-only and needs no
-  * exchange job. [[assignAll]]/[[probeCells]] take any centroid frame
-  * (a persisted index table) and join it as a broadcast. Either way
-  * [[graft.functions.NearestCell]] computes the argmin per vector in
-  * one loop: no n·k intermediate rows, no argmin shuffle, no window;
-  * the only window ranks query × cell rows in [[probeCells]].
+  * [[MaxCells]]) and return it as a local frame; [[local]] reads a
+  * persisted state table into one. Operators whose centroid side is
+  * such a state ([[assign]], [[probes]], the Lloyd folds) inline it as
+  * a literal: the pass is map-only and needs no exchange job.
+  * [[assignAll]]/[[probeCells]] take any centroid frame (a persisted
+  * index table, kept in the serving plan) and join it as a broadcast.
+  * Assignment is [[graft.functions.NearestCell]] per vector in one
+  * loop whatever the operand: no n·k intermediate rows, no argmin
+  * shuffle; the only window ranks query × cell rows in [[probeCells]].
   */
 object Ivf {
 
@@ -48,7 +49,10 @@ object Ivf {
     * above the cap [[trainCells]] throws before any job runs. The state
     * is k × dim longs on the driver and its centroids ride in every
     * assignment task as a literal: 1024 × 64 doubles is 512 KiB, under
-    * Spark's 1 MiB large-task-binary warning.
+    * Spark's 1 MiB large-task-binary warning. A fold's result bytes are
+    * ⌈√partitions⌉ partial states ([[lloydStep]]): at the cap and 10⁶
+    * partitions, 1000 × 512 KiB, inside the default 1 GiB
+    * `spark.driver.maxResultSize`.
     */
   val MaxCells = 1024
 
@@ -100,6 +104,15 @@ object Ivf {
     typedLit(centv(cent).collect()
       .map(r => Cell(r.getInt(0), r.getSeq[Double](1))).sortBy(_.cid).toSeq)
 
+  /** A persisted state table (cid, S, n) or (m, cid, S, n) read into a
+    * driver-held local frame: one collect job, after which every
+    * literal built from it ([[assign]], [[probes]], [[Pq.ivfadcRows]],
+    * [[Pq.queryResidualTables]]) is free.
+    */
+  def local(state: DataFrame): DataFrame =
+    state.sparkSession.createDataFrame(
+      java.util.Arrays.asList(state.collect(): _*), state.schema)
+
   /** A centroid frame as ONE row `cents: array<struct<cid, cv>>`,
     * cid-ascending (array_sort on a struct array orders by the first
     * field) — the broadcast operand of [[assignAll]].
@@ -126,10 +139,10 @@ object Ivf {
     * on the driver.
     *
     * The state lives on the driver: the seed is one collect of ≤ k
-    * rows, and each iteration is one map-only job — NearestCell against
-    * the state inlined as a literal, then [[lloydStep]]'s per-partition
-    * long sums merged on the driver. No checkpoint, no lineage: the
-    * returned frame is the k rows themselves.
+    * rows, and each iteration is one job — NearestCell against the
+    * state inlined as a literal, then [[lloydStep]]'s per-partition
+    * long sums merged by a tree aggregate. No checkpoint, no lineage:
+    * the returned frame is the k rows themselves.
     */
   def trainCells(emb: DataFrame, k: Int = K): DataFrame = {
     require(k <= MaxCells, s"trainCells: $k cells exceed the driver-held cap of $MaxCells")
@@ -152,39 +165,43 @@ object Ivf {
     * the state key is (m << 32) | cell — a single code for an IVF cell,
     * one per subspace for a PQ codebook. Each partition folds its rows
     * into per-key long sums with [[Aggregators.LongVecSum]]'s
-    * arithmetic (order-independent), the driver merges the partials —
-    * one map-only job. Keys that attracted no rows keep their previous
-    * (S, n).
+    * arithmetic (order-independent), and a tree aggregate merges the
+    * partials — one job, and the driver receives at most ⌈√partitions⌉
+    * partials of ≤ k × dim longs each (a level of executor-side merging
+    * runs first when the partitions are many). Keys that attracted no
+    * rows keep their previous (S, n).
     */
   private[ops] def lloydStep(state: Map[Long, (Array[Long], Long)], asg: DataFrame)
       : Map[Long, (Array[Long], Long)] = {
     val spark = asg.sparkSession
     import spark.implicits._
     val sum = Aggregators.LongVecSum
-    val sums = asg.as[(Array[Int], Array[Long])]
-      .mapPartitions { rows =>
-        val acc = scala.collection.mutable.HashMap.empty[Long, (Array[Long], Long)]
-        rows.foreach { case (codes, vq) =>
-          val w = vq.length / codes.length
-          for (m <- codes.indices) {
-            val key = (m.toLong << 32) | codes(m)
-            acc(key) = sum.reduce(acc.getOrElse(key, sum.zero), vq.slice(m * w, m * w + w))
-          }
+    type Sums = scala.collection.mutable.HashMap[Long, (Array[Long], Long)]
+    val sums = asg.as[(Array[Int], Array[Long])].rdd.treeAggregate(new Sums)(
+      { case (acc, (codes, vq)) =>
+        val w = vq.length / codes.length
+        for (m <- codes.indices) {
+          val key = (m.toLong << 32) | codes(m)
+          acc(key) = sum.reduce(acc.getOrElse(key, sum.zero), vq.slice(m * w, m * w + w))
         }
-        acc.iterator.map { case (key, (s, n)) => (key, s, n) }
-      }
-      .collect()
-      .groupMapReduce(_._1)(p => (p._2, p._3))(sum.merge)
+        acc
+      },
+      { (a, b) =>
+        b.foreach { case (key, p) => a(key) = a.get(key).fold(p)(sum.merge(_, p)) }
+        a
+      })
     state.map { case (key, old) => key -> sums.getOrElse(key, old) }
   }
 
+  /** (vec_id, cell, v, nrm): each vector's nearest cell in `cents`. */
+  private def nearest(emb: DataFrame, cents: Column): DataFrame =
+    emb.select(col("vec_id"), NearestCell(col("v"), cents).as("cell"), col("v"), col("nrm"))
+
   /** Nearest cell for every vector against a driver-held state (a
-    * trained local frame): (vec_id, cell, v, nrm), map-only, with the
-    * centroids inlined as a literal.
+    * trained or [[local]] frame): (vec_id, cell, v, nrm), map-only,
+    * with the centroids inlined as a literal.
     */
-  def assign(emb: DataFrame, cent: DataFrame): DataFrame =
-    emb.select(col("vec_id"), NearestCell(col("v"), centsLit(cent)).as("cell"),
-      col("v"), col("nrm"))
+  def assign(emb: DataFrame, cent: DataFrame): DataFrame = nearest(emb, centsLit(cent))
 
   /** The [[Probes]] nearest cells per query vector against a
     * driver-held state: (query_id, cell, qv, qnrm), map-only.
@@ -193,20 +210,20 @@ object Ivf {
     queries.select(col("query_id"), explode(nearestCells(col("v"), centsLit(cent))).as("cell"),
       col("v").as("qv"), col("nrm").as("qnrm"))
 
-  /** Nearest cell for every vector against a centroid frame read from
-    * anywhere (a persisted index table): (vec_id, cell, v, nrm). The
-    * frame joins as a broadcast one-row operand, so the pass stays
-    * map-only.
+  /** [[assign]] against a centroid frame read from anywhere (a
+    * persisted index table): the frame joins as a broadcast one-row
+    * operand, so the pass stays map-only and the plan scans the table.
     */
   def assignAll(emb: DataFrame, cent: DataFrame): DataFrame =
-    emb.select(col("vec_id"), col("v"), col("nrm"))
-      .crossJoin(broadcast(centsRow(cent)))
-      .select(col("vec_id"), NearestCell(col("v"), col("cents")).as("cell"),
-        col("v"), col("nrm"))
+    nearest(emb.select(col("vec_id"), col("v"), col("nrm")).crossJoin(broadcast(centsRow(cent))),
+      col("cents"))
 
-  /** The [[Probes]] nearest cells per query vector against a centroid
-    * frame read from anywhere: (query_id, cell, qv, qnrm). The
-    * centroids broadcast; a window over query × cell rows ranks them.
+  /** [[probes]] against a centroid frame read from anywhere (a
+    * persisted index table): the centroids broadcast and a window over
+    * query × cell rows ranks them by (d2, cid), the order
+    * [[nearestCells]] sorts by. The serving plan stays free of
+    * aggregates — the one-row operand [[assignAll]] builds is a
+    * `collect_list` aggregate — so it holds only scans of the index.
     */
   def probeCells(queries: DataFrame, cent: DataFrame): DataFrame = {
     val wq = Window.partitionBy(col("query_id")).orderBy(col("d2"), col("cid"))

@@ -38,7 +38,7 @@ import graft.functions.NearestCell
   * hash-aggregates the per-candidate sum, and re-ranks the shortlist
   * exactly. The only driver collects are of that bounded state: the
   * trainer's seed and per-iteration sums, and a codebook or centroid
-  * table read to become a literal.
+  * table read once to become a literal ([[Ivf.local]]).
   */
 object Pq {
 
@@ -244,7 +244,9 @@ object Pq {
     * is keyed (query_id, cell, m, cid) — queries × [[Ivf.Probes]] ×
     * [[M]] × [[KSub]] rows, still broadcast-sized. Input `probes` is
     * (query_id, cell, qv, qnrm) ([[Ivf.probes]]/[[Ivf.probeCells]]);
-    * both states ride as literals, so the table is a projection.
+    * both states ride as literals, so the table is a projection. Each
+    * literal collects its state frame: pass driver-held frames (trained,
+    * or read once with [[Ivf.local]]), not persisted tables.
     */
   def queryResidualTables(probes: DataFrame, cent: DataFrame, cb: DataFrame): DataFrame = {
     val book = bookLit(cb)

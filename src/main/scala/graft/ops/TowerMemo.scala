@@ -133,15 +133,12 @@ object TowerMemo {
   def prep(s: SparkSession, d: String): DataFrame =
     get(s, d, "prep")(Ivf.prep(Tables.embeddings(s, d)))
 
-  /** The corpus size n, counted once per (session, sfDir): one map-only
-    * job over the checkpointed prep (`Dataset.count` plans an aggregate,
-    * two jobs under AQE). The edge quantizer's ⌈√n⌉ cells, the ⌊4n/5⌋
-    * generation cut and its ⌈√cut⌉ cells all derive from this value.
+  /** The corpus size n, counted once per (session, sfDir)
+    * ([[graft.Tables.rowCount]]). The edge quantizer's ⌈√n⌉ cells, the
+    * ⌊4n/5⌋ generation cut and its ⌈√cut⌉ cells all derive from it.
     */
-  def corpusSize(s: SparkSession, d: String): Long =
-    memoize(s, d, "n", checkpoint = false) {
-      s.createDataFrame(Seq(Tuple1(prep(s, d).queryExecution.toRdd.count()))).toDF("n")
-    }.collect()(0).getLong(0)
+  private def corpusSize(s: SparkSession, d: String): Long =
+    Tables.rowCount(s, d, "embeddings")
 
   /** ⌈√x⌉ cells — the √n-cells rule; the DuckDB oracle computes the
     * same k as CAST(ceil(sqrt(count(*))) AS BIGINT) in-query.

@@ -38,12 +38,13 @@ import graft.ops.{Ivf, Pq, TowerMemo}
   * swapped out — build → append → delete → compact, each step
   * spec-proven.
   *
-  * Scale shape: the build is q92's train-once path; each append is one
-  * micro-batch-sized scan (assign broadcast-joins the centroid table;
-  * residual and encode read the centroid and 512-row codebook states
-  * as literals); the
-  * search reads codes + shortlist-sized vector fetches, exactly
-  * [[graft.ops.Pq.probeTopK]]'s serving shape.
+  * Scale shape: the build is q92's train-once path; each append reads
+  * the centroid and 512-row codebook tables onto the driver once
+  * ([[graft.ops.Ivf.local]]) and encodes the micro-batch in one
+  * map-only pass ([[graft.ops.Pq.ivfadcRows]], the build's encoder);
+  * the search reads the same two states once, codes, and
+  * shortlist-sized vector fetches — [[graft.ops.Pq.probeTopK]]'s
+  * serving shape.
   */
 object StreamingIndex {
 
@@ -55,14 +56,27 @@ object StreamingIndex {
     */
   def buildFrozen(s: SparkSession, sfDir: String, indexDir: String): Long = {
     val cut = TowerMemo.generationCut(s, sfDir)
-    val old = TowerMemo.prep(s, sfDir).filter(col("vec_id") < cut)
+    val old = Ivf.prep(Tables.embeddings(s, sfDir)).filter(col("vec_id") < cut).persist()
     val cent = Ivf.trainCells(old)
     cent.write.mode("overwrite").parquet(s"$indexDir/centroids")
     val cb = Pq.trainCodebooks(Pq.residualsUnder(old, cent))
     cb.write.mode("overwrite").parquet(s"$indexDir/codebooks")
     Pq.codeRows(Pq.ivfadcRows(old, cent, cb))
       .write.mode("overwrite").parquet(s"$indexDir/codes/gen=-1")
+    old.unpersist(false)
     cut
+  }
+
+  /** The frozen centroid and codebook states read onto the driver
+    * ([[graft.ops.Ivf.local]]), the two collects run concurrently —
+    * the operands of every append and search.
+    */
+  private def frozenStates(s: SparkSession, indexDir: String): (DataFrame, DataFrame) = {
+    var cent, cb: DataFrame = null
+    graft.queries.parDrive(
+      () => cent = Ivf.local(Tables.parquet(s, s"$indexDir/centroids")),
+      () => cb = Ivf.local(Tables.parquet(s, s"$indexDir/codebooks")))
+    (cent, cb)
   }
 
   /** Encode one micro-batch of `(vec_id, embedding)` rows through the
@@ -85,11 +99,8 @@ object StreamingIndex {
     // (round-14 review + the spec's independent-sequence lesson).
     if (batchId <= GenStore.readHorizon(
         s, s"$indexDir/codes/_HORIZON_APPEND").getOrElse(-1L)) return
-    val cent = Tables.parquet(s, s"$indexDir/centroids")
-    val cb = Tables.parquet(s, s"$indexDir/codebooks")
-    val asg = Ivf.assignAll(Ivf.prep(batch), cent)
-    Pq.encode(Pq.subvectors(Pq.residuals(asg, cent)), cb)
-      .join(asg.select(col("vec_id"), col("cell")), Seq("vec_id"))
+    val (cent, cb) = frozenStates(s, indexDir)
+    Pq.codeRows(Pq.ivfadcRows(Ivf.prep(batch), cent, cb))
       .write.mode("overwrite").parquet(dir.toString)
   }
 
@@ -410,18 +421,15 @@ object StreamingIndex {
     */
   private def searchOver(s: SparkSession, sfDir: String, codes: DataFrame,
       indexDir: String, k: Int): DataFrame = {
-    val cent = Tables.parquet(s, s"$indexDir/centroids")
-    val cb = Tables.parquet(s, s"$indexDir/codebooks")
+    val (cent, cb) = frozenStates(s, indexDir)
     val emb = Ivf.prep(Tables.embeddings(s, sfDir))
-    val cut = broadcast(emb.agg(expr("count(1) * 4 div 5").as("cut")))
-    val probes = Ivf.probeCells(
+    val probes = Ivf.probes(
       emb.filter(col("vec_id") < Ivf.ProbeN).withColumnRenamed("vec_id", "query_id"), cent)
     val dts = Pq.queryResidualTables(probes, cent, cb)
     val sl = Pq.ivfAdcShortlist(
       codes.select(col("vec_id"), col("m"), col("cid"), col("cell")), dts)
     Pq.rerankTopK(sl, emb, k = k, extra = Seq("cell"))
-      .crossJoin(cut)
-      .withColumn("is_new", col("vec_id") >= col("cut"))
+      .withColumn("is_new", col("vec_id") >= lit(TowerMemo.generationCut(s, sfDir)))
       .select(col("query_id"), col("rank"), col("cell"), col("vec_id"),
         col("is_new"), col("adc"), col("d2"))
       .orderBy(col("query_id"), col("rank"))
