@@ -158,18 +158,19 @@ object StreamingCorpus {
           .filter(graft.queries.PipelineQueries.qualityGate(col("text")))
           .filter(graft.queries.TextQueries.sampleHash < graft.queries.TextQueries.sampleRateBp)
           .select(col("doc_id"), col("source"), col("lang"), col("text"))
-        val dir = new org.apache.hadoop.fs.Path(s"$outDir/corpus/batch_id=$batchId")
-        val fs = dir.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-        if (fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS")))
-          // replayed batch already fully committed on disk: skip the
-          // rewrite, but still drive the stateful plan — the state
-          // stores must advance to this batch's version (Spark validates
-          // every batch commits its state)
+        val st = store(batch.sparkSession, outDir)
+        val dir = s"$outDir/corpus/$Rows$batchId"
+        if (st.committed("corpus", batchId, prefix = Rows) || st.folded(batchId))
+          // replayed batch already committed on disk, or folded by a
+          // compaction (which deleted its marker): skip the rewrite, but
+          // still drive the stateful plan — the state stores must advance
+          // to this batch's version (Spark validates every batch commits
+          // its state)
           batch.foreachPartition((it: Iterator[BandVerdict]) => it.foreach(_ => ()))
         else {
           // a marker-less leftover from a crash mid-write is overwritten
-          admitted.write.mode("overwrite").partitionBy("lang").parquet(dir.toString)
-          stampIfEmpty(fs, dir)
+          admitted.write.mode("overwrite").partitionBy("lang").parquet(dir)
+          stampIfEmpty(st, s"corpus/$Rows$batchId")
         }
         onBatchCommitted(batchId)
         ()
@@ -187,9 +188,18 @@ object StreamingCorpus {
   // and lifecycle waves share ONE monotone batchId sequence per table
   // (the StreamingLabels contract).
 
-  private def hfs(s: org.apache.spark.sql.SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
+  /** The corpus store, healed ([[GenStore.open]]): `corpus` is the
+    * swapped table and carries the horizon; ingest and lifecycle waves
+    * share its one monotone batchId sequence, so one `_HORIZON` guards
+    * all three writers.
+    */
+  private def store(s: org.apache.spark.sql.SparkSession, outDir: String) =
+    GenStore.open(s, outDir, "corpus")
+
+  /** Row batches are `batch_id=<id>` dirs — a partition column for
+    * readers of `outDir/corpus`.
+    */
+  private val Rows = "batch_id="
 
   /** Marker a writer stamps on a committed batch dir that holds NO data
     * files (an all-rejected wave): readers skip it on one exists()
@@ -201,28 +211,8 @@ object StreamingCorpus {
     * (one shallow walk over a dir the writer just produced — commit-time
     * cost, so every future read skips the walk).
     */
-  private def stampIfEmpty(f: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Unit = {
-    def walk(q: org.apache.hadoop.fs.Path): Boolean = {
-      val st = f.listStatus(q)
-      st.exists(x => x.isFile && !x.getPath.getName.startsWith("_") &&
-        !x.getPath.getName.startsWith(".")) ||
-        st.exists(x => x.isDirectory && walk(x.getPath))
-    }
-    if (f.exists(dir) && !walk(dir))
-      f.create(new org.apache.hadoop.fs.Path(dir, NoDataMarker), true).close()
-  }
-
-  private def completeDirs(s: org.apache.spark.sql.SparkSession,
-      root: String, prefix: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val f = hfs(s, root)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix) &&
-        f.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.toString)
-  }
+  private def stampIfEmpty(st: GenStore.Store, sub: String): Unit =
+    if (st.exists(sub) && !st.holdsData(sub)) st.mark(s"$sub/$NoDataMarker")
 
   /** The LIVE corpus view: per doc, the newest committed version that
     * no strictly-later tombstone kills — `(doc_id, source, lang, text)`.
@@ -235,47 +225,35 @@ object StreamingCorpus {
     * back to one generation so the read cost stays bounded between
     * compactions.
     */
-  def liveCorpus(s: org.apache.spark.sql.SparkSession, outDir: String): DataFrame =
-    liveCorpusUpTo(s, outDir, None)
+  def liveCorpus(s: org.apache.spark.sql.SparkSession, outDir: String): DataFrame = {
+    val st = store(s, outDir)
+    liveOver(s, st, outDir, st.gens("corpus", prefix = Rows), st.gens("tombs"))
+  }
 
-  private def liveCorpusUpTo(s: org.apache.spark.sql.SparkSession,
-      outDir: String, upTo: Option[Long]): DataFrame = {
-    def keep(dir: String): Boolean = upTo.forall { b =>
-      dir.substring(dir.lastIndexOf("=") + 1).toLong <= b
-    }
+  /** The corpus view over explicit committed row batches and tombstone
+    * generations — the single fold body the live, as-of and compaction
+    * paths share (the compactor's one captured listing feeds it).
+    */
+  private def liveOver(s: org.apache.spark.sql.SparkSession, st: GenStore.Store,
+      outDir: String, batches: Seq[Long], tombGens: Seq[Long]): DataFrame = {
     // an update wave whose every row failed the gate commits a FILE-LESS
     // batch dir (its tombstones still count) — parquet cannot infer a
     // schema from it, so readers skip it (the labelsAsOf discipline).
     // Writers stamp such dirs `_NODATA` at commit time so readers skip
     // them on one exists() probe instead of a recursive walk; the walk
     // remains as the fallback for pre-marker tables, and tolerates a dir
-    // retired concurrently (listStatus throwing FileNotFound = no data).
-    def hasData(dir: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val f = hfs(s, dir)
-      if (f.exists(new org.apache.hadoop.fs.Path(p, NoDataMarker))) return false
-      def walk(q: org.apache.hadoop.fs.Path): Boolean = {
-        val st = try f.listStatus(q) catch {
-          case _: java.io.FileNotFoundException =>
-            return false
-        }
-        st.exists(x => x.isFile && !x.getPath.getName.startsWith("_") &&
-          !x.getPath.getName.startsWith(".")) ||
-          st.exists(x => x.isDirectory && walk(x.getPath))
-      }
-      walk(p)
-    }
-    val dirs = completeDirs(s, s"$outDir/corpus", "batch_id=")
-      .filter(keep).filter(hasData)
+    // retired concurrently.
+    val dirs = batches.map(b => s"corpus/$Rows$b").filter(d =>
+      !st.exists(s"$d/$NoDataMarker") && st.holdsData(d))
     if (dirs.isEmpty)
       return s.range(0).select(col("id").as("doc_id"),
         lit("").as("source"), lit("").as("lang"), lit("").as("text"))
-    val rows = Tables.parquet(s, dirs, Some(s"$outDir/corpus"))
+    val rows = Tables.parquet(s, dirs.map(d => s"$outDir/$d"), Some(s"$outDir/corpus"))
       .select(col("doc_id"), col("source"), col("lang"), col("text"),
         col("batch_id").cast("long").as("b"))
-    val tombDirs = completeDirs(s, s"$outDir/tombs", "gen=").filter(keep)
-    val alive = if (tombDirs.isEmpty) rows else {
-      val tombs = Tables.parquet(s, tombDirs, Some(s"$outDir/tombs"))
+    val alive = if (tombGens.isEmpty) rows else {
+      val tombs = Tables.parquet(s, tombGens.map(g => s"$outDir/tombs/gen=$g"),
+          Some(s"$outDir/tombs"))
         .select(col("doc_id"), col("gen").cast("long").as("tgen"))
         .groupBy(col("doc_id")).agg(max(col("tgen")).as("tgen"))
       rows.join(tombs, Seq("doc_id"), "left")
@@ -292,16 +270,8 @@ object StreamingCorpus {
     * [[compactCorpus]]), or None if never compacted.
     */
   def compactionHorizon(s: org.apache.spark.sql.SparkSession,
-      outDir: String): Option[Long] = {
-    val f = hfs(s, outDir)
-    val m = new org.apache.hadoop.fs.Path(s"$outDir/corpus/_HORIZON")
-    if (!f.exists(m)) None
-    else {
-      val in = f.open(m)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      finally in.close()
-    }
-  }
+      outDir: String): Option[Long] =
+    store(s, outDir).horizon()
 
   /** AUDIT-grade time travel: the served corpus view as of the END of
     * wave `batchId` (batches and tombstones at or below it). Exact at
@@ -312,26 +282,24 @@ object StreamingCorpus {
     */
   def liveCorpusAt(s: org.apache.spark.sql.SparkSession, outDir: String,
       batchId: Long): DataFrame = {
-    compactionHorizon(s, outDir).foreach { h =>
-      if (batchId < h)
-        throw new IllegalArgumentException(
-          s"liveCorpusAt($batchId) is below the compaction horizon $h: " +
-            "the versions needed to reconstruct it were compacted away")
-    }
-    liveCorpusUpTo(s, outDir, Some(batchId))
+    val st = store(s, outDir)
+    st.refuseBelow("liveCorpusAt", batchId)
+    liveOver(s, st, outDir, st.gens("corpus", prefix = Rows).filter(_ <= batchId),
+      st.gens("tombs").filter(_ <= batchId))
   }
 
   /** Tombstone one wave of doc_ids (takedown / GDPR erasure): rows of
     * every strictly-older batch stop serving at the next [[liveCorpus]]
     * read; bytes leave the disk at [[compactCorpus]]. Idempotent on the
-    * `_SUCCESS` marker.
+    * `_SUCCESS` marker and on the compaction horizon: compaction deleted
+    * a folded wave's marker, and its replay would kill every compacted
+    * row (`batch_id=-1` sorts below any tombstone), revived docs included.
     */
   def deleteBatch(outDir: String)(ids: DataFrame, batchId: Long): Unit = {
-    val s = ids.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(s"$outDir/tombs/gen=$batchId")
-    val f = hfs(s, outDir)
-    if (f.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) return
-    ids.select(col("doc_id")).write.mode("overwrite").parquet(dir.toString)
+    val st = store(ids.sparkSession, outDir)
+    if (st.committed("tombs", batchId) || st.folded(batchId)) return
+    ids.select(col("doc_id")).write.mode("overwrite")
+      .parquet(s"$outDir/tombs/gen=$batchId")
   }
 
   /** Fold one wave of RE-CRAWLED rows `(doc_id, source, lang, text)` in
@@ -341,85 +309,40 @@ object StreamingCorpus {
     * degrades to a takedown (its tombstone lands, no replacement row —
     * the old, passing version must NOT resurface as latest). Commit
     * point = the tombstone marker (last write); the row write before it
-    * replays idempotently.
+    * replays idempotently. A folded wave's replay (at or below the
+    * horizon) skips: its tombstones would kill the compacted rows.
     */
   def updateBatch(outDir: String)(rows: DataFrame, batchId: Long): Unit = {
-    val s = rows.sparkSession
-    val f = hfs(s, outDir)
-    val tombDir = new org.apache.hadoop.fs.Path(s"$outDir/tombs/gen=$batchId")
-    if (f.exists(new org.apache.hadoop.fs.Path(tombDir, "_SUCCESS"))) return
+    val st = store(rows.sparkSession, outDir)
+    if (st.committed("tombs", batchId) || st.folded(batchId)) return
     val wave = rows.select(col("doc_id"), col("source"), col("lang"), col("text"))
       .persist()
     wave.filter(graft.queries.PipelineQueries.qualityGate(col("text")))
       .write.mode("overwrite").partitionBy("lang")
-      .parquet(s"$outDir/corpus/batch_id=$batchId")
-    stampIfEmpty(f, new org.apache.hadoop.fs.Path(s"$outDir/corpus/batch_id=$batchId"))
+      .parquet(s"$outDir/corpus/$Rows$batchId")
+    stampIfEmpty(st, s"corpus/$Rows$batchId")
     wave.select(col("doc_id"))
-      .write.mode("overwrite").parquet(tombDir.toString)
+      .write.mode("overwrite").parquet(s"$outDir/tombs/gen=$batchId")
     wave.unpersist(false)
     ()
   }
 
-  /** Digest-certified corpus compaction: materialize [[liveCorpus]]
-    * into ONE generation (`batch_id=-1`, below any future wave),
-    * certify by an order-independent row digest read back from the
-    * sink, swap with checked renames (rename-back recovery for a crash
-    * between the two renames), then drop the tombstones — bounding the
-    * merge-on-read cost and physically erasing tombstoned bytes (the
-    * GDPR half a lazy delete defers).
+  /** Digest-certified corpus compaction: materialize the live view into
+    * ONE generation (`batch_id=-1`, below any future wave) through
+    * [[GenStore]]'s certified fold-and-swap, then drop the tombstones —
+    * bounding the merge-on-read cost and physically erasing tombstoned
+    * bytes (the GDPR half a lazy delete defers). One captured listing
+    * feeds the fold, its digest, its write and the horizon.
     */
   def compactCorpus(s: org.apache.spark.sql.SparkSession, outDir: String): Unit = {
-    val f = hfs(s, outDir)
-    val liveP = new org.apache.hadoop.fs.Path(s"$outDir/corpus")
-    locally {
-      val oldP = new org.apache.hadoop.fs.Path(s"$outDir/corpus_old")
-      if (!f.exists(liveP) && f.exists(oldP)) f.rename(oldP, liveP)
+    val st = store(s, outDir)
+    if (!st.exists("corpus")) return
+    val batches = st.gens("corpus", prefix = Rows)
+    val tombGens = st.gens("tombs")
+    val live = liveOver(s, st, outDir, batches, tombGens)
+    st.foldAndSwap(Seq("_HORIZON" -> (batches ++ tombGens)), drop = Seq("tombs")) {
+      GenStore.certifiedWrite("corpus", live, s"${st.compacting("corpus")}/$Rows-1",
+        partitionBy = Seq("lang"))
     }
-    if (!f.exists(liveP)) return
-    def digest(df: DataFrame): Long = df
-      .agg(coalesce(
-        pmod(
-          sum(hash(col("doc_id"), col("source"), col("lang"), col("text"))
-            .cast("decimal(38,0)")),
-          lit(1152921504606846976L).cast("decimal(38,0)")).cast("long"),
-        lit(0L)))
-      .collect()(0).getLong(0)
-    val before = digest(liveCorpus(s, outDir))
-    val newDir = s"$outDir/corpus_compacting/batch_id=-1"
-    liveCorpus(s, outDir)
-      .write.mode("overwrite").partitionBy("lang").parquet(newDir)
-    s.catalog.refreshByPath(newDir)
-    // the compaction HORIZON rides the compacting dir so the swap
-    // carries it atomically (liveCorpusAt refuses points below it)
-    locally {
-      val folded =
-        completeDirs(s, s"$outDir/corpus", "batch_id=")
-          .map(p => p.substring(p.lastIndexOf("=") + 1).toLong) ++
-        completeDirs(s, s"$outDir/tombs", "gen=")
-          .map(p => p.substring(p.lastIndexOf("=") + 1).toLong)
-      val horizon = (folded ++ compactionHorizon(s, outDir)).foldLeft(-1L)(math.max)
-      val out = f.create(
-        new org.apache.hadoop.fs.Path(s"$outDir/corpus_compacting/_HORIZON"), true)
-      try out.write(s"$horizon\n".getBytes("UTF-8")) finally out.close()
-    }
-    val after = digest(Tables.parquet(s, newDir)
-      .select(col("doc_id"), col("source"), col("lang"), col("text")))
-    if (before != after)
-      throw new IllegalStateException(
-        s"corpus compaction digest mismatch: $before before, $after read back")
-    def renameOrThrow(from: org.apache.hadoop.fs.Path,
-        to: org.apache.hadoop.fs.Path, rollback: => Unit = ()): Unit =
-      if (!f.rename(from, to)) {
-        rollback
-        throw new IllegalStateException(s"corpus swap: rename $from -> $to failed")
-      }
-    val oldP = new org.apache.hadoop.fs.Path(s"$outDir/corpus_old")
-    f.delete(oldP, true)
-    renameOrThrow(liveP, oldP)
-    renameOrThrow(new org.apache.hadoop.fs.Path(s"$outDir/corpus_compacting"), liveP,
-      rollback = f.rename(oldP, liveP))
-    f.delete(oldP, true)
-    f.delete(new org.apache.hadoop.fs.Path(s"$outDir/tombs"), true)
-    s.catalog.refreshByPath(liveP.toString)
   }
 }

@@ -55,6 +55,7 @@ object StreamingIndex {
     * Returns the cut.
     */
   def buildFrozen(s: SparkSession, sfDir: String, indexDir: String): Long = {
+    store(s, indexDir)
     val cut = TowerMemo.generationCut(s, sfDir)
     val old = Ivf.prep(Tables.embeddings(s, sfDir)).filter(col("vec_id") < cut).persist()
     val cent = Ivf.trainCells(old)
@@ -66,6 +67,12 @@ object StreamingIndex {
     old.unpersist(false)
     cut
   }
+
+  /** The index store, healed ([[GenStore.open]]): `codes` is the
+    * swapped table and carries the horizons.
+    */
+  private def store(s: SparkSession, indexDir: String) =
+    GenStore.open(s, indexDir, "codes")
 
   /** The frozen centroid and codebook states read onto the driver
     * ([[graft.ops.Ivf.local]]), the two collects run concurrently —
@@ -86,9 +93,8 @@ object StreamingIndex {
     */
   def appendBatch(indexDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(s"$indexDir/codes/gen=$batchId")
-    val fs = dir.getFileSystem(s.sessionState.newHadoopConf())
-    if (fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) return
+    val st = store(s, indexDir)
+    if (st.committed("codes", batchId)) return
     // a FOLDED wave's replay (committed on disk, stream checkpoint
     // lost, compaction ran before the restart) finds no marker —
     // compaction deleted its generation — and would re-land DUPLICATE
@@ -97,11 +103,10 @@ object StreamingIndex {
     // stream/sequence), so the guard compares against the highest
     // folded CODES generation, never the mixed as-of horizon
     // (round-14 review + the spec's independent-sequence lesson).
-    if (batchId <= GenStore.readHorizon(
-        s, s"$indexDir/codes/_HORIZON_APPEND").getOrElse(-1L)) return
+    if (st.folded(batchId, "_HORIZON_APPEND")) return
     val (cent, cb) = frozenStates(s, indexDir)
     Pq.codeRows(Pq.ivfadcRows(Ivf.prep(batch), cent, cb))
-      .write.mode("overwrite").parquet(dir.toString)
+      .write.mode("overwrite").parquet(s"$indexDir/codes/gen=$batchId")
   }
 
   /** Start the appender over a streaming `(vec_id, embedding)` frame. */
@@ -123,10 +128,8 @@ object StreamingIndex {
     * Idempotent exactly like [[appendBatch]].
     */
   def deleteBatch(indexDir: String)(ids: DataFrame, batchId: Long): Unit = {
-    val s = ids.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(s"$indexDir/tombs/gen=$batchId")
-    val fs = dir.getFileSystem(s.sessionState.newHadoopConf())
-    if (fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) return
+    val st = store(ids.sparkSession, indexDir)
+    if (st.committed("tombs", batchId)) return
     // folded-wave replay guard for the DELETE sequence (round-15): the
     // "replayed tombstone of an erased id is a no-op" algebra holds only
     // while vec_ids are never re-appended — tombstones apply as an
@@ -136,9 +139,9 @@ object StreamingIndex {
     // re-admitted vector with the same vec_id. Delete batchIds are
     // monotone within their own sequence; compact records the folded
     // tombstone high-water mark as _HORIZON_DELETE.
-    if (batchId <= GenStore.readHorizon(
-        s, s"$indexDir/codes/_HORIZON_DELETE").getOrElse(-1L)) return
-    ids.select(col("vec_id")).write.mode("overwrite").parquet(dir.toString)
+    if (st.folded(batchId, "_HORIZON_DELETE")) return
+    ids.select(col("vec_id")).write.mode("overwrite")
+      .parquet(s"$indexDir/tombs/gen=$batchId")
   }
 
   /** Start the deletion appender over a streaming `(vec_id)` frame. */
@@ -153,13 +156,8 @@ object StreamingIndex {
       }
       .start()
 
-  private def tombsExist(s: SparkSession, indexDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/tombs")
-    p.getFileSystem(s.sessionState.newHadoopConf()).exists(p)
-  }
-
   /** Code rows over an explicit committed-generation list — the single
-    * read body [[liveCodes]], [[codesAsOf]], and [[compact]] share.
+    * read body [[liveCodes]], [[searchAtTopK]], and [[compact]] share.
     * COMMITTED dirs only (round-15, the r14 advice): a marker-less
     * crash leftover holds partial part-files that nothing guards — if a
     * raw read folded them into `gen=-1`, the wave's replay (which the
@@ -195,10 +193,11 @@ object StreamingIndex {
     * minus the COMMITTED tombstoned ids (a dup-free anti-join —
     * tombstones are vec_id-grained, codes are (vec_id, m)-grained).
     */
-  def liveCodes(s: SparkSession, indexDir: String): DataFrame =
-    minusTombs(
-      codesOver(s, indexDir, GenStore.completeGenIds(s, s"$indexDir/codes")),
-      tombsOver(s, indexDir, GenStore.completeGenIds(s, s"$indexDir/tombs")))
+  def liveCodes(s: SparkSession, indexDir: String): DataFrame = {
+    val st = store(s, indexDir)
+    minusTombs(codesOver(s, indexDir, st.gens("codes")),
+      tombsOver(s, indexDir, st.gens("tombs")))
+  }
 
   // ---- AS-OF serving (round-14, VERDICT r13 #7): the labelsAt /
   // liveCorpusAt pattern over code generations — the index's state as
@@ -206,24 +205,12 @@ object StreamingIndex {
   // horizon, failing loudly below it (compaction materializes the live
   // set and drops the tombstones, so older points are gone).
 
-  /** Code rows as of the END of wave `batchId`: committed code
-    * generations ≤ batchId (the compacted `gen=-1` sorts below any
-    * wave) minus ids tombstoned at or below it.
-    */
-  private def codesAsOf(s: SparkSession, indexDir: String,
-      batchId: Long): DataFrame =
-    minusTombs(
-      codesOver(s, indexDir,
-        GenStore.completeGenIds(s, s"$indexDir/codes").filter(_ <= batchId)),
-      tombsOver(s, indexDir,
-        GenStore.completeGenIds(s, s"$indexDir/tombs").filter(_ <= batchId)))
-
   /** The compaction horizon (highest wave folded by [[compact]]), or
     * None if never compacted. As-of reads below it are
     * unreconstructible.
     */
   def compactionHorizon(s: SparkSession, indexDir: String): Option[Long] =
-    GenStore.readHorizon(s, s"$indexDir/codes/_HORIZON")
+    store(s, indexDir).horizon()
 
   /** AUDIT-grade as-of search: [[searchTopK]]'s exact plan over the
     * index state as of the END of wave `batchId`. Exact at or above
@@ -233,13 +220,14 @@ object StreamingIndex {
     */
   def searchAtTopK(s: SparkSession, sfDir: String, indexDir: String,
       batchId: Long, k: Int = 5): DataFrame = {
-    compactionHorizon(s, indexDir).foreach { h =>
-      if (batchId < h)
-        throw new IllegalArgumentException(
-          s"searchAtTopK($batchId) is below the compaction horizon $h: " +
-            "the code/tombstone history needed to reconstruct it was compacted away")
-    }
-    searchOver(s, sfDir, codesAsOf(s, indexDir, batchId), indexDir, k)
+    val st = store(s, indexDir)
+    st.refuseBelow("searchAtTopK", batchId)
+    // committed code generations ≤ batchId (the compacted `gen=-1` sorts
+    // below any wave) minus ids tombstoned at or below it
+    val codes = minusTombs(
+      codesOver(s, indexDir, st.gens("codes").filter(_ <= batchId)),
+      tombsOver(s, indexDir, st.gens("tombs").filter(_ <= batchId)))
+    searchOver(s, sfDir, codes, indexDir, k)
   }
 
   /** Digest-certified compaction: rewrite the codes table to exactly
@@ -252,103 +240,26 @@ object StreamingIndex {
     * on any digest mismatch.
     */
   def compact(s: SparkSession, indexDir: String): Unit = {
-    // recover a prior hard crash inside the swap window (codes renamed
-    // aside, replacement not yet in place): restore the old table and
-    // fall through to a fresh compaction. Runs before any read below.
-    locally {
-      val conf0 = s.sessionState.newHadoopConf()
-      val codes0 = new org.apache.hadoop.fs.Path(s"$indexDir/codes")
-      val fs0 = codes0.getFileSystem(conf0)
-      val old0 = new org.apache.hadoop.fs.Path(s"$indexDir/codes_old")
-      if (!fs0.exists(codes0) && fs0.exists(old0)) fs0.rename(old0, codes0)
-    }
-    // coalesce: an index whose every vector was tombstoned has an EMPTY
-    // live set — sum() is null there, and the empty-to-empty compaction
-    // must still certify (0 == 0), not NPE. The sum runs through
-    // decimal(38,0) reduced mod 2^60 — a raw BIGINT sum of 32-bit hashes
-    // would overflow-THROW under ANSI mode at ~2^32 rows (the wrapping-
-    // digest discipline every other digest in the repo follows).
-    def digest(df: DataFrame): Long = df
-      .agg(coalesce(
-        pmod(
-          sum(hash(col("vec_id"), col("m"), col("cid"), col("cell"))
-            .cast("decimal(38,0)")),
-          lit(1152921504606846976L).cast("decimal(38,0)")).cast("long"),
-        lit(0L)))
-      .collect()(0).getLong(0)
+    val st = store(s, indexDir)
     // ONE committed-generation listing feeds the fold, the digest, the
-    // write, AND the horizon (single-listing rule, round-15: the r14
-    // code listed gens once for the horizon but built liveCodes twice —
-    // digest and write — each with its own file listing, so a wave
-    // committed concurrently could be claimed-but-not-folded or
-    // folded-but-not-claimed). Compaction runs BETWEEN waves —
-    // maybeCompact's slot in a serving loop — so this listing is the
-    // complete fold set; the `live` frame below resolves its file index
-    // from exactly these dirs at creation and both actions reuse it.
-    val foldedCodes = GenStore.completeGenIds(s, s"$indexDir/codes")
-    val foldedTombs = GenStore.completeGenIds(s, s"$indexDir/tombs")
-    val foldedGens = foldedCodes ++ foldedTombs
+    // write, AND the horizons (the single-listing rule: a re-listing
+    // could claim a concurrently committed wave as folded, or fold one
+    // it does not claim). The `live` frame resolves its file index from
+    // exactly these dirs at creation and both actions reuse it.
+    val foldedCodes = st.gens("codes")
+    val foldedTombs = st.gens("tombs")
     val live = minusTombs(codesOver(s, indexDir, foldedCodes),
       tombsOver(s, indexDir, foldedTombs))
-    val before = digest(live)
-    val newDir = s"$indexDir/codes_compacting/gen=-1"
-    live.write.mode("overwrite").parquet(newDir)
-    // the same scratch path is re-read across successive compacts in
-    // one session — drop any stale FileStatusCache listing first
-    s.catalog.refreshByPath(newDir)
-    // the compaction HORIZON rides the compacting dir so the swap
-    // carries it atomically (the StreamingLabels discipline): highest
-    // wave folded in — code gens, tombstone gens, any prior horizon.
-    // searchAtTopK refuses points below it.
-    GenStore.writeHorizon(s, s"$indexDir/codes_compacting/_HORIZON",
-      (foldedGens ++ compactionHorizon(s, indexDir)).foldLeft(-1L)(math.max))
-    // the APPEND sequence's own high-water mark (appendBatch's replay
-    // guard — the sequences are independent, so the mixed as-of horizon
-    // must not gate appends); same captured listing, single-listing rule
-    GenStore.writeHorizon(s, s"$indexDir/codes_compacting/_HORIZON_APPEND",
-      (foldedCodes ++ GenStore.readHorizon(s, s"$indexDir/codes/_HORIZON_APPEND"))
-        .foldLeft(-1L)(math.max))
-    // and the DELETE sequence's (deleteBatch's replay guard — round-15,
-    // the r14 advice: a replayed tombstone of a compacted-away id is a
-    // no-op only while that vec_id is never re-APPENDED; tombstones
-    // apply as an unordered distinct anti-join, so a post-compaction
-    // replay of an old delete wave would kill a re-admitted vector with
-    // the same vec_id. Same captured listing — single-listing rule.)
-    GenStore.writeHorizon(s, s"$indexDir/codes_compacting/_HORIZON_DELETE",
-      (foldedTombs ++ GenStore.readHorizon(s, s"$indexDir/codes/_HORIZON_DELETE"))
-        .foldLeft(-1L)(math.max))
-    val after = digest(Tables.parquet(s, newDir))
-    if (before != after)
-      throw new IllegalStateException(
-        s"compaction digest mismatch: $before before, $after read back")
-    val conf = s.sessionState.newHadoopConf()
-    val codes = new org.apache.hadoop.fs.Path(s"$indexDir/codes")
-    val fs = codes.getFileSystem(conf)
-    // crash-recoverable swap: rename the live table aside, rename the
-    // certified replacement into place, THEN delete. Every rename is
-    // CHECKED — Hadoop FileSystem.rename signals failure by returning
-    // false, and an unchecked first rename would cascade into deleting
-    // the tombstones under the UN-compacted codes (deleted vectors
-    // resurrecting). A failed second rename rolls the first back, so an
-    // exception path always leaves a live codes dir; a hard CRASH
-    // between the renames leaves codes_old + codes_compacting, which
-    // the recovery at the top of the next compact() restores.
-    def renameOrThrow(from: org.apache.hadoop.fs.Path,
-        to: org.apache.hadoop.fs.Path, rollback: => Unit = ()): Unit =
-      if (!fs.rename(from, to)) {
-        rollback
-        throw new IllegalStateException(s"compaction swap: rename $from -> $to failed")
-      }
-    val codesOld = new org.apache.hadoop.fs.Path(s"$indexDir/codes_old")
-    fs.delete(codesOld, true) // stale leftover from a prior crashed swap
-    renameOrThrow(codes, codesOld)
-    renameOrThrow(new org.apache.hadoop.fs.Path(s"$indexDir/codes_compacting"), codes,
-      rollback = fs.rename(codesOld, codes))
-    fs.delete(codesOld, true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/tombs"), true)
-    // the old codes path was read this session — drop the FileStatusCache
-    // entry so the next read sees the swapped files (round-6 lesson)
-    s.catalog.refreshByPath(s"$indexDir/codes")
+    // three horizons: the mixed as-of one searchAtTopK enforces, and one
+    // per INDEPENDENT batchId sequence for the replay guards — appends
+    // (appendBatch) and deletes (deleteBatch: tombstones apply as an
+    // unordered distinct anti-join, so a post-compaction replay of an old
+    // delete wave would kill a re-admitted vector with the same vec_id)
+    st.foldAndSwap(Seq("_HORIZON" -> (foldedCodes ++ foldedTombs),
+        "_HORIZON_APPEND" -> foldedCodes, "_HORIZON_DELETE" -> foldedTombs),
+        drop = Seq("tombs")) {
+      GenStore.certifiedWrite("index", live, s"${st.compacting("codes")}/gen=-1")
+    }
   }
 
   /** Compaction scheduling policy — the storage half of the rebuild
@@ -360,35 +271,26 @@ object StreamingIndex {
     *    dirs (per-probe file-listing and small-file overhead — each
     *    micro-batch appends its own dir, so a long-running stream
     *    fragments without a bound).
-    * Both probes read metadata-scale state only: one dir listing and
+    * Both probes read metadata-scale state only: one listing and
     * two distinct-counts (tombstone population vs code ids — bounded by
     * the id populations, never the (id × m) code mass).
     */
   def compactionDue(s: SparkSession, indexDir: String,
       maxTombRatio: Double = 0.25, maxGens: Int = 8): Boolean = {
-    val codes = new org.apache.hadoop.fs.Path(s"$indexDir/codes")
-    val fs = codes.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(codes)) {
-      // codes missing is EITHER "nothing built" (no codes_old either →
-      // nothing to compact) OR the post-crash mid-swap state (codes
-      // renamed aside, replacement not yet in place). The latter must
-      // report DUE so a serving loop driving recovery purely through
-      // maybeCompact reaches compact()'s rename-back recovery — without
-      // this branch the index would stay unreadable until someone
-      // called compact() directly (round-10 advice, spec-driven).
-      return fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/codes_old"))
-    }
-    val gens = fs.listStatus(codes)
-      .count(st => st.isDirectory && st.getPath.getName.startsWith("gen="))
-    if (gens > maxGens) return true
-    if (!tombsExist(s, indexDir)) return false
+    // the post-crash mid-swap state (codes renamed aside, replacement
+    // not yet in place) reports DUE, so a serving loop driving recovery
+    // purely through maybeCompact reaches compact; probed before
+    // anything opens (and so heals) the store
+    if (GenStore.torn(s, indexDir, "codes")) return true
+    val st = store(s, indexDir)
+    if (!st.exists("codes")) return false // nothing built
+    val codeGens = st.gens("codes")
+    if (codeGens.size > maxGens) return true
     // committed generations only (the liveCodes rule): a marker-less
     // crash leftover may hold no readable parquet at all
-    val nTomb = tombsOver(s, indexDir,
-      GenStore.completeGenIds(s, s"$indexDir/tombs")).fold(0L)(_.count())
+    val nTomb = tombsOver(s, indexDir, st.gens("tombs")).fold(0L)(_.count())
     if (nTomb == 0) return false
-    val nIds = codesOver(s, indexDir,
-      GenStore.completeGenIds(s, s"$indexDir/codes"))
+    val nIds = codesOver(s, indexDir, codeGens)
       .select(col("vec_id")).distinct().count()
     // an all-tombstoned index (nIds counts pre-delete appends, so it is
     // never 0 when nTomb > 0) compacts unconditionally

@@ -64,20 +64,23 @@ object StreamingLabels {
   private def path(parts: String*) =
     new org.apache.hadoop.fs.Path(parts.mkString("/"))
 
-  /** COMPLETE generations only — a dir without its `_SUCCESS` marker is
-    * a crashed or in-flight write (overwrite mode even empties the dir
-    * first), and exposing it would hand readers a partial label table;
-    * they must fall back to the last complete generation instead.
+  /** The label store, healed ([[GenStore.open]]): the pair log is the
+    * swapped table and carries the horizon. Label generations live at
+    * the root (table ""), the pair log, tombstones and revives under
+    * their own tables. COMPLETE generations only — a dir without its
+    * `_SUCCESS` marker is a crashed or in-flight write (overwrite mode
+    * even empties the dir first), and exposing it would hand readers a
+    * partial table; they fall back to the last complete generation.
     */
-  private def gens(s: SparkSession, labelDir: String): Seq[Long] = {
-    val p = path(labelDir)
-    val f = hfs(s, labelDir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen=") &&
-        f.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("gen=").toLong)
-  }
+  private def store(s: SparkSession, labelDir: String) =
+    GenStore.open(s, labelDir, "pairlog")
+
+  /** Generation ids strictly before `before` (all when empty). */
+  private def below(gens: Seq[Long], before: Option[Long]): Seq[Long] =
+    gens.filter(g => before.forall(g < _))
+
+  private def genPaths(labelDir: String, sub: String, gens: Seq[Long]) =
+    gens.map(g => s"$labelDir/$sub/gen=$g")
 
   private def partsOf(s: SparkSession, labelDir: String, g: Long): Seq[String] = {
     val f = hfs(s, labelDir)
@@ -95,22 +98,17 @@ object StreamingLabels {
     * directly keeps the schema at `(id, lbl)` — no partition column is
     * inferred for the roots themselves.
     */
-  private def labelsAsOf(s: SparkSession, labelDir: String,
+  private def labelsAsOf(s: SparkSession, st: GenStore.Store, labelDir: String,
       before: Option[Long]): DataFrame = {
-    val gs = gens(s, labelDir).filter(g => before.forall(g < _)).sorted
     // newest gen per bucket: ascending fold, later gens overwrite. An
     // EMPTY part dir (a delete wave that emptied the bucket) still
     // claims "latest" — it masks the older copy — but contributes no
     // read path (parquet cannot infer schema from zero files).
     val latest = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    for (g <- gs; p <- partsOf(s, labelDir, g)) latest(p) = g
-    val f = hfs(s, labelDir)
-    val readable = latest.toSeq.map { case (p, g) => s"$labelDir/gen=$g/$p" }
-      .filter(dir => f.listStatus(path(dir))
-        .exists(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".")))
+    for (g <- below(st.gens(""), before); p <- partsOf(s, labelDir, g)) latest(p) = g
+    val readable = latest.toSeq.map { case (p, g) => s"gen=$g/$p" }.filter(st.holdsData)
     if (readable.isEmpty) emptyLabels(s)
-    else Tables.parquet(s, readable).select(col("id"), col("lbl"))
+    else Tables.parquet(s, readable.map(d => s"$labelDir/$d")).select(col("id"), col("lbl"))
   }
 
   /** The current label table `(id, lbl)` — per bucket, the newest
@@ -120,7 +118,41 @@ object StreamingLabels {
     * materialize it first.
     */
   def labels(s: SparkSession, labelDir: String): DataFrame =
-    labelsAsOf(s, labelDir, None)
+    labelsAsOf(s, store(s, labelDir), labelDir, None)
+
+  /** Per-id LATEST tombstone generation over `tombGens` — empty-schema
+    * `(id, tgen)` frame when there are none.
+    */
+  private def latestTombs(s: SparkSession, labelDir: String,
+      tombGens: Seq[Long]): DataFrame =
+    if (tombGens.isEmpty)
+      s.range(0).select(col("id"), col("id").as("tgen"))
+    else Tables.parquet(s, genPaths(labelDir, "tombs", tombGens), Some(s"$labelDir/tombs"))
+      .select(col("id"), col("gen").cast("long").as("tgen"))
+      .groupBy(col("id")).agg(max(col("tgen")).as("tgen"))
+
+  /** Ids that are dead AS OF `before` for INGESTION purposes: latest
+    * tombstone not superseded by a later-or-same-wave revive
+    * ([[updateBatch]] writes both at one batchId — a re-crawled doc is
+    * tombstoned for its OLD pairs yet alive for new ones). A plain
+    * delete history has no revives, so this is exactly the old
+    * "any tombstoned id" set there.
+    */
+  private def deadIdsAsOf(s: SparkSession, st: GenStore.Store, labelDir: String,
+      before: Option[Long]): DataFrame = {
+    val revGens = below(st.gens("revives"), before)
+    val tombs = latestTombs(s, labelDir, below(st.gens("tombs"), before))
+    if (revGens.isEmpty) tombs.select(col("id"))
+    else {
+      val rev = Tables.parquet(s, genPaths(labelDir, "revives", revGens),
+          Some(s"$labelDir/revives"))
+        .select(col("id"), col("gen").cast("long").as("rgen"))
+        .groupBy(col("id")).agg(max(col("rgen")).as("rgen"))
+      tombs.join(rev, Seq("id"), "left")
+        .filter(col("rgen").isNull || col("rgen") < col("tgen"))
+        .select(col("id"))
+    }
+  }
 
   /** The verified-pair LOG as of generations strictly before `before` —
     * the state that makes DELETE waves possible: [[graft.ops.Dedup.deleteLabels]]
@@ -133,56 +165,18 @@ object StreamingLabels {
     * periodically folds the generations into one and drops the
     * tombstones so the anti-join's dead side stays bounded.
     */
-  private def completeGenDirs(s: SparkSession, labelDir: String, sub: String,
-      before: Option[Long]): Seq[String] = {
-    val f = hfs(s, labelDir)
-    val p = path(labelDir, sub)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen=") &&
-        st.getPath.getName.stripPrefix("gen=").toLong < before.getOrElse(Long.MaxValue) &&
-        f.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.toString)
-  }
-
-  /** Per-id LATEST tombstone generation strictly before `before` —
-    * empty-schema `(id, tgen)` frame when no tombstones exist.
-    */
-  private def latestTombs(s: SparkSession, labelDir: String,
-      before: Option[Long]): DataFrame = {
-    val tombGens = completeGenDirs(s, labelDir, "tombs", before)
-    if (tombGens.isEmpty)
-      s.range(0).select(col("id"), col("id").as("tgen"))
-    else Tables.parquet(s, tombGens, Some(s"$labelDir/tombs"))
-      .select(col("id"), col("gen").cast("long").as("tgen"))
-      .groupBy(col("id")).agg(max(col("tgen")).as("tgen"))
-  }
-
-  /** Ids that are dead AS OF `before` for INGESTION purposes: latest
-    * tombstone not superseded by a later-or-same-wave revive
-    * ([[updateBatch]] writes both at one batchId — a re-crawled doc is
-    * tombstoned for its OLD pairs yet alive for new ones). A plain
-    * delete history has no revives, so this is exactly the old
-    * "any tombstoned id" set there.
-    */
-  private def deadIdsAsOf(s: SparkSession, labelDir: String,
-      before: Option[Long]): DataFrame = {
-    val revGens = completeGenDirs(s, labelDir, "revives", before)
-    val tombs = latestTombs(s, labelDir, before)
-    if (revGens.isEmpty) tombs.select(col("id"))
-    else {
-      val rev = Tables.parquet(s, revGens, Some(s"$labelDir/revives"))
-        .select(col("id"), col("gen").cast("long").as("rgen"))
-        .groupBy(col("id")).agg(max(col("rgen")).as("rgen"))
-      tombs.join(rev, Seq("id"), "left")
-        .filter(col("rgen").isNull || col("rgen") < col("tgen"))
-        .select(col("id"))
-    }
-  }
-
   private[streaming] def livePairsAsOf(s: SparkSession, labelDir: String,
       before: Option[Long]): DataFrame = {
-    val logGens = completeGenDirs(s, labelDir, "pairlog", before)
+    val st = store(s, labelDir)
+    pairsOver(s, labelDir, below(st.gens("pairlog"), before),
+      below(st.gens("tombs"), before))
+  }
+
+  /** The live pair log over explicit pair-log and tombstone generations
+    * — the single fold body the reads and [[compactPairLog]] share.
+    */
+  private def pairsOver(s: SparkSession, labelDir: String, logGens: Seq[Long],
+      tombGens: Seq[Long]): DataFrame = {
     if (logGens.isEmpty)
       return s.range(0).select(col("id").as("da"), col("id").as("db"))
     // pair liveness is GENERATION-ORDERED: a pair written at gen g dies
@@ -192,9 +186,10 @@ object StreamingLabels {
     // tombstone naming it); the strictness is what lets an update wave
     // co-commit tombstones (killing the old content's pairs) and the
     // re-crawled content's pairs at ONE batchId.
-    val pairs = Tables.parquet(s, logGens, Some(s"$labelDir/pairlog"))
+    val pairs = Tables.parquet(s, genPaths(labelDir, "pairlog", logGens),
+        Some(s"$labelDir/pairlog"))
       .select(col("da"), col("db"), col("gen").cast("long").as("pgen"))
-    val tombs = latestTombs(s, labelDir, before)
+    val tombs = latestTombs(s, labelDir, tombGens)
     pairs
       .join(tombs.select(col("id").as("da"), col("tgen").as("ta")), Seq("da"), "left")
       .join(tombs.select(col("id").as("db"), col("tgen").as("tb")), Seq("db"), "left")
@@ -215,16 +210,8 @@ object StreamingLabels {
     * MATERIALIZES the liveness filter and drops the tombstones, so the
     * history needed to replay an older point is gone.
     */
-  def compactionHorizon(s: SparkSession, labelDir: String): Option[Long] = {
-    val f = hfs(s, labelDir)
-    val m = path(labelDir, "pairlog", "_HORIZON")
-    if (!f.exists(m)) None
-    else {
-      val in = f.open(m)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      finally in.close()
-    }
-  }
+  def compactionHorizon(s: SparkSession, labelDir: String): Option[Long] =
+    store(s, labelDir).horizon()
 
   /** AUDIT-grade time travel: the label table as of the END of wave
     * `batchId`, recomputed from the pair log (one closure over
@@ -235,83 +222,34 @@ object StreamingLabels {
     * audit must fail loudly, not return a silently-wrong table).
     */
   def labelsAt(s: SparkSession, labelDir: String, batchId: Long): DataFrame = {
-    compactionHorizon(s, labelDir).foreach { h =>
-      if (batchId < h)
-        throw new IllegalArgumentException(
-          s"labelsAt($batchId) is below the compaction horizon $h: " +
-            "the pair-log history needed to reconstruct it was compacted away")
-    }
+    store(s, labelDir).refuseBelow("labelsAt", batchId)
     graft.ops.Dedup.fromPairs(livePairsAsOf(s, labelDir, Some(batchId + 1)))
   }
 
-  /** Digest-certified pair-log compaction — [[StreamingIndex.compact]]'s
-    * discipline applied to the edge log: fold every generation into one
-    * (`gen=-1`, which sorts below any future batchId), MATERIALIZE the
-    * tombstone filter into it, certify with an order-independent row
-    * digest read back from the sink's actual files, swap with checked
-    * renames (rollback on failure, rename-back recovery for a hard
-    * crash between the two renames), then drop the tombstone dirs —
-    * this is what bounds the per-wave anti-join, which otherwise grows
-    * with the whole delete history. Call BETWEEN waves (the serving
-    * loop's maybeCompact slot): committed waves never replay (their
-    * markers skip), so dropping the tombstones cannot resurrect
-    * anything a replay could reintroduce; a pair naming a compacted-
-    * away id that arrives AFTER compaction is a genuinely new
-    * observation (the document re-entering the corpus) and is admitted
-    * as such.
+  /** Digest-certified pair-log compaction through [[GenStore]]'s
+    * fold-and-swap: fold every generation into one (`gen=-1`, which
+    * sorts below any future batchId), MATERIALIZE the tombstone filter
+    * into it, certify it against the files read back, swap, then drop
+    * the tombstone and revive dirs — this is what bounds the per-wave
+    * anti-join, which otherwise grows with the whole delete history. One
+    * captured listing feeds the fold, its digest, its write and the
+    * horizon (the highest wave folded: pairs, tombs or revives — a
+    * deletion is history too). Call BETWEEN waves (the serving loop's
+    * maybeCompact slot): committed waves never replay (their markers
+    * skip), so dropping the tombstones cannot resurrect anything a
+    * replay could reintroduce; a pair naming a compacted-away id that
+    * arrives AFTER compaction is a genuinely new observation (the
+    * document re-entering the corpus) and is admitted as such.
     */
   def compactPairLog(s: SparkSession, labelDir: String): Unit = {
-    val f = hfs(s, labelDir)
-    val logP = path(labelDir, "pairlog")
-    // recover a prior crash inside the swap window first
-    locally {
-      val oldP = path(labelDir, "pairlog_old")
-      if (!f.exists(logP) && f.exists(oldP)) f.rename(oldP, logP)
+    val st = store(s, labelDir)
+    if (!st.exists("pairlog")) return
+    val Seq(log, tombs, revives) = Seq("pairlog", "tombs", "revives").map(st.gens(_))
+    val live = pairsOver(s, labelDir, log, tombs)
+    st.foldAndSwap(Seq("_HORIZON" -> (log ++ tombs ++ revives)),
+        drop = Seq("tombs", "revives")) {
+      GenStore.certifiedWrite("pair-log", live, s"${st.compacting("pairlog")}/gen=-1")
     }
-    if (!f.exists(logP)) return
-    def digest(df: DataFrame): Long = df
-      .agg(coalesce(
-        pmod(
-          sum(hash(col("da"), col("db")).cast("decimal(38,0)")),
-          lit(1152921504606846976L).cast("decimal(38,0)")).cast("long"),
-        lit(0L)))
-      .collect()(0).getLong(0)
-    val before = digest(livePairsAsOf(s, labelDir, None))
-    val newDir = s"$labelDir/pairlog_compacting/gen=-1"
-    livePairsAsOf(s, labelDir, None).write.mode("overwrite").parquet(newDir)
-    s.catalog.refreshByPath(newDir)
-    // the compaction HORIZON rides the compacting dir so the swap
-    // carries it atomically: the highest wave folded in (pairs, tombs,
-    // or revives — a deletion is history too), floored at any prior
-    // horizon. As-of reads below it are unreconstructible and
-    // labelsAt refuses them.
-    locally {
-      val folded = Seq("pairlog", "tombs", "revives")
-        .flatMap(sub => completeGenDirs(s, labelDir, sub, None))
-        .map(p => p.substring(p.lastIndexOf("gen=") + 4).toLong)
-      val horizon = (folded ++ compactionHorizon(s, labelDir)).foldLeft(-1L)(math.max)
-      val out = f.create(path(labelDir, "pairlog_compacting", "_HORIZON"), true)
-      try out.write(s"$horizon\n".getBytes("UTF-8")) finally out.close()
-    }
-    val after = digest(Tables.parquet(s, newDir))
-    if (before != after)
-      throw new IllegalStateException(
-        s"pair-log compaction digest mismatch: $before before, $after read back")
-    def renameOrThrow(from: org.apache.hadoop.fs.Path,
-        to: org.apache.hadoop.fs.Path, rollback: => Unit = ()): Unit =
-      if (!f.rename(from, to)) {
-        rollback
-        throw new IllegalStateException(s"pair-log swap: rename $from -> $to failed")
-      }
-    val oldP = path(labelDir, "pairlog_old")
-    f.delete(oldP, true) // stale leftover from a prior crashed swap
-    renameOrThrow(logP, oldP)
-    renameOrThrow(path(labelDir, "pairlog_compacting"), logP,
-      rollback = f.rename(oldP, logP))
-    f.delete(oldP, true)
-    f.delete(path(labelDir, "tombs"), true)
-    f.delete(path(labelDir, "revives"), true)
-    s.catalog.refreshByPath(logP.toString)
   }
 
   /** EXACT changed-row bucket derivation WITHOUT a table×table join —
@@ -392,18 +330,17 @@ object StreamingLabels {
   def mergeBatch(labelDir: String, parts: Int = DefaultParts)(
       pairs: DataFrame, batchId: Long): Unit = {
     val s = pairs.sparkSession
-    val f = hfs(s, labelDir)
-    val genDir = path(labelDir, s"gen=$batchId")
-    if (f.exists(new org.apache.hadoop.fs.Path(genDir, "_SUCCESS"))) return
+    val st = store(s, labelDir)
+    if (st.committed("", batchId)) return
     val p = pinnedParts(s, labelDir, parts)
     val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def hold(df: DataFrame) = { locals += df.persist(); df }
-    val old = hold(labelsAsOf(s, labelDir, Some(batchId)))
+    val old = hold(labelsAsOf(s, st, labelDir, Some(batchId)))
     // drop pairs naming a CURRENTLY-dead doc: a duplicate/replayed
     // emission must not resurrect a tombstoned vertex's membership. An
     // id whose latest tombstone was co-committed with a revive (an
     // update wave) is alive again — its new pairs are legit arrivals.
-    val dead = deadIdsAsOf(s, labelDir, Some(batchId))
+    val dead = deadIdsAsOf(s, st, labelDir, Some(batchId))
     val wave = hold(pairs.select(col("da"), col("db"))
       .join(dead.select(col("id").as("da")), Seq("da"), "left_anti")
       .join(dead.select(col("id").as("db")), Seq("db"), "left_anti")
@@ -411,9 +348,8 @@ object StreamingLabels {
     // pair-log append FIRST (it feeds future delete waves; writing it
     // before the label gen keeps the label marker the commit point — a
     // crash between the two replays into a log-skip + label recompute)
-    val logDir = path(labelDir, s"pairlog/gen=$batchId")
-    if (!f.exists(new org.apache.hadoop.fs.Path(logDir, "_SUCCESS")))
-      wave.write.mode("overwrite").parquet(logDir.toString)
+    if (!st.committed("pairlog", batchId))
+      wave.write.mode("overwrite").parquet(s"$labelDir/pairlog/gen=$batchId")
     // persisted: the touched-bucket probe and the bucket-filtered write
     // both read the merged table (invariant 6)
     val md = graft.ops.Dedup.mergeLabelsDelta(old, wave, track = hold)
@@ -431,9 +367,9 @@ object StreamingLabels {
     // read by this write, never reopened, never rewritten
     merged.filter(if (touched.isEmpty) lit(false)
         else col("part").isin(touched.map(java.lang.Long.valueOf): _*))
-      .write.mode("overwrite").partitionBy("part").parquet(genDir.toString)
+      .write.mode("overwrite").partitionBy("part").parquet(s"$labelDir/gen=$batchId")
     locals.foreach(_.unpersist(false))
-    retireSuperseded(s, labelDir, batchId)
+    retireSuperseded(s, st, labelDir, batchId)
   }
 
   /** Fold one wave of document DELETIONS into the label table: affected
@@ -457,14 +393,14 @@ object StreamingLabels {
   def deleteBatch(labelDir: String, parts: Int = DefaultParts)(
       ids: DataFrame, batchId: Long): Unit = {
     val s = ids.sparkSession
+    val st = store(s, labelDir)
+    if (st.committed("tombs", batchId)) return
     val f = hfs(s, labelDir)
-    val tombDir = path(labelDir, s"tombs/gen=$batchId")
-    if (f.exists(new org.apache.hadoop.fs.Path(tombDir, "_SUCCESS"))) return
     val p = pinnedParts(s, labelDir, parts)
     val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def hold(df: DataFrame) = { locals += df.persist(); df }
     val del = hold(ids.select(col("id")))
-    val old = hold(labelsAsOf(s, labelDir, Some(batchId)))
+    val old = hold(labelsAsOf(s, st, labelDir, Some(batchId)))
     val dd = graft.ops.Dedup.deleteLabelsDelta(
       old, livePairsAsOf(s, labelDir, Some(batchId)), del, track = hold)
     val live = hold(dd.labels
@@ -488,9 +424,9 @@ object StreamingLabels {
       val pd = path(labelDir, s"gen=$batchId", s"part=$b")
       if (!f.exists(pd)) f.mkdirs(pd)
     }
-    del.write.mode("overwrite").parquet(tombDir.toString)
+    del.write.mode("overwrite").parquet(s"$labelDir/tombs/gen=$batchId")
     locals.foreach(_.unpersist(false))
-    retireSuperseded(s, labelDir, batchId)
+    retireSuperseded(s, st, labelDir, batchId)
   }
 
   /** Fold one wave of document UPDATES (the re-crawl — q157's operator
@@ -533,17 +469,17 @@ object StreamingLabels {
   def updateBatch(labelDir: String, parts: Int = DefaultParts)(
       ids: DataFrame, pairs: DataFrame, batchId: Long): Unit = {
     val s = ids.sparkSession
+    val st = store(s, labelDir)
+    if (st.committed("revives", batchId)) return
     val f = hfs(s, labelDir)
-    val revDir = path(labelDir, s"revives/gen=$batchId")
-    if (f.exists(new org.apache.hadoop.fs.Path(revDir, "_SUCCESS"))) return
     val p = pinnedParts(s, labelDir, parts)
     val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def hold(df: DataFrame) = { locals += df.persist(); df }
     val upd = hold(ids.select(col("id")))
-    val old = hold(labelsAsOf(s, labelDir, Some(batchId)))
+    val old = hold(labelsAsOf(s, st, labelDir, Some(batchId)))
     // third-party guard: drop new pairs whose OTHER endpoint is dead
     // and not being revived by this very wave
-    val dead = deadIdsAsOf(s, labelDir, Some(batchId))
+    val dead = deadIdsAsOf(s, st, labelDir, Some(batchId))
       .join(upd, Seq("id"), "left_anti")
     val wave = hold(pairs.select(col("da"), col("db"))
       .join(dead.select(col("id").as("da")), Seq("da"), "left_anti")
@@ -551,9 +487,8 @@ object StreamingLabels {
       .select(col("da"), col("db")))
     // pair-log append FIRST (the mergeBatch discipline — the revives
     // marker is the commit point, everything earlier replays)
-    val logDir = path(labelDir, s"pairlog/gen=$batchId")
-    if (!f.exists(new org.apache.hadoop.fs.Path(logDir, "_SUCCESS")))
-      wave.write.mode("overwrite").parquet(logDir.toString)
+    if (!st.committed("pairlog", batchId))
+      wave.write.mode("overwrite").parquet(s"$labelDir/pairlog/gen=$batchId")
     // held: mergeLabels reads its `old` side three times (invariant 6)
     val dd = graft.ops.Dedup.deleteLabelsDelta(
       old, livePairsAsOf(s, labelDir, Some(batchId)), upd, track = hold)
@@ -584,9 +519,9 @@ object StreamingLabels {
     }
     upd.write.mode("overwrite").parquet(
       path(labelDir, s"tombs/gen=$batchId").toString)
-    upd.write.mode("overwrite").parquet(revDir.toString)
+    upd.write.mode("overwrite").parquet(s"$labelDir/revives/gen=$batchId")
     locals.foreach(_.unpersist(false))
-    retireSuperseded(s, labelDir, batchId)
+    retireSuperseded(s, st, labelDir, batchId)
   }
 
   /** Two-step retirement: a complete generation whose every bucket has
@@ -595,10 +530,10 @@ object StreamingLabels {
     * the stamp — never the stamping wave itself, so lazy readers from
     * before the superseding wave get one full wave to materialize.
     */
-  private def retireSuperseded(s: SparkSession, labelDir: String,
-      batchId: Long): Unit = {
+  private def retireSuperseded(s: SparkSession, st: GenStore.Store,
+      labelDir: String, batchId: Long): Unit = {
     val f = hfs(s, labelDir)
-    val gs = gens(s, labelDir).sorted
+    val gs = st.gens("")
     val newerParts = scala.collection.mutable.HashSet.empty[String]
     // walk newest→oldest; a gen is superseded iff all its parts appear
     // in strictly newer complete gens (an empty no-op gen is trivially

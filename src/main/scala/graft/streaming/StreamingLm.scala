@@ -16,7 +16,7 @@ import graft.Tables
   * written last; reads fold the committed generations algebraically
   * (merge-on-read, the StreamingSketch discipline lifted to disk so the
   * state survives restarts), and [[compactLm]] periodically folds them
-  * into one generation with a digest-certified checked-rename swap so
+  * into one generation with a certified [[GenStore]] fold-and-swap so
   * the read cost stays bounded.
   *
   * Why ONE generation root instead of three parallel table roots (the
@@ -59,41 +59,13 @@ import graft.Tables
   */
 object StreamingLm {
 
-  private def hfs(s: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-
   /** The wave-level commit marker (see the scaladoc: the single commit
     * point for a three-table wave).
     */
   private val WaveMarker = "_WAVE"
 
-  /** Mid-swap crash recovery — `waves` renamed aside, replacement not
-    * yet in place (`waves_old` exists, `waves` missing): rename back.
-    * Round-15 (the r14 advice): this prologue must run at EVERY entry
-    * point, not just [[compactLm]] — on restart the at-least-once
-    * stream replays [[updateBatch]] FIRST, which would otherwise
-    * recreate a fresh `waves/` root (and the horizon read fails too,
-    * `waves/_HORIZON` being gone, so even folded-wave replays re-land);
-    * the next [[compactLm]] then sees `waves` exists, skips rename-back,
-    * and deletes `waves_old` — silently destroying all pre-crash LM
-    * state. [[score]]/[[state]]/[[scoreAt]] would also serve empty
-    * state in that window. Safe to run anywhere in the serving loop:
-    * compaction and waves run BETWEEN each other (the GenStore
-    * contract), so the rename never races a writer.
-    */
-  private def recoverMidSwap(s: SparkSession, lmDir: String): Unit = {
-    val f = hfs(s, lmDir)
-    val live = new org.apache.hadoop.fs.Path(s"$lmDir/waves")
-    val old = new org.apache.hadoop.fs.Path(s"$lmDir/waves_old")
-    if (!f.exists(live) && f.exists(old)) f.rename(old, live)
-  }
-
-  /** COMMITTED wave ids: generations carrying their `_WAVE` marker. */
-  private def committedGens(s: SparkSession, lmDir: String,
-      upTo: Option[Long] = None): Seq[Long] =
-    GenStore.completeGenIds(s, s"$lmDir/waves", WaveMarker)
-      .filter(g => g <= upTo.getOrElse(Long.MaxValue))
+  /** The LM store, healed ([[GenStore.open]]): one swapped root, `waves`. */
+  private def store(s: SparkSession, lmDir: String) = GenStore.open(s, lmDir, "waves")
 
   /** Fold one wave of documents `(doc_id, text)` into the LM state:
     * derive the wave's trigram partials and commit them as generation
@@ -102,12 +74,9 @@ object StreamingLm {
     * deleted its marker).
     */
   def updateBatch(lmDir: String)(docs: DataFrame, batchId: Long): Unit = {
-    val s = docs.sparkSession
-    recoverMidSwap(s, lmDir)
-    val f = hfs(s, lmDir)
+    val st = store(docs.sparkSession, lmDir)
     val genDir = s"$lmDir/waves/gen=$batchId"
-    if (f.exists(new org.apache.hadoop.fs.Path(genDir, WaveMarker))) return
-    if (batchId <= compactionHorizon(s, lmDir).getOrElse(-1L)) return
+    if (st.committed("waves", batchId, WaveMarker) || st.folded(batchId)) return
     val tri = graft.queries.PipelineQueries.lmTrigrams(
       docs.select(col("doc_id"), col("text"))).persist()
     try {
@@ -118,7 +87,7 @@ object StreamingLm {
       tri.select(col("w")).distinct()
         .write.mode("overwrite").parquet(s"$genDir/vocab")
     } finally tri.unpersist(false)
-    f.create(new org.apache.hadoop.fs.Path(genDir, WaveMarker), true).close()
+    st.mark(s"waves/gen=$batchId/$WaveMarker")
   }
 
   /** The live LM state folded across committed generations:
@@ -126,10 +95,8 @@ object StreamingLm {
     * vocabulary distinct-unioned. Empty-schema frames before the first
     * wave.
     */
-  def state(s: SparkSession, lmDir: String): (DataFrame, DataFrame, DataFrame) = {
-    recoverMidSwap(s, lmDir)
-    stateFor(s, lmDir, committedGens(s, lmDir))
-  }
+  def state(s: SparkSession, lmDir: String): (DataFrame, DataFrame, DataFrame) =
+    stateFor(s, lmDir, store(s, lmDir).gens("waves", WaveMarker))
 
   /** The folded state over an explicit committed-wave set — the single
     * fold body [[state]], [[scoreAt]], and [[compactLm]] share, so the
@@ -173,7 +140,7 @@ object StreamingLm {
     * unreconstructible; wave replays at or below it are skipped.
     */
   def compactionHorizon(s: SparkSession, lmDir: String): Option[Long] =
-    GenStore.readHorizon(s, s"$lmDir/waves/_HORIZON")
+    store(s, lmDir).horizon()
 
   /** AUDIT-grade as-of scoring: [[score]]'s exact plan over the LM
     * state as of the END of wave `batchId` (generation partials at or
@@ -183,15 +150,10 @@ object StreamingLm {
     */
   def scoreAt(s: SparkSession, lmDir: String, docs: DataFrame,
       batchId: Long): DataFrame = {
-    recoverMidSwap(s, lmDir)
-    compactionHorizon(s, lmDir).foreach { h =>
-      if (batchId < h)
-        throw new IllegalArgumentException(
-          s"scoreAt($batchId) is below the compaction horizon $h: " +
-            "the generation partials needed to reconstruct it were compacted away")
-    }
+    val st = store(s, lmDir)
+    st.refuseBelow("scoreAt", batchId)
     val (cb, cu, vocab) = stateFor(s, lmDir,
-      committedGens(s, lmDir, Some(batchId)))
+      st.gens("waves", WaveMarker).filter(_ <= batchId))
     graft.queries.PipelineQueries.lmScoreOver(
       graft.queries.PipelineQueries.lmTrigrams(
         docs.select(col("doc_id"), col("text"))),
@@ -199,13 +161,12 @@ object StreamingLm {
       .orderBy(col("doc_id"))
   }
 
-  /** Digest-certified compaction: fold every committed generation into
-    * one (`gen=-1`, below any future batchId) and swap the SINGLE
-    * `waves` root with checked renames (rename-back recovery for a
-    * crash between the two renames — the compactPairLog discipline; one
-    * root means no cross-table mid-swap window). Certify by total
-    * trigram mass (Σcb ≡ Σcu — both count every wave trigram once) and
-    * vocabulary size read back from the sink's files. Counts only add
+  /** Certified compaction: fold every committed generation into one
+    * (`gen=-1`, below any future batchId) and swap the SINGLE `waves`
+    * root through [[GenStore]]'s fold-and-swap (one root means no
+    * cross-table mid-swap window). The LM has no row digest: certify by
+    * total trigram mass (Σcb ≡ Σcu — both count every wave trigram once)
+    * and vocabulary size read back from the sink's files. Counts only add
     * and nothing tombstones, so compaction is pure re-aggregation; the
     * recorded horizon serves [[scoreAt]] (which cannot reconstruct
     * per-wave points once the partials fold) and the replay guard in
@@ -213,12 +174,11 @@ object StreamingLm {
     * slot).
     */
   def compactLm(s: SparkSession, lmDir: String): Unit = {
-    val f = hfs(s, lmDir)
-    recoverMidSwap(s, lmDir)
+    val st = store(s, lmDir)
     // ONE committed-wave listing feeds BOTH the fold and the horizon
     // (the single-listing rule): a generation is folded iff it is in
     // this list, and the horizon claims exactly these ids.
-    val gens = committedGens(s, lmDir)
+    val gens = st.gens("waves", WaveMarker)
     if (gens.isEmpty) return
     val (cb, cu, vocab) = stateFor(s, lmDir, gens)
     def mass(df: DataFrame, c: String): Long =
@@ -227,32 +187,19 @@ object StreamingLm {
     if (mb != mu)
       throw new IllegalStateException(
         s"LM state inconsistent before compaction: sum(cb)=$mb != sum(cu)=$mu")
-    val next = s"$lmDir/waves_compacting"
-    cb.write.mode("overwrite").parquet(s"$next/gen=-1/cb")
-    cu.write.mode("overwrite").parquet(s"$next/gen=-1/cu")
-    vocab.write.mode("overwrite").parquet(s"$next/gen=-1/vocab")
-    f.create(new org.apache.hadoop.fs.Path(s"$next/gen=-1", WaveMarker), true).close()
-    // the compaction HORIZON rides the compacting dir so the swap
-    // carries it atomically
-    GenStore.writeHorizon(s, s"$next/_HORIZON",
-      (gens ++ compactionHorizon(s, lmDir)).foldLeft(-1L)(math.max))
-    s.catalog.refreshByPath(next)
-    val backMb = mass(Tables.parquet(s, s"$next/gen=-1/cb"), "cb")
-    val backNv = Tables.parquet(s, s"$next/gen=-1/vocab").count()
-    if (backMb != mb || backNv != nv)
-      throw new IllegalStateException(
-        s"LM compaction digest mismatch: mass $mb->$backMb vocab $nv->$backNv")
-    val live = new org.apache.hadoop.fs.Path(s"$lmDir/waves")
-    val old = new org.apache.hadoop.fs.Path(s"$lmDir/waves_old")
-    f.delete(old, true)
-    if (!f.rename(live, old))
-      throw new IllegalStateException(s"LM compaction: rename $live -> $old failed")
-    if (!f.rename(new org.apache.hadoop.fs.Path(next), live)) {
-      f.rename(old, live)
-      throw new IllegalStateException(s"LM compaction: rename $next -> $live failed")
+    val next = st.compacting("waves")
+    st.foldAndSwap(Seq("_HORIZON" -> gens)) {
+      cb.write.mode("overwrite").parquet(s"$next/gen=-1/cb")
+      cu.write.mode("overwrite").parquet(s"$next/gen=-1/cu")
+      vocab.write.mode("overwrite").parquet(s"$next/gen=-1/vocab")
+      st.mark(s"waves_compacting/gen=-1/$WaveMarker")
+      s.catalog.refreshByPath(next)
+      val backMb = mass(Tables.parquet(s, s"$next/gen=-1/cb"), "cb")
+      val backNv = Tables.parquet(s, s"$next/gen=-1/vocab").count()
+      if (backMb != mb || backNv != nv)
+        throw new IllegalStateException(
+          s"LM compaction digest mismatch: mass $mb->$backMb vocab $nv->$backNv")
     }
-    f.delete(old, true)
-    s.catalog.refreshByPath(live.toString)
   }
 
   /** Start the LM maintainer over a streaming document frame

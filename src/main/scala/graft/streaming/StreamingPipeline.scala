@@ -59,7 +59,7 @@ object StreamingPipeline {
 
   /** Committed pipeline wave ids, ascending. */
   def committedWaves(s: SparkSession, pipeDir: String): Seq[Long] =
-    GenStore.completeGenIds(s, s"$pipeDir/waves", WaveMarker)
+    GenStore.open(s, pipeDir).gens("waves", WaveMarker)
 
   /** The highest whole-wave commit — what every consistent reader
     * gates on. None before the first committed wave.
