@@ -122,9 +122,7 @@ object Bench {
       timeMemoBuild("bm25_memo_build") {
         graft.queries.TextQueries.bm25Tfg(spark, sfDir).count()
       },
-      // q157/q175's update-wave probe state (round-17, VERDICT r16 #2:
-      // the masses block used to re-derive the whole probe inside the
-      // masses_probe line — now built once here; updNewPairs forces
+      // q157/q175's update-wave probe state (updNewPairs forces
       // sig/bands/cands too). This line is the wave's recurring probe
       // cost in production; q157's timed run shows the retract + merge
       // fold it pays on top.
@@ -164,75 +162,16 @@ object Bench {
       timeMemoBuild("passage_memo_build") {
         graft.queries.TextQueries.dupSpans(spark, sfDir).count()
       })
-    // ---- data-dependent masses (round-14): the bench artifact records
-    // the masses that DRIVE the expensive families alongside wall and
-    // loadavg, so a round-over-round wall shift is decomposable — same
-    // masses + same (code-fixed) job count = per-job overhead
-    // (environment); moved masses = the regenerated data, with the
-    // responsible stage named. Costs one cheap pass over memoized frames
-    // plus one corpus SimHash (charged as the masses_probe line).
-    var masses = Map.empty[String, Long]
-    val massesLine = timeMemoBuild("masses_probe") {
-      import org.apache.spark.sql.functions._
-      import graft.ops.TowerMemo
-      import graft.queries.TextQueries
-      // round-17 (VERDICT r16 #2, second half): after the update-wave
-      // probe moved to its session memo, this line was ~16 separate
-      // count() actions over memoized frames — pure per-job overhead.
-      // All quantities now fold as (k, v) rows of ONE union plan and
-      // ONE collect, so the instrumentation costs a single job however
-      // contended the box is. Every key and value is unchanged; the
-      // upd_* counts read the SAME checkpointed frames q157 consumes
-      // (the r16 ADVICE slice-predicate duplication stays gone —
-      // updSlicePred/updSliceBands shared).
-      def kv(name: String, df: org.apache.spark.sql.DataFrame) =
-        df.agg(count(lit(1)).cast("long").as("v"))
-          .select(lit(name).as("k"), col("v"))
-      def occKv(p: String, asg: org.apache.spark.sql.DataFrame) =
-        asg.groupBy(col("cell")).agg(count(lit(1)).as("c"))
-          .agg(count(lit(1)).cast("long").as("a"), max(col("c")).cast("long").as("b"),
-            sum(col("c") * col("c")).cast("long").as("s"))
-          .selectExpr(s"stack(3, '${p}cells', a, '${p}occ_max', b, '${p}pair_mass', s) as (k, v)")
-      val bandKv = TextQueries.simhashBands(TextQueries.simhashSig(
-          Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))))
-        .groupBy(col("band"), col("key")).agg(count(lit(1)).as("c"))
-        .agg(max(col("c")).cast("long").as("a"),
-          sum(when(col("c") > TextQueries.BandOccCap, 1L).otherwise(0L))
-            .cast("long").as("b"))
-        .selectExpr("stack(2, 'band_occ_max', a, 'band_over_cap', b) as (k, v)")
-      masses = Seq(
-        occKv("edge_", TowerMemo.edgeAssigned(spark, sfDir)),
-        occKv("old_edge_", TowerMemo.oldEdgeAssigned(spark, sfDir)),
-        bandKv,
-        kv("n_vec", TowerMemo.prep(spark, sfDir)),
-        kv("cell_pairs", TowerMemo.cellPairs(spark, sfDir)),
-        kv("old_cell_pairs", TowerMemo.oldCellPairs(spark, sfDir)),
-        kv("div_edges", TextQueries.divEdges(spark, sfDir)),
-        kv("old_div_edges", TextQueries.oldDivEdges(spark, sfDir)),
-        kv("dup_pairs", TextQueries.dupPairs(spark, sfDir)),
-        kv("minhash_cands", TextQueries.minhashCands(spark, sfDir)),
-        kv("upd_slice", Tables.documents(spark, sfDir)
-          .filter(TextQueries.updSlicePred(col("doc_id")))),
-        kv("upd_slice_bands", TextQueries.updSliceBands(spark, sfDir)),
-        kv("upd_probe_cands", TextQueries.updCands(spark, sfDir)),
-        kv("upd_new_pairs", TextQueries.updNewPairs(spark, sfDir)))
-        .reduce(_ unionByName _)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
     // per-job overhead calibration (µs per trivial 1-stage job): the
-    // graph family's wall is job-count dominated at these SFs
-    // (measured r14: identical job counts and near-identical walls at
-    // sf0.01 vs sf0.1) — this normalizer lets a future round decide
-    // "slower box" vs "regression" from the artifact alone. It runs
-    // OUTSIDE the timed masses_probe line (round-15, VERDICT r14 #5):
-    // it is meta-measurement like the session warmup, and its ~5 s of
-    // spark.range jobs permanently inflated the driver's headline total
-    // while measuring nothing about the engine.
-    locally {
+    // graph family's wall is job-count dominated at these SFs, so this
+    // normalizer separates "slower box" from "regression" in the file
+    // artifact. It runs outside every timed line: it is meta-measurement
+    // like the session warmup and measures nothing about the engine.
+    val jobOverheadUs = {
       val t0 = System.nanoTime()
       var i = 0
       while (i < 50) { spark.range(8).count(); i += 1 }
-      masses += ("job_overhead_us" -> (System.nanoTime() - t0) / 50000)
+      (System.nanoTime() - t0) / 50000
     }
     // drain memo-build side caches so the FIRST timed query doesn't
     // absorb their eviction: dupLabels/the tower builders persist()
@@ -242,7 +181,7 @@ object Bench {
     // touch (TowerMemo doc).
     graft.queries.releasePersisted()
     spark.catalog.clearCache()
-    val results = memoLines.toMap + massesLine ++
+    val results = memoLines.toMap ++
       SparkEntry.queries.map { case (name, fn) =>
         val first = timeOnce(name, fn)
         val best = if (first > RerunThresholdSec) math.min(first, timeOnce(name, fn)) else first
@@ -254,24 +193,19 @@ object Bench {
     // Two outputs, two consumers. The driver keeps only a bounded tail of
     // stdout, so the line it parses must stay compact: contract fields only.
     // The full per-query map goes exclusively to SPARK_GRAFT_BENCH_OUT.
-    // loadavg rides BOTH outputs (additive field — the driver's parser
-    // tolerates it, VERIFIED empirically: BENCH_r10.json's `parsed`
-    // block carries the loadavg key through verbatim, so the r10 line
-    // with the extra field parsed fine): round 9's 230 s driver
-    // artifact was pure box contention and could not self-identify as
-    // such because only the file artifact carried the load signal.
+    // loadavg rides BOTH outputs (an additive field the line's parser
+    // passes through verbatim): a wall inflated by box contention must
+    // self-identify from the line alone, not only from the file artifact.
     val loadavg = try {
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg"))).trim
     } catch { case _: Throwable => "" }
-    val ms = masses.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     // the width the lines ran at (the local[N] thread count), on both
     // outputs like loadavg: walls compare only across equal widths
     val width = spark.sparkContext.defaultParallelism
     val fileJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"masses":$ms,"sf":"$sfDir","loadavg":"$loadavg","cpus":$width,"failed":$failedJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"job_overhead_us":$jobOverheadUs,"sf":"$sfDir","loadavg":"$loadavg","cpus":$width,"failed":$failedJson}"""
     val stdoutJson =
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","loadavg":"$loadavg","cpus":$width,"failed":${failed.size}}"""
     // The driver parses this JSON from stdout; round 1 failed to extract it

@@ -114,26 +114,14 @@ object Tables {
     * (q96 sample gate, q109 profile sketch gate): the gate decision must
     * not re-run a scan-and-count Spark job on every query construction —
     * inside Bench's timed window that charged a full table scan to
-    * whatever query asked. Values are plain Longs (no value-refers-to-key
-    * cycle, unlike TowerMemo), so a stopped session's entries really are
-    * weakly reclaimable here. The count is one job: a column-free scan
-    * counted as RDD rows (`Dataset.count` plans an aggregate, two jobs
-    * under AQE).
+    * whatever query asked. Held in the session memo
+    * ([[graft.ops.TowerMemo.held]]), so it is counted once per key even
+    * when a held build asks for it mid-build. The count is one job: a
+    * column-free scan counted as RDD rows (`Dataset.count` plans an
+    * aggregate, two jobs under AQE).
     */
-  private val countMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Long]]()
-
   def rowCount(spark: SparkSession, sfDir: String, name: String): Long =
-    countMemo.synchronized {
-      val perSession = {
-        val e = countMemo.get(spark)
-        if (e != null) e
-        else {
-          val n = scala.collection.mutable.Map.empty[String, Long]
-          countMemo.put(spark, n); n
-        }
-      }
-      perSession.getOrElseUpdate(s"$sfDir|$name",
-        table(spark, sfDir, name).select().queryExecution.toRdd.count())
+    graft.ops.TowerMemo.held(spark, s"$sfDir|rowCount:$name") {
+      table(spark, sfDir, name).select().queryExecution.toRdd.count()
     }
 }

@@ -56,29 +56,6 @@ object Aggregators {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Seq[Long], Long)]()
   }
 
-  /** Element-wise vector sum + count → centroid (EXT-3 IVF-style
-    * clustering building block).
-    */
-  class Centroid(dim: Int) extends Aggregator[Seq[Double], (Array[Double], Long), Seq[Double]] {
-    def zero: (Array[Double], Long) = (Array.fill(dim)(0.0), 0L)
-    def reduce(b: (Array[Double], Long), v: Seq[Double]): (Array[Double], Long) = {
-      var i = 0
-      while (i < dim) { b._1(i) += v(i); i += 1 }
-      (b._1, b._2 + 1)
-    }
-    def merge(a: (Array[Double], Long), b: (Array[Double], Long)): (Array[Double], Long) = {
-      var i = 0
-      while (i < dim) { a._1(i) += b._1(i); i += 1 }
-      (a._1, a._2 + b._2)
-    }
-    def finish(r: (Array[Double], Long)): Seq[Double] =
-      if (r._2 == 0) Seq.fill(dim)(0.0) else r._1.toSeq.map(_ / r._2)
-    def bufferEncoder: Encoder[(Array[Double], Long)] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Array[Double], Long)]()
-    def outputEncoder: Encoder[Seq[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
-  }
-
   /** q83's KMV sketch as a typed Aggregator: the k smallest DISTINCT
     * values seen, kept sorted. `merge` IS the KMV union (min-k of two
     * min-ks = min-k of the union — commutative, associative, bounded at

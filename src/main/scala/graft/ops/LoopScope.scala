@@ -13,7 +13,7 @@ package graft.ops
   * strip makes every loop checkpoint safe whatever planner produced it.
   *
   * The conf-gated AQE-off loop scope this object once carried was
-  * measured slower at every width (r15/r16, PLANS.md) and was removed.
+  * measured slower at every width and was removed.
   */
 object LoopScope {
 

@@ -54,76 +54,74 @@ object TowerMemo {
     * (Dataset.sparkSession), which is the map key — the classic
     * value-refers-to-key cycle — so JVM exit is the only reclamation
     * path. Harmless for the one-session Bench/Verify processes this
-    * serves.
+    * serves. This is the repo's only per-session memo: the table row
+    * counts ([[graft.Tables.rowCount]]) and the BPE tower
+    * ([[graft.queries.PipelineQueries.bpeFull]]) are entries here too.
     */
   private val memo =
     new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, java.util.concurrent.FutureTask[DataFrame]]]()
+      scala.collection.mutable.Map[String, java.util.concurrent.FutureTask[Any]]]()
 
-  /** Get-or-build (reentrant — builders call each other; explicit
-    * get/put rather than getOrElseUpdate because a nested build inserts
-    * other keys mid-evaluation).
+  /** Get-or-build of a checkpointed tower artifact (reentrant —
+    * builders call each other).
     */
   private def get(s: SparkSession, d: String, what: String)(build: => DataFrame): DataFrame =
     memoize(s, d, what)(build)
 
-  /** The generic get-or-build, open to other deterministic in-plan
-    * derivations in the repo (the CC labels under q56/q79/q108/q114 use
-    * it via [[graft.queries.TextQueries.dupLabels]]).
+  /** [[held]] for a DataFrame, eagerly checkpointed — open to other
+    * deterministic in-plan derivations in the repo (the CC labels under
+    * q56/q79/q108/q114 use it via [[graft.queries.TextQueries.dupLabels]]).
     * `checkpoint = false` stores the built frame as-is — for a local
     * frame (trained state held on the driver) and for builders whose
     * result already reads only checkpointed state (re-checkpointing
     * would copy the data a second time); such builders must ensure the
     * returned plan does NOT reference frames they unpersist on the way
     * out.
+    */
+  private[graft] def memoize(
+      s: SparkSession, d: String, what: String, checkpoint: Boolean = true)(
+      build: => DataFrame): DataFrame =
+    held(s, s"$d|$what") {
+      val built = build
+      if (checkpoint) built.localCheckpoint(true) else built
+    }
+
+  /** Get-or-build of any value held per (session, `key`).
     *
     * Locking (round-19, guide §2.6): the global lock guards only the
     * map get/put; each key's build runs in a per-key FutureTask OUTSIDE
     * it, so INDEPENDENT artifacts can build concurrently (parDrive
     * callers — the cc_memo_build line overlaps its two CC loops).
-    * Reentrancy is preserved: a nested memoize() from inside a build
-    * finds the nested key's task NEW and runs it inline on the calling
-    * thread (FutureTask.run is a no-op unless NEW, so a key is only
-    * ever built once); a second thread asking for an in-flight key
-    * blocks on get() until the builder finishes — the same
-    * double-checked semantics as the old whole-build lock, minus the
-    * false serialization across keys. A failed build is removed from
-    * the map (retry semantics unchanged) and its cause rethrown.
+    * Reentrancy is preserved: a nested call from inside a build finds
+    * the nested key's task NEW and runs it inline on the calling thread
+    * (FutureTask.run is a no-op unless NEW, so a key is only ever built
+    * once); a second thread asking for an in-flight key blocks on get()
+    * until the builder finishes — the same double-checked semantics as
+    * a whole-build lock, minus the false serialization across keys. A
+    * failed build is removed from the map (retry semantics unchanged)
+    * and its cause rethrown.
     */
-  private[graft] def memoize(
-      s: SparkSession, d: String, what: String, checkpoint: Boolean = true)(
-      build: => DataFrame): DataFrame = {
-    val k = s"$d|$what"
+  private[graft] def held[T](s: SparkSession, key: String)(build: => T): T = {
     val task = this.synchronized {
       val perSession = {
         val e = memo.get(s)
         if (e != null) e
         else {
           val n = scala.collection.mutable.Map
-            .empty[String, java.util.concurrent.FutureTask[DataFrame]]
+            .empty[String, java.util.concurrent.FutureTask[Any]]
           memo.put(s, n); n
         }
       }
-      perSession.get(k) match {
-        case Some(t) => t
-        case None =>
-          val t = new java.util.concurrent.FutureTask[DataFrame](
-            new java.util.concurrent.Callable[DataFrame] {
-              override def call(): DataFrame = {
-                val built = build
-                if (checkpoint) built.localCheckpoint(true) else built
-              }
-            })
-          perSession.put(k, t); t
-      }
+      perSession.getOrElseUpdate(key, new java.util.concurrent.FutureTask[Any](
+        new java.util.concurrent.Callable[Any] { override def call(): Any = build }))
     }
     task.run() // runs iff NEW — inline on this thread; no-op otherwise
-    try task.get()
+    try task.get().asInstanceOf[T]
     catch {
       case e: java.util.concurrent.ExecutionException =>
         this.synchronized {
           val per = memo.get(s)
-          if (per != null && per.get(k).contains(task)) per.remove(k)
+          if (per != null && per.get(key).contains(task)) per.remove(key)
         }
         throw e.getCause
     }

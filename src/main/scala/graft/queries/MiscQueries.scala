@@ -754,8 +754,8 @@ object MiscQueries {
       .localCheckpoint(true))
     val f1 = tracked(skylineFold(f0, wave))
     // both vacuity counts in ONE action (round-18: two driver-side
-    // count() jobs folded into a single union aggregate — the masses
-    // kv discipline; values unchanged, f0/f1 stay persisted for the
+    // count() jobs folded into a single union aggregate of (k, v)
+    // rows; values unchanged, f0/f1 stay persisted for the
     // final readout)
     val checks = f1.filter(col("appended") === 1)
       .select(lit("enter").as("k"))

@@ -456,7 +456,7 @@ object PipelineQueries {
     * in corpus + line vocabulary; no pairing anywhere. Funnel position:
     * runs BEFORE document-level near-dup (q56) in a real pipeline —
     * stripping shared boilerplate first keeps nav-bar mass from gluing
-    * unrelated pages into one near-dup cluster (PLANS.md round 4).
+    * unrelated pages into one near-dup cluster.
     */
   val q61LineDedup: Q = (s, d) => {
     // persisted: the frequency aggregate and the postings join both
@@ -832,8 +832,8 @@ object PipelineQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** EXT — LM-state UPDATE under the re-crawl wave (the lifecycle cell
-    * VERDICT r15 #2b named: q167's subtract and q156's add composed in
+  /** EXT — LM-state UPDATE under the re-crawl wave (the lifecycle
+    * cell where q167's subtract and q156's add compose in
     * ONE wave). The seeded ~12.8% hash slice of the TRAIN generation
     * re-crawls to truncated content; the held LM state — trigram counts,
     * context counts, and the COUNTED vocabulary `cw` — folds as
@@ -1112,9 +1112,9 @@ object PipelineQueries {
       |${dsirFinalSelect("168")}
       |ORDER BY a.doc_id""".stripMargin
 
-  /** EXT — DSIR selection under the RE-CRAWL wave (VERDICT r13 #5 —
-    * q158's feature counts are exactly the subtract-old-add-new shape
-    * q159 proved for stats, so the selection is maintainable): the
+  /** EXT — DSIR selection under the RE-CRAWL wave (q158's feature
+    * counts are exactly the subtract-old-add-new shape q159 proved for
+    * stats, so the selection is maintainable): the
     * seeded ~12.8% hash slice re-crawls to truncated content (q159's
     * slice and transform — the mod-5 slice is source-aligned and DSIR
     * stratifies by source, so it is BANNED here; see UpdMod's warning),
@@ -1349,15 +1349,6 @@ object PipelineQueries {
     * replace chain stays a stack of narrow projections over the cached
     * vocabulary — at a real merge count, re-persist every few rounds.
     */
-  /** Driver-side halves of the memoized full-corpus BPE towers, keyed
-    * like [[graft.ops.TowerMemo]] (session identity → sfDir); written
-    * only inside the corresponding `TowerMemo.memoize` build, so the
-    * two stores can never disagree on a key.
-    */
-  private val bpeMergesMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Vector[(Int, String, String, String, Long)]]]()
-
   /** Session memo of the FULL-corpus BPE trainer (round-19: q67, q68
     * and q162's refreshed tower all replayed the identical
     * deterministic 6-round driver loop — 3 trainings per session for
@@ -1371,26 +1362,11 @@ object PipelineQueries {
     * generation) stays live — that training is the query's own work.
     */
   private[graft] def bpeFull(s: SparkSession, d: String)
-      : (Vector[(Int, String, String, String, Long)], DataFrame) = {
-    val enc = graft.ops.TowerMemo.memoize(s, d, "bpe_enc") {
+      : (Vector[(Int, String, String, String, Long)], DataFrame) =
+    graft.ops.TowerMemo.held(s, s"$d|bpe") {
       val (m, cur) = bpeTrainOn(documents(s, d))
-      bpeMergesMemo.synchronized {
-        val per = {
-          val e = bpeMergesMemo.get(s)
-          if (e != null) e
-          else {
-            val n = scala.collection.mutable.Map
-              .empty[String, Vector[(Int, String, String, String, Long)]]
-            bpeMergesMemo.put(s, n); n
-          }
-        }
-        per.put(d, m)
-      }
-      cur
+      (m, cur.localCheckpoint(true))
     }
-    val merges = bpeMergesMemo.synchronized { bpeMergesMemo.get(s)(d) }
-    (merges, enc)
-  }
 
   /** [[bpeTrainOn]] over an arbitrary corpus frame — q162 trains the OLD
     * tokenizer on the frozen generation and the refreshed one on the
@@ -2452,7 +2428,7 @@ object PipelineQueries {
     * ⌈r·N/n_s⌉ — so scores from sources with different length regimes
     * (medians 45–70 here, measured; 463/500 docs change value at
     * sf0.01) become comparable before any cross-source cut. The q95
-    * calibration decides a top-k% VERDICT; this produces the full
+    * calibration decides a top-k% verdict; this produces the full
     * calibrated VALUE, integer-exact: ranks are row_number over
     * (nt, doc_id), the mapped rank is `(r·N + n_s − 1) DIV n_s`, and
     * the global lookup is an interval join against the cumulative
@@ -2987,8 +2963,8 @@ object PipelineQueries {
         expr("substring(text, 1, length(text) DIV 2)").as("new_text")),
       tracked)
 
-  /** EXT — chunk-index DELETE (the q160 lifecycle's takedown cell,
-    * VERDICT r15 #2d: the update core with an empty new side): the
+  /** EXT — chunk-index DELETE (the q160 lifecycle's takedown cell:
+    * the update core with an empty new side): the
     * seeded ~12.8% tombstone slice leaves the corpus wholesale, so the
     * wave retracts the slice's chunks and the group state (copies,
     * distinct docs, keeper — min/countDistinct do not retract)

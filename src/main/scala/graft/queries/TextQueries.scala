@@ -112,7 +112,7 @@ object TextQueries {
     * arity 2 — one pass over the text, no interpreted HOF shingle
     * strings). Unsampled since round 3: the df cap alone bounds the
     * candidate set (join rows ≤ |vocab|·C²), and the measured cost
-    * confirms it (PLANS.md round-3 note).
+    * confirms it (unsampled 2.14 s vs 2.77 s sampled at sf0.1).
     */
   val q32NgramJaccard: Q = (s, d) => {
     // distinct-shingle size rides along with each posting row (constant
@@ -587,9 +587,9 @@ object TextQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** EXT-3n — IVFADC index DELETE (VERDICT r15 #2a: the quantization
-    * family's q152 twin at the oracle tier — StreamingIndex.deleteBatch
-    * proved the plumbing in specs; this puts tombstone surgery on the
+  /** EXT-3n — IVFADC index DELETE (the quantization family's q152 twin
+    * at the oracle tier — StreamingIndex.deleteBatch proved the
+    * plumbing in specs; this puts tombstone surgery on the
     * q91 tower under the hash gate). Tombstones are the seeded ~12.8%
     * slice ([[DeleteBound]]); the surgery is two anti-joins — the codes
     * table and the inverted-list membership drop tombstoned rows — and
@@ -676,9 +676,9 @@ object TextQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** EXT-3o — ANN index COMPACTION (index merge — VERDICT r16 #6: the
-    * serving tier had train/append/delete/refresh-audit but never
-    * merged generations into one fresh serving index). Scenario: the
+  /** EXT-3o — ANN index COMPACTION (index merge — the serving tier
+    * had train/append/delete/refresh-audit but never merged
+    * generations into one fresh serving index). Scenario: the
     * full-corpus IVFADC index (q91's tower) has absorbed the seeded
     * ~12.8% tombstone wave ([[DeleteBound]] — q171's state) and
     * compaction is due ([[graft.streaming.StreamingIndex.compactionDue]]'s
@@ -1431,10 +1431,10 @@ object TextQueries {
       .orderBy(col("ma"), col("mb"))
   }
 
-  /** EXT — the MEDIA dedup state under RE-CRAWL (VERDICT r13 #6 —
-    * multimodal was the one dedup family without an update-lifecycle
-    * story). Measured on this corpus before wiring (r6 rule): the
-    * content-HASH side (q73's clusters) is near-vacuous under the
+  /** EXT — the MEDIA dedup state under RE-CRAWL (multimodal was the
+    * one dedup family without an update-lifecycle story). Measured on
+    * this corpus before wiring (r6 rule): the content-HASH side
+    * (q73's clusters) is near-vacuous under the
     * seeded update slice — at sf0.01 NO slice member sits in a
     * multi-member cluster (updates only re-hash singletons; 2 keeper
     * hand-offs exist corpus-wide at sf0.1 only) — so the maintained
@@ -1568,7 +1568,7 @@ object TextQueries {
   }
 
   /** EXT — the MEDIA pair state under DELETE (the q164 lifecycle's
-    * takedown cell, VERDICT r15 #2e) — and, unlike q164's full band
+    * takedown cell) — and, unlike q164's full band
     * re-join, a genuinely DELTA-BOUNDED maintenance pass, because
     * deletion obeys a closed pair algebra: signatures never change, so
     * a surviving pair's candidacy can only be GAINED, never lost, and
@@ -2430,8 +2430,8 @@ object TextQueries {
       .orderBy(col("qid"), col("rank"))
   }
 
-  /** EXT — BM25 retrieval state under DELETE (the takedown cell VERDICT
-    * r15 #2c named: q165's fold minus the add side). The seeded ~12.8%
+  /** EXT — BM25 retrieval state under DELETE (the takedown cell:
+    * q165's fold minus the add side). The seeded ~12.8%
     * tombstone slice leaves the corpus wholesale: membership rows drop
     * (one anti-join), per-content member counts fold DOWN (held − slice;
     * contents at zero drop out of every join), and the held gram
@@ -2566,10 +2566,10 @@ object TextQueries {
   private[graft] val RerankPosK = 3
   private[graft] val RerankNegMin = 6
 
-  /** EXT — cross-encoder reranker TRAINING-PAIR mining (VERDICT r15
-    * #7; the data-prep op behind every rerank distillation pipeline:
-    * retrieve with a cheap ranker, label with a teacher, emit
-    * (query, positive, hard-negative) contrastive pairs). The lexical
+  /** EXT — cross-encoder reranker TRAINING-PAIR mining (the data-prep
+    * op behind every rerank distillation pipeline: retrieve with a
+    * cheap ranker, label with a teacher, emit (query, positive,
+    * hard-negative) contrastive pairs). The lexical
     * list is [[bm25Scored]] cut at [[RrfDepth]] (q125's candidates);
     * the teacher is the embedding cosine (the doc's own vector,
     * vec_id ≡ doc_id — q125's semantic side, DotFold bit-stable).
@@ -3288,7 +3288,7 @@ object TextQueries {
     * [[graphBeamSearch]] and [[attachEdges]] share the shape and
     * PlanShapeSpec can pin its physical plan (one exchange, no
     * Window/Sort operators) against a refactor silently reintroducing
-    * the old pair — VERDICT r15 #3.
+    * the old pair.
     */
   private[graft] def hopTopB(scored: org.apache.spark.sql.DataFrame,
       key: String, b: Int): org.apache.spark.sql.DataFrame = scored
@@ -3450,8 +3450,8 @@ object TextQueries {
     * once); each WAVE costs |wave|·[[DivEfC]]·degree beam rows and
     * |wave|·[[DivEfC]]·[[KnnGK]] conflict folds — wave-bounded, never
     * corpus-sized; the search is q135's serving shape. GraphDivSpec
-    * audits frozen-vs-retrained recall (the q144 comparison) and
-    * PLANS.md records the ×10 stress wall.
+    * audits frozen-vs-retrained recall (the q144 comparison); at ×10
+    * replicated sf0.1 the wall grew 1.56× for 10× the vectors.
     */
   /** The [[KnnGK]]-step heuristic-2 greedy with FRESH-FOLD conflict
     * scoring — q151's attach prune (candidates span cells, so the
@@ -4479,10 +4479,7 @@ object TextQueries {
   val UpdRes = 2
 
   /** THE re-crawl slice predicate over a doc-id column — one definition
-    * shared by q157, the memoized probe stages, and the bench masses
-    * (round-17, r16 ADVICE: Bench re-derived it inline on its own
-    * frame, so a slice change in one place would have let the recorded
-    * mass silently measure a different population than q157 pays for).
+    * shared by q157 and the memoized probe stages.
     */
   private[graft] def updSlicePred(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     pmod(id, lit(UpdMod.toLong)) === UpdRes.toLong
@@ -4509,18 +4506,12 @@ object TextQueries {
     */
   /** q157's update-wave probe stages (updated-content SimHash → capped
     * bands → slice-probe candidates → verified new pairs),
-    * SESSION-MEMOIZED per (session, sfDir) — round-17, VERDICT r16 #2:
-    * the bench masses block used to re-derive the whole probe inside
-    * the `masses_probe` instrumentation (~3-4.6 s of duplicated code,
-    * more than most of the queries it adjudicates cost), when the
-    * derivation is deterministic per (session, sfDir) exactly like the
-    * trained towers. The probe now builds ONCE — charged as the bench's
-    * explicit `upd_memo_build` line (the wave's recurring probe cost in
+    * SESSION-MEMOIZED per (session, sfDir): the derivation is
+    * deterministic per (session, sfDir) exactly like the trained
+    * towers, so the probe builds ONCE — charged as the bench's explicit
+    * `upd_memo_build` line (the wave's recurring probe cost in
     * production; q157's timed run shows the retract + merge fold it
-    * pays ON TOP each wave) — and the bench masses read the SAME
-    * checkpointed frames q157 consumes, so the recorded masses can
-    * never desynchronize from what the query pays for (the r16 ADVICE
-    * duplication, closed structurally).
+    * pays ON TOP each wave).
     *
     * Probe shape (unchanged from the r16 factoring): slice-touching
     * pairs via the PROBE plan — slice bands against the full band
@@ -6053,7 +6044,7 @@ object TextQueries {
         |ORDER BY r.query_id, r.rank""".stripMargin
 
   /** EXT — the COMPOSED PIPELINE WAVE under the oracle hash gate
-    * (VERDICT r16 #3: the `_WAVE` cross-store consistency contract —
+    * (the `_WAVE` cross-store consistency contract —
     * [[graft.streaming.StreamingPipeline]] — was the one major
     * capability proven only by specs). This query RUNS the real
     * machinery: four stores (corpus, dedup labels, PQ index, admission

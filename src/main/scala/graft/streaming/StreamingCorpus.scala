@@ -55,8 +55,8 @@ import graft.streaming.StreamingDedup.DocSig
   * buckets grows with distinct signatures: pass `stateTtl` to evict
   * buckets idle longer than the TTL (bounding state to the active
   * signature working set, at the cost of re-admitting a dup whose
-  * cluster went idle past the TTL — the standard freshness/size trade;
-  * PLANS.md round 4 states the bound).
+  * cluster went idle past the TTL — the standard freshness/size trade:
+  * state ≤ cap × |buckets active within the TTL|).
   */
 object StreamingCorpus {
 

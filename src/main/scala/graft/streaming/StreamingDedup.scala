@@ -48,8 +48,8 @@ object StreamingDedup {
     * `ttlMs > 0` ages members out of state (processing-time mode), so
     * an unbounded stream's bucket count tracks the ACTIVE signature
     * working set instead of growing forever — the trade is that a dup
-    * of a cluster idle past the TTL is re-reported as new (PLANS.md
-    * round 4 states the bound).
+    * of a cluster idle past the TTL is re-reported as new (state ≤
+    * cap × |buckets active within the TTL|).
     */
   class BucketProcessor(ttlMs: Long = 0L)
       extends StatefulProcessor[(Int, Long), BandObs, DupPair] {

@@ -218,7 +218,7 @@ object StreamingGraph {
       repAsg = asg, withIsNew = true, corpus = corp)
   }
 
-  // ---- AS-OF serving (round-14, VERDICT r13 #7): the labelsAt /
+  // ---- AS-OF serving: the labelsAt /
   // liveCorpusAt pattern over the edge/member generations — exact at or
   // above the compaction horizon, failing loudly below it (compaction
   // IS the repair: it rewrites the adjacency and drops the tombstones,

@@ -199,7 +199,7 @@ object StreamingIndex {
       tombsOver(s, indexDir, st.gens("tombs")))
   }
 
-  // ---- AS-OF serving (round-14, VERDICT r13 #7): the labelsAt /
+  // ---- AS-OF serving: the labelsAt /
   // liveCorpusAt pattern over code generations — the index's state as
   // of the END of wave `batchId`, exact at or above the compaction
   // horizon, failing loudly below it (compaction materializes the live

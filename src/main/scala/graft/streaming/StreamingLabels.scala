@@ -235,9 +235,9 @@ object StreamingLabels {
     * captured listing feeds the fold, its digest, its write and the
     * horizon (the highest wave folded: pairs, tombs or revives — a
     * deletion is history too). Call BETWEEN waves (the serving loop's
-    * maybeCompact slot): committed waves never replay (their markers
-    * skip), so dropping the tombstones cannot resurrect anything a
-    * replay could reintroduce; a pair naming a compacted-away id that
+    * maybeCompact slot): a replayed wave at or below the horizon skips
+    * in every writer, so dropping the tombstones cannot resurrect
+    * anything a replay could reintroduce; a pair naming a compacted-away id that
     * arrives AFTER compaction is a genuinely new observation (the
     * document re-entering the corpus) and is admitted as such.
     */
@@ -325,13 +325,15 @@ object StreamingLabels {
     * write ONLY the buckets holding a changed or fresh id under
     * `gen=<batchId>/part=<b>`, then retire fully-superseded
     * generations (two-step, see the scaladoc). Idempotent on the
-    * `_SUCCESS` marker exactly like [[StreamingIndex.appendBatch]].
+    * `_SUCCESS` marker exactly like [[StreamingIndex.appendBatch]]; a
+    * wave at or below the compaction horizon skips too (compaction
+    * deleted its markers, and its replay would re-land folded pairs).
     */
   def mergeBatch(labelDir: String, parts: Int = DefaultParts)(
       pairs: DataFrame, batchId: Long): Unit = {
     val s = pairs.sparkSession
     val st = store(s, labelDir)
-    if (st.committed("", batchId)) return
+    if (st.committed("", batchId) || st.folded(batchId)) return
     val p = pinnedParts(s, labelDir, parts)
     val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def hold(df: DataFrame) = { locals += df.persist(); df }
@@ -384,7 +386,9 @@ object StreamingLabels {
     * spec does).
     *
     * Replay/crash safety: the wave's commit point is the TOMBSTONE
-    * marker (checked first). A crash after the label gen but before the
+    * marker (checked first, with the compaction horizon: a folded
+    * wave's tombstones would kill compacted pairs a later wave
+    * re-added). A crash after the label gen but before the
     * tombstones replays into an identical recompute — `labelsAsOf`
     * reads strictly below `batchId`, so the half-written wave's own
     * output never feeds its replay — and the label write is
@@ -394,7 +398,7 @@ object StreamingLabels {
       ids: DataFrame, batchId: Long): Unit = {
     val s = ids.sparkSession
     val st = store(s, labelDir)
-    if (st.committed("tombs", batchId)) return
+    if (st.committed("tombs", batchId) || st.folded(batchId)) return
     val f = hfs(s, labelDir)
     val p = pinnedParts(s, labelDir, parts)
     val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -448,7 +452,8 @@ object StreamingLabels {
     * cannot resurrect a third party.
     *
     * Replay/crash safety: the commit point is the REVIVES marker
-    * (checked first — the last write). Every earlier write replays
+    * (checked first — the last write — with the compaction horizon).
+    * Every earlier write replays
     * idempotently: `labelsAsOf`/`livePairsAsOf` read strictly below
     * `batchId`, so the crashed attempt's own gens never feed its
     * replay, and all writes are overwrite-mode. THREE pre-commit crash
@@ -470,7 +475,7 @@ object StreamingLabels {
       ids: DataFrame, pairs: DataFrame, batchId: Long): Unit = {
     val s = ids.sparkSession
     val st = store(s, labelDir)
-    if (st.committed("revives", batchId)) return
+    if (st.committed("revives", batchId) || st.folded(batchId)) return
     val f = hfs(s, labelDir)
     val p = pinnedParts(s, labelDir, parts)
     val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Streaming maintenance of the q155 admission-LM state — the service
-  * twin q156 proved the fold law for (VERDICT r13 #4: every other
-  * maintained artifact had one; the LM folded in-query only). The held
+  * twin q156 proved the fold law for (every other maintained artifact
+  * had one; the LM folded in-query only). The held
   * state is exactly q156's generation partials: trigram conditional
   * counts `cb(ctx, w)`, context counts `cu(ctx)`, and the vocabulary —
   * counts ADD across waves, the vocabulary merges as a DISTINCT UNION

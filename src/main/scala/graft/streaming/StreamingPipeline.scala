@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** PIPELINE-level wave atomicity + the consistent cross-store reader
-  * (round-15, VERDICT r14 #3 and #6).
+/** PIPELINE-level wave atomicity + the consistent cross-store reader.
   *
   * The composed re-crawl wave spans up to five stores — corpus rows,
   * dedup labels, the PQ index, the graph index, the LM state — each

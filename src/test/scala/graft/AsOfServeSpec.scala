@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{StreamingGraph, StreamingIndex}
 
-/** AS-OF serving for the two ANN index services (VERDICT r13 #7 —
-  * labelsAt/liveCorpusAt closed audit time travel for labels and corpus
+/** AS-OF serving for the two ANN index services (labelsAt/liveCorpusAt
+  * closed audit time travel for labels and corpus
   * rows; this closes the third stateful store). For each service:
   * searchAt(b) over a lifecycle of two append waves + one delete wave
   * must equal a REFERENCE TWIN index built with only the waves ≤ b

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{StreamingCorpus, StreamingIndex, StreamingLabels}
 
-/** Round-14 (VERDICT r13 #3): a crash BETWEEN components of one
+/** A crash BETWEEN components of one
   * composed wave, driven — not argued. One re-crawl wave (batchId 1)
   * spans three stores: the corpus row (updateBatch), the dedup labels
   * (updateBatch), and the ANN index (delete old vec + append its
@@ -43,7 +43,7 @@ class CrossComponentCrashSpec extends AnyFunSuite {
     val labelDir = Files.createTempDirectory("xcc_labels").toString
     val idxDir = Files.createTempDirectory("xcc_index").toString
 
-    // ---- the index-update model (PLANS r13): searches rerank from the
+    // ---- the index-update model: searches rerank from the
     // corpus embedding table, so a re-crawl's replacement vector must be
     // an id that exists there — delete(old vec) + append(new vec). Pick
     // the wave's vectors from a fully-built REFERENCE index: vNew = a

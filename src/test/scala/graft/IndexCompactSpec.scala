@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.TextQueries
 
 /** Round-17: q176's serving and readout invariants, pinned at birth
-  * (the VERDICT r16 #4 standard applied to the round's own new query
-  * instead of waiting for the nit): the compacted index serves live
+  * (measured invariants pinned as the query lands, not after a
+  * regeneration blunts them): the compacted index serves live
   * vectors only (independent LCG hash model), the per-query recall
   * columns are exactly the row-flag sums, and the stale columns agree
   * with q171's own output (the two queries share the stale arm through

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TextQueries
 
-/** Round-17 (VERDICT r16 #4): q171's measured serving invariants,
+/** q171's measured serving invariants,
   * PINNED — the r16 scaladoc records "the shortlist REFILLS live-only"
   * and "no tombstoned vector is served" as measurements; a testdata
   * regeneration could blunt the delete slice (kill no served vector)

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{StreamingCorpus, StreamingGraph, StreamingIndex,
   StreamingLabels, StreamingLm, StreamingPipeline}
 
-/** Round-15 (VERDICT r14 #3 + #6): the PIPELINE-level wave commit
+/** The PIPELINE-level wave commit
   * marker, and the cross-store consistent reader built on it.
   * CrossComponentCrashSpec proves whole-wave retry CONVERGES; this spec
   * closes what a READER sees mid-wave: a consistent reader

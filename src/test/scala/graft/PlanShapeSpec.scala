@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Plan-shape regression guards for the scale-critical properties PLANS.md
-  * documents: candidate generation must stay equi-join-banded (no
+/** Plan-shape regression guards for the scale-critical properties:
+  * candidate generation must stay equi-join-banded (no
   * all-pairs operator can sneak back in), top-k-per-group must keep the
   * WindowGroupLimit partial/final pair, and dedup scans must stay
   * column-pruned. Asserted on the AQE FINAL plan (after execution).
@@ -141,7 +141,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("beam-hop top-B fuses dedup + selection into ONE exchange, no window/sort pair") {
-    // The round-15 hop fusion's cluster claim (VERDICT r15 #3): each
+    // The round-15 hop fusion's cluster claim: each
     // beam hop / attach hop is a single collect_set + sorted-slice
     // aggregation — map-side partial ObjectHashAggregate, one hash
     // exchange on the query key, and NO Window/Sort operator pair (the

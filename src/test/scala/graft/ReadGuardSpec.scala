@@ -110,6 +110,22 @@ class ReadGuardSpec extends AnyFunSuite {
     assert(forked.isEmpty, "store protocol outside GenStore: " + forked.mkString(", "))
   }
 
+  test("per-session state is held only through TowerMemo") {
+    // one module decides what a session holds and when it is rebuilt;
+    // a hand-rolled per-session map escapes any future invalidation
+    val root = Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.getFileName.toString == "TowerMemo.scala"))
+    val sessionMap = """WeakHashMap\s*\[\s*SparkSession\b""".r
+    val forked = for {
+      f <- files if f.getFileName.toString != "TowerMemo.scala"
+      code = stripComments(new String(Files.readAllBytes(f), "UTF-8"))
+      m <- sessionMap.findAllMatchIn(code)
+    } yield s"${root.relativize(f)}:${code.substring(0, m.start).count(_ == '\n') + 1}"
+    assert(forked.isEmpty, "per-session maps outside TowerMemo: " + forked.mkString(", "))
+  }
+
   private def jobsWhile(body: => Unit): Int = TestJobs.submittedWhile(spark)(body)
 
   test("building every fixture table submits no Spark job") {

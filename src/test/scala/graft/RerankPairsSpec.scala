@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TextQueries
 
-/** Round-17 (VERDICT r16 #4): q174's measured label-geometry
+/** q174's measured label-geometry
   * invariants, PINNED — the round-16 scaladoc records them as
   * measurements (pos∩neg disjoint, margins strictly positive, both
   * branches live), but a testdata regeneration could silently blunt

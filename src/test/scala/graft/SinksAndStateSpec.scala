@@ -9,8 +9,8 @@ import graft.streaming.RouteCommandSink
 import graft.ops.Aggregators
 import graft.ops.Aggregators.Stamped
 
-/** OP-3 CSV export, OP-5 command sink, OP-33 Aggregator, and the
-  * approx_count_distinct twin (SURVEY.md §2.11).
+/** OP-3 CSV export, OP-5 command sink and its throughput, OP-33
+  * Aggregator, and the approx_count_distinct twin (SURVEY.md §2.11).
   */
 class SinksAndStateSpec extends AnyFunSuite {
 
@@ -67,10 +67,22 @@ class SinksAndStateSpec extends AnyFunSuite {
     assert(got === 9)
   }
 
-  test("centroid Aggregator averages element-wise") {
-    val vecs = Seq(Seq(1.0, 2.0), Seq(3.0, 4.0), Seq(5.0, 6.0))
-    val got = vecs.toDS().select(new Aggregators.Centroid(2).toColumn).collect().head
-    assert(got === Seq(3.0, 4.0))
+  test("route sink throughput beats the reference's 10 routes/s ceiling by orders of magnitude") {
+    // BASELINE.md: the reference's 0.1 s global spacing caps it near
+    // 10 routes/s; the sink keeps per-device serialization but runs
+    // devices in parallel
+    val n = 2000
+    val routes = spark.range(n)
+      .select(concat(lit("dev"), pmod(col("id"), lit(8))).as("device"),
+        pmod(col("id"), lit(256)).cast("int").as("output"),
+        pmod(col("id") * 7, lit(256)).cast("int").as("input"))
+    val t0 = System.nanoTime()
+    val res = RouteCommandSink.applyRoutes(routes, _ => _ => None).collect()
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(res.map(_.getLong(2)).sum === n) // all succeeded
+    val throughput = n / secs
+    info(f"sink throughput: $throughput%.0f routes/s across 8 devices (reference ceiling ~10/s)")
+    assert(throughput > 100, s"$throughput routes/s")
   }
 
   test("approx_count_distinct stays within 5% of exact (EXT-4 approx twin)") {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingLm
 
 /** [[StreamingLm]] — the q155 admission-LM state maintained as a
-  * service (VERDICT r13 #4). Proves, across three waves with a genuine
+  * service. Proves, across three waves with a genuine
   * stream restart and a crash-window replay:
   *
   *  - SERVE ≡ ORACLE: after folding the q155 train slice as two

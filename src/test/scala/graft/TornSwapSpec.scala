@@ -131,6 +131,43 @@ class TornSwapSpec extends AnyFunSuite {
     cleanup(dir)
   }
 
+  test("labels: replays of folded merge, delete and update waves are skipped") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_labels_replay").toString
+    def merge(b: Long) = StreamingLabels.mergeBatch(dir)(Seq((1L, 2L), (2L, 3L)).toDF("da", "db"), b)
+    def delete(b: Long) = StreamingLabels.deleteBatch(dir)(Seq(2L).toDF("id"), b)
+    def update(b: Long) =
+      StreamingLabels.updateBatch(dir)(Seq(2L).toDF("id"), Seq((2L, 3L)).toDF("da", "db"), b)
+    merge(0L); delete(1L); update(2L)
+    def pairs() = StreamingLabels.livePairs(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def labels() = StreamingLabels.labels(spark, dir)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def check(when: String): Unit = {
+      val p = pairs()
+      assert(p === Set((2L, 3L)), s"live pairs wrong $when")
+      val cc = graft.ops.Dedup.fromPairs(p.toSeq.toDF("da", "db"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels() === cc, s"labels diverged from the live pair log's components $when")
+    }
+    check("before compaction")
+    StreamingLabels.compactPairLog(spark, dir)
+    assert(StreamingLabels.compactionHorizon(spark, dir) === Some(2L))
+    check("after compaction")
+
+    // the stream lost its checkpoint after the compaction: every wave
+    // replays, its pair-log, tombstone and revive markers gone with the fold
+    for ((what, replay, b) <- Seq(("merge", merge _, 0L), ("delete", delete _, 1L),
+        ("update", update _, 2L))) {
+      replay(b)
+      check(s"after the folded $what wave's replay")
+      for (t <- Seq("tombs", "revives"))
+        assert(!new File(s"$dir/$t").exists(), s"the folded $what wave re-landed $t")
+      assert(!new File(s"$dir/pairlog/gen=$b").exists(), s"the folded $what wave re-landed its pairs")
+    }
+    cleanup(dir)
+  }
+
   test("index: a write-first restart after a torn codes swap keeps the frozen codes") {
     val dir = Files.createTempDirectory("graft_torn_index").toString
     val cut = StreamingIndex.buildFrozen(spark, d, dir)

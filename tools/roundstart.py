@@ -32,8 +32,8 @@ REMEASURE = [
     "q158/q163 DSIR tie-break (docs at the cut vs seats left)",
     "q153/q159/q160/q161/q163/q164/q165 priority-slice liveness",
     "q155/q156 SurpriseMbits (flags neither none nor all)",
-    "band occupancy vs BandOccCap (masses block: band_over_cap)",
-    "embeddings: cells/occupancy masses (bench masses block)",
+    "band occupancy vs BandOccCap (q140_band_diagnostics per-band cost; DedupAuditSpec)",
+    "embeddings: edge-cell occupancy (q126/q135/q143 within-cell pairs; GraphDivSpec)",
 ]
 
 
@@ -54,19 +54,6 @@ def shape():
         row["_events_ts_type"] = str(ts[0]) if ts else "EMPTY"
         out[f"sf{sf}"] = row
     return out
-
-
-def _benchdiff_hint():
-    """Round-over-round bench adjudication is part of the protocol
-    (VERDICT r14 #4): point benchdiff at the newest committed perquery
-    artifact once this round's bench has run."""
-    import glob
-    arts = sorted(glob.glob(os.path.join(
-        os.path.dirname(__file__), "..", "BENCH_r*_perquery.json")))
-    if arts:
-        base = os.path.basename(arts[-1])
-        print(f"bench adjudication base: {base} — after this round's bench, run\n"
-              f"  python3 tools/benchdiff.py {base} /tmp/graft_bench.json")
 
 
 def main():
@@ -94,7 +81,6 @@ def main():
     if not diffs:
         print("testdata shape UNCHANGED vs committed snapshot "
               "(bytes still regenerate — run the full gate before new work)")
-        _benchdiff_hint()
         return 0
     print("TESTDATA SHAPE CHANGED:")
     print("\n".join(diffs))
