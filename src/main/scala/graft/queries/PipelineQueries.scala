@@ -832,22 +832,23 @@ object PipelineQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** EXT — LM-state UPDATE under the re-crawl wave (the lifecycle
-    * cell where q167's subtract and q156's add compose in
-    * ONE wave). The seeded ~12.8% hash slice of the TRAIN generation
-    * re-crawls to truncated content; the held LM state — trigram counts,
-    * context counts, and the COUNTED vocabulary `cw` — folds as
+  /** EXT — LM-state UPDATE under the re-crawl wave (the lifecycle cell
+    * where q167's subtract and q156's add compose in ONE wave). The
+    * seeded ~12.8% hash slice of the TRAIN generation re-crawls to
+    * truncated content; the held LM state — trigram counts, context
+    * counts, and the COUNTED vocabulary `cw` — folds as
     * held − slice-old + slice-new (union-sum, zeros drop), and
     * |V_live| = |support(cw)| exactly as in q167. The only hashing the
     * wave pays is the slice's re-derived trigrams (scan-linear in the
     * slice). The admission wave (docs ≥ cut) scores under the LIVE
-    * state, `v_live` in every row. Measured before wiring (r6 rule):
-    * every wave doc's mbits moves and 48/100 admission flags flip at
-    * sf0.01 (365/1000 at sf0.1); the truncation cuts mid-word, so the
-    * update BIRTHS vocabulary words (31 → 63 at sf0.01, → 123 at
-    * sf0.1) — the counted bag's add side is corpus-live here, while
-    * word DEATH stays corpus-dormant (every base word survives 87.2% of
-    * docs) and is already driven synthetically by LmRetractSpec's core.
+    * state, `v_live` in every row.
+    * Measured before wiring (r6 rule): every wave doc's mbits moves and
+    * 48/100 admission flags flip at sf0.01 (365/1000 at sf0.1); the
+    * truncation cuts mid-word, so the update BIRTHS vocabulary words (31
+    * → 63 at sf0.01, → 123 at sf0.1) — the counted bag's add side is
+    * corpus-live here, while word DEATH stays corpus-dormant (every base
+    * word survives 87.2% of docs) and is already driven synthetically by
+    * LmRetractSpec's core.
     *
     * The ORACLE retrains from scratch over the UPDATED train slice —
     * no fold anywhere — so the hash match proves subtract+add ≡ retrain
@@ -1112,24 +1113,23 @@ object PipelineQueries {
       |${dsirFinalSelect("168")}
       |ORDER BY a.doc_id""".stripMargin
 
-  /** EXT — DSIR selection under the RE-CRAWL wave (q158's feature
-    * counts are exactly the subtract-old-add-new shape q159 proved for
-    * stats, so the selection is maintainable): the
-    * seeded ~12.8% hash slice re-crawls to truncated content (q159's
-    * slice and transform — the mod-5 slice is source-aligned and DSIR
-    * stratifies by source, so it is BANNED here; see UpdMod's warning),
-    * and the selection re-derives under the updated universe with the
-    * LM STATE FOLDED, never retrained: per-dim target/pool counts and
-    * the two totals each fold as held − old-slice-partials +
-    * new-slice-partials (one union-sum aggregation over state +
-    * wave-bounded deltas); only the per-doc SCORING rescans the pool
-    * stream — inherent, since the totals enter every gram's surprisal,
-    * so every doc's score moves under any wave. The cut then re-derives
-    * by the q95 histogram idiom. Measured before wiring (r6 rule): the
-    * wave touches 4–33 target and 60–594 pool docs, flips 28/36/468
-    * selection flags at sf0.001/0.01/0.1, pool membership is stable
-    * (no halved doc drops below 2 tokens), and the tie-break BINDS
-    * (3 docs at the cut for 1 seat at sf0.001; 44 for 13 at sf0.1).
+  /** EXT — DSIR selection under the RE-CRAWL wave (q158's feature counts
+    * are exactly the subtract-old-add-new shape q159 proved for stats, so
+    * the selection is maintainable): the seeded ~12.8% hash slice
+    * re-crawls to truncated content (q159's slice and transform — the
+    * mod-5 slice is source-aligned and DSIR stratifies by source, so it
+    * is BANNED here; see UpdMod's warning), and the selection re-derives
+    * under the updated universe with the LM STATE FOLDED, never
+    * retrained: per-dim target/pool counts and the two totals each fold
+    * as held − old-slice-partials + new-slice-partials (one union-sum
+    * aggregation over state + wave-bounded deltas); only the per-doc
+    * SCORING rescans the pool stream — inherent, since the totals enter
+    * every gram's surprisal, so every doc's score moves under any wave.
+    * The cut then re-derives by the q95 histogram idiom. Measured before
+    * wiring (r6 rule): the wave touches 4–33 target and 60–594 pool docs,
+    * flips 28/36/468 selection flags at sf0.001/0.01/0.1, pool membership
+    * is stable (no halved doc drops below 2 tokens), and the tie-break
+    * BINDS (3 docs at the cut for 1 seat at sf0.001; 44 for 13 at sf0.1).
     *
     * The ORACLE recomputes q158 from scratch over the updated corpus
     * ([[dsirCtes]] instantiated on the u163 relation) — the hash match
@@ -1314,41 +1314,6 @@ object PipelineQueries {
     */
   val BpeSep = "~"
 
-  /** EXT — BPE tokenizer training, in-plan and oracle-verified: the
-    * q42 discipline (train inside the query with engine-exact
-    * arithmetic; mirror every iteration in SQL generated by the same
-    * Scala loop so parameters live in one place) applied to the other
-    * trained artifact every LLM pipeline ships — the tokenizer.
-    * Classic word-level BPE: vocabulary = distinct words with counts,
-    * each word starts as its character symbols, and each round merges
-    * the adjacent symbol pair with the highest corpus weight
-    * (occurrence count × word frequency; ties break lexicographically).
-    * Output = the merge table, the artifact a tokenizer serializes.
-    *
-    * The word's symbol string wraps every symbol in [[BpeSep]]
-    * (`~a~~b~…`), so "replace `~A~~B~` with `~AB~`" is exactly BPE's
-    * left-to-right non-overlapping merge in ONE `replace` call — both
-    * engines scan left-to-right and resume after the replacement, and a
-    * merged symbol can never false-match half of a later occurrence
-    * because every symbol carries its own delimiters.
-    *
-    * At scale: state is the vocabulary table (distinct words — millions,
-    * not the corpus), each round is one map (split + pair explode) plus
-    * one vocabulary-sized aggregate whose 1-row argmax the driver
-    * collects and re-embeds as literals — Lloyd-style iteration, moving
-    * one row per round off the cluster.
-    */
-  /** The shared BPE trainer behind [[q67BpeTrain]] and [[q68BpeEncode]]:
-    * returns the merge table and the final per-word symbol encoding.
-    * Rounds are driver-sequenced like q42's Lloyd iterations: each
-    * round's action collects exactly the 1-row argmax (the merge — the
-    * same single row a broadcast join would ship), then the next
-    * round's plan embeds it as literals. Weights are exact long sums
-    * and the alphabet (a–y + '~') contains no quote characters, so the
-    * embedded literals replay bit-identically (invariant 7). The
-    * replace chain stays a stack of narrow projections over the cached
-    * vocabulary — at a real merge count, re-persist every few rounds.
-    */
   /** Session memo of the FULL-corpus BPE trainer (round-19: q67, q68
     * and q162's refreshed tower all replayed the identical
     * deterministic 6-round driver loop — 3 trainings per session for
@@ -1368,9 +1333,20 @@ object PipelineQueries {
       (m, cur.localCheckpoint(true))
     }
 
-  /** [[bpeTrainOn]] over an arbitrary corpus frame — q162 trains the OLD
-    * tokenizer on the frozen generation and the refreshed one on the
-    * full corpus, so the trainer must be corpus-parameterized.
+  /** The shared BPE trainer behind [[q67BpeTrain]] and [[q68BpeEncode]]:
+    * returns the merge table and the final per-word symbol encoding.
+    * Rounds are driver-sequenced like q42's Lloyd iterations: each
+    * round's action collects exactly the 1-row argmax (the merge — the
+    * same single row a broadcast join would ship), then the next
+    * round's plan embeds it as literals. Weights are exact long sums
+    * and the alphabet (a–y + '~') contains no quote characters, so the
+    * embedded literals replay bit-identically (invariant 7). The
+    * replace chain stays a stack of narrow projections over the cached
+    * vocabulary — at a real merge count, re-persist every few rounds.
+    *
+    * Over an arbitrary corpus frame — q162 trains the OLD tokenizer on
+    * the frozen generation and the refreshed one on the full corpus, so
+    * the trainer must be corpus-parameterized.
     */
   private def bpeTrainOn(docs: DataFrame)
       : (Vector[(Int, String, String, String, Long)], DataFrame) = {
@@ -1417,7 +1393,30 @@ object PipelineQueries {
     (merges, cur)
   }
 
-
+  /** EXT — BPE tokenizer training, in-plan and oracle-verified: the
+    * q42 discipline (train inside the query with engine-exact
+    * arithmetic; mirror every iteration in SQL generated by the same
+    * Scala loop so parameters live in one place) applied to the other
+    * trained artifact every LLM pipeline ships — the tokenizer.
+    * Classic word-level BPE: vocabulary = distinct words with counts,
+    * each word starts as its character symbols, and each round merges
+    * the adjacent symbol pair with the highest corpus weight
+    * (occurrence count × word frequency; ties break lexicographically).
+    * Output = the merge table, the artifact a tokenizer serializes.
+    *
+    * The word's symbol string wraps every symbol in [[BpeSep]]
+    * (`~a~~b~…`), so "replace `~A~~B~` with `~AB~`" is exactly BPE's
+    * left-to-right non-overlapping merge in ONE `replace` call — both
+    * engines scan left-to-right and resume after the replacement, and a
+    * merged symbol can never false-match half of a later occurrence
+    * because every symbol carries its own delimiters.
+    *
+    * At scale: state is the vocabulary table (distinct words — millions,
+    * not the corpus), each round is one map (split + pair explode) plus
+    * one vocabulary-sized aggregate whose 1-row argmax the driver
+    * collects and re-embeds as literals — Lloyd-style iteration, moving
+    * one row per round off the cluster.
+    */
   val q67BpeTrain: Q = (s, d) => {
     import s.implicits._
     bpeFull(s, d)._1.toDF("round", "a", "b", "merged", "weight").orderBy(col("round"))
@@ -2963,20 +2962,20 @@ object PipelineQueries {
         expr("substring(text, 1, length(text) DIV 2)").as("new_text")),
       tracked)
 
-  /** EXT — chunk-index DELETE (the q160 lifecycle's takedown cell:
-    * the update core with an empty new side): the
-    * seeded ~12.8% tombstone slice leaves the corpus wholesale, so the
-    * wave retracts the slice's chunks and the group state (copies,
-    * distinct docs, keeper — min/countDistinct do not retract)
-    * recomputes GROUP-SCOPED over exactly the shas the dead docs
-    * touched, from the held index's surviving members; untouched groups
-    * pass through an anti-join byte-unchanged. Unlike q160, group BIRTH
-    * is impossible by algebra, not merely dormant — a delete only
-    * removes chunk rows, and a sha that was not duplicated cannot
-    * become duplicated by losing members — so there is no synthetic
-    * branch to drive (the q153 algebraic-exclusion standard). Measured
-    * before wiring: the wave kills 4/9/78 dup groups and flips 2/2/3
-    * keepers at sf0.001/0.01/0.1 — non-vacuous at every SF.
+  /** EXT — chunk-index DELETE (the q160 lifecycle's takedown cell: the
+    * update core with an empty new side): the seeded ~12.8% tombstone
+    * slice leaves the corpus wholesale, so the wave retracts the slice's
+    * chunks and the group state (copies, distinct docs, keeper —
+    * min/countDistinct do not retract) recomputes GROUP-SCOPED over
+    * exactly the shas the dead docs touched, from the held index's
+    * surviving members; untouched groups pass through an anti-join
+    * byte-unchanged. Unlike q160, group BIRTH is impossible by algebra,
+    * not merely dormant — a delete only removes chunk rows, and a sha
+    * that was not duplicated cannot become duplicated by losing members —
+    * so there is no synthetic branch to drive (the q153
+    * algebraic-exclusion standard). Measured before wiring: the wave
+    * kills 4/9/78 dup groups and flips 2/2/3 keepers at sf0.001/0.01/0.1
+    * — non-vacuous at every SF.
     *
     * The ORACLE recomputes the groups from the surviving corpus with no
     * maintenance anywhere; `touched`/`keeper_changed` mirror from

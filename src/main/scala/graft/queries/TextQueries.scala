@@ -587,25 +587,24 @@ object TextQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** EXT-3n — IVFADC index DELETE (the quantization family's q152 twin
-    * at the oracle tier — StreamingIndex.deleteBatch proved the
-    * plumbing in specs; this puts tombstone surgery on the
-    * q91 tower under the hash gate). Tombstones are the seeded ~12.8%
-    * slice ([[DeleteBound]]); the surgery is two anti-joins — the codes
-    * table and the inverted-list membership drop tombstoned rows — and
-    * BOTH quantizers stay frozen (a takedown never retrains; that
-    * decision is q144's refresh audit). Serving then runs the identical
-    * IVFADC path over the live lists: probed cells, per-cell residual
-    * distance tables, integer ADC over live codes only — the shortlist
-    * REFILLS with next-best live candidates, which is what makes
-    * live-only serving more than a post-filter. Dead vectors keep
-    * QUERYING (3 of the 5 probe queries are tombstoned — the q152
-    * convention: a deleted vector can be a query, never a result);
-    * `exact_hit` audits each served row against the exact L2 top-5 over
-    * LIVE vectors (the q93 discipline), `q_dead` marks tombstoned
-    * queries. Measured before wiring (r12 slice sweep): 64/500 vectors
-    * die at the oracle SF, ≥1 pre-delete exact-top-5 row dies, so the
-    * served lists provably move.
+  /** EXT-3n — IVFADC index DELETE (the quantization family's q152 twin at
+    * the oracle tier — StreamingIndex.deleteBatch proved the plumbing in
+    * specs; this puts tombstone surgery on the q91 tower under the hash
+    * gate). Tombstones are the seeded ~12.8% slice ([[DeleteBound]]); the
+    * surgery is two anti-joins — the codes table and the inverted-list
+    * membership drop tombstoned rows — and BOTH quantizers stay frozen (a
+    * takedown never retrains; that decision is q144's refresh audit).
+    * Serving then runs the identical IVFADC path over the live lists:
+    * probed cells, per-cell residual distance tables, integer ADC over
+    * live codes only — the shortlist REFILLS with next-best live
+    * candidates, which is what makes live-only serving more than a
+    * post-filter. Dead vectors keep QUERYING (3 of the 5 probe queries
+    * are tombstoned — the q152 convention: a deleted vector can be a
+    * query, never a result); `exact_hit` audits each served row against
+    * the exact L2 top-5 over LIVE vectors (the q93 discipline), `q_dead`
+    * marks tombstoned queries. Measured before wiring (r12 slice sweep):
+    * 64/500 vectors die at the oracle SF, ≥1 pre-delete exact-top-5 row
+    * dies, so the served lists provably move.
     *
     * The ORACLE replays the full q91 tower ([[ivfTrainAssignCtes]] +
     * [[ivfadcResidualCtes]] + [[pqChainCtes]]), applies the liveness
@@ -676,38 +675,35 @@ object TextQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** EXT-3o — ANN index COMPACTION (index merge — the serving tier
-    * had train/append/delete/refresh-audit but never merged
-    * generations into one fresh serving index). Scenario: the
-    * full-corpus IVFADC index (q91's tower) has absorbed the seeded
-    * ~12.8% tombstone wave ([[DeleteBound]] — q171's state) and
-    * compaction is due ([[graft.streaming.StreamingIndex.compactionDue]]'s
-    * tomb-ratio trigger fires well below 25%... this is the RETRAIN
-    * variant a tier runs when it pays the rebuild). The compactor:
-    *  1. enumerates the surviving membership FROM THE HELD INDEX STATE
-    *     (distinct vec_ids of the codes table minus the tombstones —
-    *     never from the raw corpus; that enumeration being right is
-    *     half the law),
-    *  2. retrains BOTH quantizers on the survivors (fresh IVF cells,
-    *     fresh residual codebooks — unlike q171, where a takedown
-    *     keeps them frozen),
-    *  3. re-encodes and serves live-only through the new tower.
-    * The ORACLE is the BLIND rebuild: the identical tower replayed
-    * from the raw embeddings with the liveness predicate — the hash
-    * match IS the compaction law `compact(held codes ∖ tombs) ≡
-    * rebuild(live corpus)`, including the seed shrinkage (live ids
-    * < [[graft.ops.Ivf.K]] seed the cells, so dead seeds drop) and
-    * every downstream distance. The readout is the
-    * refresh-vs-compact decision table: per served row `exact_hit`
-    * (vs the live exact L2 top-5) and `stale_hit` (row also served by
-    * the UN-compacted q171 arm), plus per-query `hits_compact` /
-    * `hits_stale` / `compact_gain` — what paying the rebuild buys
-    * over serving the frozen tower with anti-joined tombstones
-    * (q144's refresh_gain, posed for the post-delete index). Measured
-    * at sf0.01 before wiring: gains span −3..+2 across the 5 probes
-    * (the survivor-trained tower wins some queries and loses others at
-    * 436 live vectors) — the decision table is genuinely two-sided,
-    * which is exactly why a tier consults it before paying a rebuild.
+  /** EXT-3o — ANN index COMPACTION (index merge — the serving tier had
+    * train/append/delete/refresh-audit but never merged generations into
+    * one fresh serving index). Scenario: the full-corpus IVFADC index
+    * (q91's tower) has absorbed the seeded ~12.8% tombstone wave
+    * ([[DeleteBound]] — q171's state) and compaction is due
+    * ([[graft.streaming.StreamingIndex.compactionDue]]'s tomb-ratio
+    * trigger fires well below 25%... this is the RETRAIN variant a tier
+    * runs when it pays the rebuild). The compactor: 1. enumerates the
+    * surviving membership FROM THE HELD INDEX STATE (distinct vec_ids of
+    * the codes table minus the tombstones — never from the raw corpus;
+    * that enumeration being right is half the law), 2. retrains BOTH
+    * quantizers on the survivors (fresh IVF cells, fresh residual
+    * codebooks — unlike q171, where a takedown keeps them frozen), 3.
+    * re-encodes and serves live-only through the new tower. The ORACLE is
+    * the BLIND rebuild: the identical tower replayed from the raw
+    * embeddings with the liveness predicate — the hash match IS the
+    * compaction law `compact(held codes ∖ tombs) ≡ rebuild(live corpus)`,
+    * including the seed shrinkage (live ids < [[graft.ops.Ivf.K]] seed
+    * the cells, so dead seeds drop) and every downstream distance. The
+    * readout is the refresh-vs-compact decision table: per served row
+    * `exact_hit` (vs the live exact L2 top-5) and `stale_hit` (row also
+    * served by the UN-compacted q171 arm), plus per-query `hits_compact`
+    * / `hits_stale` / `compact_gain` — what paying the rebuild buys over
+    * serving the frozen tower with anti-joined tombstones (q144's
+    * refresh_gain, posed for the post-delete index). Measured at sf0.01
+    * before wiring: gains span −3..+2 across the 5 probes (the
+    * survivor-trained tower wins some queries and loses others at 436
+    * live vectors) — the decision table is genuinely two-sided, which is
+    * exactly why a tier consults it before paying a rebuild.
     *
     * Oracle shape: TWO tower replays in ONE statement (the q144
     * f-prefix machinery) — unprefixed = the live-trained compact
@@ -1431,18 +1427,17 @@ object TextQueries {
       .orderBy(col("ma"), col("mb"))
   }
 
-  /** EXT — the MEDIA dedup state under RE-CRAWL (multimodal was the
-    * one dedup family without an update-lifecycle story). Measured on
-    * this corpus before wiring (r6 rule): the content-HASH side
-    * (q73's clusters) is near-vacuous under the
-    * seeded update slice — at sf0.01 NO slice member sits in a
-    * multi-member cluster (updates only re-hash singletons; 2 keeper
-    * hand-offs exist corpus-wide at sf0.1 only) — so the maintained
-    * artifact here is the PERCEPTUAL near-dup state (q74's), which is
-    * richly live: 21/21/1170 verified pairs die and 8/8/718 are born
-    * across sf0.001/0.01/0.1, including cap-flip births between
-    * UNTOUCHED docs at sf0.1 (an updated doc leaving a saturated band
-    * bucket releases it — the cap-flip seen at scale in rolling
+  /** EXT — the MEDIA dedup state under RE-CRAWL (multimodal was the one
+    * dedup family without an update-lifecycle story). Measured on this
+    * corpus before wiring (r6 rule): the content-HASH side (q73's
+    * clusters) is near-vacuous under the seeded update slice — at sf0.01
+    * NO slice member sits in a multi-member cluster (updates only re-hash
+    * singletons; 2 keeper hand-offs exist corpus-wide at sf0.1 only) — so
+    * the maintained artifact here is the PERCEPTUAL near-dup state
+    * (q74's), which is richly live: 21/21/1170 verified pairs die and
+    * 8/8/718 are born across sf0.001/0.01/0.1, including cap-flip births
+    * between UNTOUCHED docs at sf0.1 (an updated doc leaving a saturated
+    * band bucket releases it — the cap-flip seen at scale in rolling
     * re-crawl waves, here inside an oracle-able query).
     *
     * The maintained path holds the original SIGNATURE table (the state
@@ -1568,27 +1563,26 @@ object TextQueries {
   }
 
   /** EXT — the MEDIA pair state under DELETE (the q164 lifecycle's
-    * takedown cell) — and, unlike q164's full band
-    * re-join, a genuinely DELTA-BOUNDED maintenance pass, because
-    * deletion obeys a closed pair algebra: signatures never change, so
-    * a surviving pair's candidacy can only be GAINED, never lost, and
-    * only through a band bucket crossing the occupancy cap downward.
-    * The maintained pair set is therefore EXACTLY
-    * held-pairs − dead-endpoint-pairs ∪ verify(released-bucket pairs):
-    * (1) pairs with a tombstoned endpoint drop (two anti-joins on the
-    * held pair table); (2) bucket occupancy re-counts from the DEAD
-    * docs' band rows alone (wave-bounded — held occ minus the dead
-    * delta); (3) buckets that flipped from over-cap to under-cap
-    * release their surviving members into the band self-join, XOR
-    * verify against HELD signatures (zero re-decode, zero re-hash).
+    * takedown cell) — and, unlike q164's full band re-join, a genuinely
+    * DELTA-BOUNDED maintenance pass, because deletion obeys a closed pair
+    * algebra: signatures never change, so a surviving pair's candidacy
+    * can only be GAINED, never lost, and only through a band bucket
+    * crossing the occupancy cap downward. The maintained pair set is
+    * therefore EXACTLY held-pairs − dead-endpoint-pairs ∪
+    * verify(released-bucket pairs): (1) pairs with a tombstoned endpoint
+    * drop (two anti-joins on the held pair table); (2) bucket occupancy
+    * re-counts from the DEAD docs' band rows alone (wave-bounded — held
+    * occ minus the dead delta); (3) buckets that flipped from over-cap to
+    * under-cap release their surviving members into the band self-join,
+    * XOR verify against HELD signatures (zero re-decode, zero re-hash).
     * Nothing else can change: an under-cap bucket stays under cap when
     * rows leave, and no pair can enter a bucket it was not already in.
-    * Each output pair carries `born` (absent from the held pair set —
-    * a cap-release birth between UNTOUCHED docs). Measured before
-    * wiring: 23/21/1179 held pairs die at sf0.001/0.01/0.1 and the
-    * born branch is LIVE at sf0.1 (453
-    * cap-release births; 0 at the smaller SFs where the cap never
-    * binds — the branch the oracle still replays everywhere).
+    * Each output pair carries `born` (absent from the held pair set — a
+    * cap-release birth between UNTOUCHED docs). Measured before wiring:
+    * 23/21/1179 held pairs die at sf0.001/0.01/0.1 and the born branch is
+    * LIVE at sf0.1 (453 cap-release births; 0 at the smaller SFs where
+    * the cap never binds — the branch the oracle still replays
+    * everywhere).
     *
     * The ORACLE recomputes q74 from scratch over the surviving corpus
     * ([[media74Ctes]] on the survivor relation) and mirrors `born`
@@ -2430,21 +2424,20 @@ object TextQueries {
       .orderBy(col("qid"), col("rank"))
   }
 
-  /** EXT — BM25 retrieval state under DELETE (the takedown cell:
-    * q165's fold minus the add side). The seeded ~12.8%
-    * tombstone slice leaves the corpus wholesale: membership rows drop
-    * (one anti-join), per-content member counts fold DOWN (held − slice;
-    * contents at zero drop out of every join), and the held gram
-    * MULTISETS are untouched — a takedown pays ZERO hashing, because a
-    * dead content's `tfg` rows are excluded by the `grpc` joins (the
-    * documented [[bm25FromState]] contract, exercised corpus-live here
-    * for the first time). Scoring is the shared [[bm25FromState]] body —
-    * inherent full rescore, since df/N/T enter every term weight.
-    * Tombstoned eval queries die with their membership rows (unlike
-    * q171's external-vector queries, a BM25 query IS a corpus row
-    * here — deleting it deletes the query). Measured before wiring:
-    * 64/500 docs and 6/50 queries die at sf0.01 with 108 of 250 top-5
-    * memberships changed (1,844 of 2,500 at sf0.1).
+  /** EXT — BM25 retrieval state under DELETE (the takedown cell: q165's
+    * fold minus the add side). The seeded ~12.8% tombstone slice leaves
+    * the corpus wholesale: membership rows drop (one anti-join),
+    * per-content member counts fold DOWN (held − slice; contents at zero
+    * drop out of every join), and the held gram MULTISETS are untouched —
+    * a takedown pays ZERO hashing, because a dead content's `tfg` rows
+    * are excluded by the `grpc` joins (the documented [[bm25FromState]]
+    * contract, exercised corpus-live here for the first time). Scoring is
+    * the shared [[bm25FromState]] body — inherent full rescore, since
+    * df/N/T enter every term weight. Tombstoned eval queries die with
+    * their membership rows (unlike q171's external-vector queries, a BM25
+    * query IS a corpus row here — deleting it deletes the query).
+    * Measured before wiring: 64/500 docs and 6/50 queries die at sf0.01
+    * with 108 of 250 top-5 memberships changed (1,844 of 2,500 at sf0.1).
     *
     * The ORACLE recomputes q106's PER-DOCUMENT brute formulation over
     * the surviving corpus — one hash match proves the content grouping
@@ -2566,21 +2559,20 @@ object TextQueries {
   private[graft] val RerankPosK = 3
   private[graft] val RerankNegMin = 6
 
-  /** EXT — cross-encoder reranker TRAINING-PAIR mining (the data-prep
-    * op behind every rerank distillation pipeline: retrieve with a
-    * cheap ranker, label with a teacher, emit (query, positive,
-    * hard-negative) contrastive pairs). The lexical
-    * list is [[bm25Scored]] cut at [[RrfDepth]] (q125's candidates);
-    * the teacher is the embedding cosine (the doc's own vector,
-    * vec_id ≡ doc_id — q125's semantic side, DotFold bit-stable).
-    * Candidates (and queries) without an embedding drop via inner
-    * joins — the teacher can only label what it can see (at sf0.1 the
-    * vector table covers 2,000 of 5,000 docs; 150/200 surviving
-    * queries still emit pairs, measured). Per query the emitted pairs
-    * are the bounded positive × hard-negative product (≤ 3×14), each
-    * carrying both teacher scores, the margin (one subtraction of
-    * engine-identical doubles), and both lexical ranks — exactly the
-    * rows a reranker trainer consumes.
+  /** EXT — cross-encoder reranker TRAINING-PAIR mining (the data-prep op
+    * behind every rerank distillation pipeline: retrieve with a cheap
+    * ranker, label with a teacher, emit (query, positive, hard-negative)
+    * contrastive pairs). The lexical list is [[bm25Scored]] cut at
+    * [[RrfDepth]] (q125's candidates); the teacher is the embedding
+    * cosine (the doc's own vector, vec_id ≡ doc_id — q125's semantic
+    * side, DotFold bit-stable). Candidates (and queries) without an
+    * embedding drop via inner joins — the teacher can only label what it
+    * can see (at sf0.1 the vector table covers 2,000 of 5,000 docs;
+    * 150/200 surviving queries still emit pairs, measured). Per query the
+    * emitted pairs are the bounded positive × hard-negative product
+    * (≤ 3×14), each carrying both teacher scores, the margin (one
+    * subtraction of engine-identical doubles), and both lexical ranks —
+    * exactly the rows a reranker trainer consumes.
     *
     * Scale shape: the genuinely new join is query-grained — two
     * retrieval outputs (each already WindowGroupLimit-trimmed to
@@ -6043,19 +6035,18 @@ object TextQueries {
         |WHERE r.rank <= 5
         |ORDER BY r.query_id, r.rank""".stripMargin
 
-  /** EXT — the COMPOSED PIPELINE WAVE under the oracle hash gate
-    * (the `_WAVE` cross-store consistency contract —
-    * [[graft.streaming.StreamingPipeline]] — was the one major
-    * capability proven only by specs). This query RUNS the real
-    * machinery: four stores (corpus, dedup labels, PQ index, admission
-    * LM) in a session-scratch root, wave 0 = the full corpus build,
-    * wave 1 = a composed maintenance wave (the q157 re-crawl slice
-    * upserted into corpus + labels + LM; the q171 tombstone slice
-    * deleted from the index), each store through its own idempotent
-    * batch writer, both waves sealed by
-    * [[graft.streaming.StreamingPipeline.commitWave]]. The output is
-    * the CONSISTENT READER's four-store readout AS OF wave 1
-    * ([[graft.streaming.StreamingPipeline.at]]): live corpus rows
+  /** EXT — the COMPOSED PIPELINE WAVE under the oracle hash gate (the
+    * `_WAVE` cross-store consistency contract —
+    * [[graft.streaming.StreamingPipeline]] — was the one major capability
+    * proven only by specs). This query RUNS the real machinery: four
+    * stores (corpus, dedup labels, PQ index, admission LM) in a
+    * session-scratch root, wave 0 = the full corpus build, wave 1 = a
+    * composed maintenance wave (the q157 re-crawl slice upserted into
+    * corpus + labels + LM; the q171 tombstone slice deleted from the
+    * index), each store through its own idempotent batch writer, both
+    * waves sealed by [[graft.streaming.StreamingPipeline.commitWave]].
+    * The output is the CONSISTENT READER's four-store readout AS OF
+    * wave 1 ([[graft.streaming.StreamingPipeline.at]]): live corpus rows
     * (content-pinned by sha2 — ≡ DuckDB sha256), dedup labels, index
     * top-k, LM scores of the post-update corpus head, as one
     * discriminated union `(part, id, k, v, v2, s)`.

@@ -218,11 +218,11 @@ object StreamingGraph {
       repAsg = asg, withIsNew = true, corpus = corp)
   }
 
-  // ---- AS-OF serving: the labelsAt /
-  // liveCorpusAt pattern over the edge/member generations — exact at or
-  // above the compaction horizon, failing loudly below it (compaction
-  // IS the repair: it rewrites the adjacency and drops the tombstones,
-  // so older points are unreconstructible).
+  // ---- AS-OF serving: the labelsAt / liveCorpusAt pattern over the
+  // edge/member generations — exact at or above the compaction horizon,
+  // failing loudly below it (compaction IS the repair: it rewrites the
+  // adjacency and drops the tombstones, so older points are
+  // unreconstructible).
 
   /** The compaction horizon (highest wave folded by [[compact]]), or
     * None if never compacted.

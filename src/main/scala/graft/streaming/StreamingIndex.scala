@@ -199,11 +199,11 @@ object StreamingIndex {
       tombsOver(s, indexDir, st.gens("tombs")))
   }
 
-  // ---- AS-OF serving: the labelsAt /
-  // liveCorpusAt pattern over code generations — the index's state as
-  // of the END of wave `batchId`, exact at or above the compaction
-  // horizon, failing loudly below it (compaction materializes the live
-  // set and drops the tombstones, so older points are gone).
+  // ---- AS-OF serving: the labelsAt / liveCorpusAt pattern over code
+  // generations — the index's state as of the END of wave `batchId`,
+  // exact at or above the compaction horizon, failing loudly below it
+  // (compaction materializes the live set and drops the tombstones, so
+  // older points are gone).
 
   /** The compaction horizon (highest wave folded by [[compact]]), or
     * None if never compacted. As-of reads below it are

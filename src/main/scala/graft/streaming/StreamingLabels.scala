@@ -235,9 +235,9 @@ object StreamingLabels {
     * captured listing feeds the fold, its digest, its write and the
     * horizon (the highest wave folded: pairs, tombs or revives — a
     * deletion is history too). Call BETWEEN waves (the serving loop's
-    * maybeCompact slot): a replayed wave at or below the horizon skips
-    * in every writer, so dropping the tombstones cannot resurrect
-    * anything a replay could reintroduce; a pair naming a compacted-away id that
+    * maybeCompact slot): a replayed wave at or below the horizon skips in
+    * every writer, so dropping the tombstones cannot resurrect anything a
+    * replay could reintroduce; a pair naming a compacted-away id that
     * arrives AFTER compaction is a genuinely new observation (the
     * document re-entering the corpus) and is admitted as such.
     */
@@ -388,11 +388,10 @@ object StreamingLabels {
     * Replay/crash safety: the wave's commit point is the TOMBSTONE
     * marker (checked first, with the compaction horizon: a folded
     * wave's tombstones would kill compacted pairs a later wave
-    * re-added). A crash after the label gen but before the
-    * tombstones replays into an identical recompute — `labelsAsOf`
-    * reads strictly below `batchId`, so the half-written wave's own
-    * output never feeds its replay — and the label write is
-    * overwrite-idempotent.
+    * re-added). A crash after the label gen but before the tombstones
+    * replays into an identical recompute — `labelsAsOf` reads strictly
+    * below `batchId`, so the half-written wave's own output never feeds
+    * its replay — and the label write is overwrite-idempotent.
     */
   def deleteBatch(labelDir: String, parts: Int = DefaultParts)(
       ids: DataFrame, batchId: Long): Unit = {
@@ -451,25 +450,24 @@ object StreamingLabels {
     * currently dead and NOT in this wave's ids still drop — an update
     * cannot resurrect a third party.
     *
-    * Replay/crash safety: the commit point is the REVIVES marker
-    * (checked first — the last write — with the compaction horizon).
-    * Every earlier write replays
-    * idempotently: `labelsAsOf`/`livePairsAsOf` read strictly below
-    * `batchId`, so the crashed attempt's own gens never feed its
-    * replay, and all writes are overwrite-mode. THREE pre-commit crash
-    * windows have observable intermediate state, each healed by the
-    * replay: (1) pairlog committed, label gen not — `livePairs` sees
-    * the wave's new pairs ALONGSIDE the old pairs they should kill
-    * (tombs are not yet written), so `labelsAt(batchId)` over-merges
-    * until replay; (2) label gen committed, tombs not — served
-    * `labels` already reflect delete+merge while `livePairs`/`labelsAt`
-    * still count the old pairs, so labels ≢ CC(livePairs) transiently;
-    * (3) tombs committed, revives not — pair liveness and labels are
-    * both correct, but NEW arrivals for the updated ids are suppressed
-    * at the ingestion filter. The standing invariant
-    * labels ≡ CC(livePairs) is therefore guaranteed only at WAVE
-    * BOUNDARIES after replay, never mid-wave — callers that read both
-    * stores must read between waves (RollingPipelineSpec's discipline).
+    * Replay/crash safety: the commit point is the REVIVES marker (checked
+    * first — the last write — with the compaction horizon). Every earlier
+    * write replays idempotently: `labelsAsOf`/`livePairsAsOf` read
+    * strictly below `batchId`, so the crashed attempt's own gens never
+    * feed its replay, and all writes are overwrite-mode. THREE pre-commit
+    * crash windows have observable intermediate state, each healed by the
+    * replay: (1) pairlog committed, label gen not — `livePairs` sees the
+    * wave's new pairs ALONGSIDE the old pairs they should kill (tombs are
+    * not yet written), so `labelsAt(batchId)` over-merges until replay;
+    * (2) label gen committed, tombs not — served `labels` already reflect
+    * delete+merge while `livePairs`/`labelsAt` still count the old pairs,
+    * so labels ≢ CC(livePairs) transiently; (3) tombs committed, revives
+    * not — pair liveness and labels are both correct, but NEW arrivals
+    * for the updated ids are suppressed at the ingestion filter. The
+    * standing invariant labels ≡ CC(livePairs) is therefore guaranteed
+    * only at WAVE BOUNDARIES after replay, never mid-wave — callers that
+    * read both stores must read between waves (RollingPipelineSpec's
+    * discipline).
     */
   def updateBatch(labelDir: String, parts: Int = DefaultParts)(
       ids: DataFrame, pairs: DataFrame, batchId: Long): Unit = {

@@ -5,19 +5,19 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Streaming maintenance of the q155 admission-LM state — the service
-  * twin q156 proved the fold law for (every other maintained artifact
-  * had one; the LM folded in-query only). The held
-  * state is exactly q156's generation partials: trigram conditional
-  * counts `cb(ctx, w)`, context counts `cu(ctx)`, and the vocabulary —
-  * counts ADD across waves, the vocabulary merges as a DISTINCT UNION
-  * (|V| does NOT add — the non-trivial half of the merge law). Each
-  * micro-batch commits one generation under `lmDir/waves/gen=<batchId>`
-  * holding ALL THREE partial tables plus a wave-level `_WAVE` marker
-  * written last; reads fold the committed generations algebraically
-  * (merge-on-read, the StreamingSketch discipline lifted to disk so the
-  * state survives restarts), and [[compactLm]] periodically folds them
-  * into one generation with a certified [[GenStore]] fold-and-swap so
-  * the read cost stays bounded.
+  * twin q156 proved the fold law for (every other maintained artifact had
+  * one; the LM folded in-query only). The held state is exactly q156's
+  * generation partials: trigram conditional counts `cb(ctx, w)`, context
+  * counts `cu(ctx)`, and the vocabulary — counts ADD across waves, the
+  * vocabulary merges as a DISTINCT UNION (|V| does NOT add — the
+  * non-trivial half of the merge law). Each micro-batch commits one
+  * generation under `lmDir/waves/gen=<batchId>` holding ALL THREE partial
+  * tables plus a wave-level `_WAVE` marker written last; reads fold the
+  * committed generations algebraically (merge-on-read, the
+  * StreamingSketch discipline lifted to disk so the state survives
+  * restarts), and [[compactLm]] periodically folds them into one
+  * generation with a certified [[GenStore]] fold-and-swap so the read
+  * cost stays bounded.
   *
   * Why ONE generation root instead of three parallel table roots (the
   * round-14 review's finding): a wave spans three tables, so both its

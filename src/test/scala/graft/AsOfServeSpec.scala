@@ -8,14 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{StreamingGraph, StreamingIndex}
 
 /** AS-OF serving for the two ANN index services (labelsAt/liveCorpusAt
-  * closed audit time travel for labels and corpus
-  * rows; this closes the third stateful store). For each service:
-  * searchAt(b) over a lifecycle of two append waves + one delete wave
-  * must equal a REFERENCE TWIN index built with only the waves ≤ b
-  * (twin = a separate on-disk index, so the comparison is between two
-  * independent materializations, not a replay); after compaction the
-  * horizon is recorded, points below it throw, and the horizon point
-  * itself still serves exactly the live search.
+  * closed audit time travel for labels and corpus rows; this closes the
+  * third stateful store). For each service: searchAt(b) over a lifecycle
+  * of two append waves + one delete wave must equal a REFERENCE TWIN
+  * index built with only the waves ≤ b (twin = a separate on-disk index,
+  * so the comparison is between two independent materializations, not a
+  * replay); after compaction the horizon is recorded, points below it
+  * throw, and the horizon point itself still serves exactly the live
+  * search.
   */
 class AsOfServeSpec extends AnyFunSuite {
 

@@ -7,14 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{StreamingCorpus, StreamingIndex, StreamingLabels}
 
-/** A crash BETWEEN components of one
-  * composed wave, driven — not argued. One re-crawl wave (batchId 1)
-  * spans three stores: the corpus row (updateBatch), the dedup labels
-  * (updateBatch), and the ANN index (delete old vec + append its
-  * replacement — the documented index-update model). The driver's
-  * recovery contract is at-least-once whole-wave re-drive: each
-  * component skips-or-applies idempotently on its own commit marker.
-  * This spec kills the pipeline at BOTH inter-component windows:
+/** A crash BETWEEN components of one composed wave, driven — not argued.
+  * One re-crawl wave (batchId 1) spans three stores: the corpus row
+  * (updateBatch), the dedup labels (updateBatch), and the ANN index
+  * (delete old vec + append its replacement — the documented index-update
+  * model). The driver's recovery contract is at-least-once whole-wave
+  * re-drive: each component skips-or-applies idempotently on its own
+  * commit marker. This spec kills the pipeline at BOTH inter-component
+  * windows:
   *
   *  - KILL A — corpus committed, labels not: the corpus already serves
   *    the re-crawled text while the labels still reflect the old

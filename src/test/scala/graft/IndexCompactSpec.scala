@@ -6,12 +6,12 @@ import graft.queries.TextQueries
 
 /** Round-17: q176's serving and readout invariants, pinned at birth
   * (measured invariants pinned as the query lands, not after a
-  * regeneration blunts them): the compacted index serves live
-  * vectors only (independent LCG hash model), the per-query recall
-  * columns are exactly the row-flag sums, and the stale columns agree
-  * with q171's own output (the two queries share the stale arm through
-  * one factored helper — this catches the helper drifting from the
-  * registered q171 path).
+  * regeneration blunts them): the compacted index serves live vectors
+  * only (independent LCG hash model), the per-query recall columns are
+  * exactly the row-flag sums, and the stale columns agree with q171's own
+  * output (the two queries share the stale arm through one factored
+  * helper — this catches the helper drifting from the registered q171
+  * path).
   */
 class IndexCompactSpec extends AnyFunSuite {
 

@@ -4,13 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TextQueries
 
-/** q171's measured serving invariants,
-  * PINNED — the r16 scaladoc records "the shortlist REFILLS live-only"
-  * and "no tombstoned vector is served" as measurements; a testdata
-  * regeneration could blunt the delete slice (kill no served vector)
-  * and the hash gate would still pass. This spec goes red instead.
-  * The tombstone set is re-derived with plain Scala long arithmetic
-  * (the seeded LCG mod 2³¹−1), independent of the Column expression.
+/** q171's measured serving invariants, PINNED — the r16 scaladoc records
+  * "the shortlist REFILLS live-only" and "no tombstoned vector is served"
+  * as measurements; a testdata regeneration could blunt the delete slice
+  * (kill no served vector) and the hash gate would still pass. This spec
+  * goes red instead. The tombstone set is re-derived with plain Scala
+  * long arithmetic (the seeded LCG mod 2³¹−1), independent of the Column
+  * expression.
   */
 class IndexDeleteSpec extends AnyFunSuite {
 

@@ -8,17 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{StreamingCorpus, StreamingGraph, StreamingIndex,
   StreamingLabels, StreamingLm, StreamingPipeline}
 
-/** The PIPELINE-level wave commit
-  * marker, and the cross-store consistent reader built on it.
-  * CrossComponentCrashSpec proves whole-wave retry CONVERGES; this spec
-  * closes what a READER sees mid-wave: a consistent reader
-  * ([[StreamingPipeline.current]]) is driven at EVERY inter-component
-  * kill point of the composed corpus → labels → index → graph → LM
-  * wave and must observe exactly the previous whole-wave state in all
-  * five stores — component commits are invisible until the pipeline's
-  * single `_WAVE` marker lands (the StreamingLm single-root rule, one
-  * level up). After the commit, the same entry point replays BOTH
-  * waves' states historically at their wave ids — the cross-store
+/** The PIPELINE-level wave commit marker, and the cross-store consistent
+  * reader built on it. CrossComponentCrashSpec proves whole-wave retry
+  * CONVERGES; this spec closes what a READER sees mid-wave: a consistent
+  * reader ([[StreamingPipeline.current]]) is driven at EVERY
+  * inter-component kill point of the composed corpus → labels → index →
+  * graph → LM wave and must observe exactly the previous whole-wave state
+  * in all five stores — component commits are invisible until the
+  * pipeline's single `_WAVE` marker lands (the StreamingLm single-root
+  * rule, one level up). After the commit, the same entry point replays
+  * BOTH waves' states historically at their wave ids — the cross-store
   * as-of audit (#6): one wave id, five stores, mutually consistent.
   */
 class PipelineWaveSpec extends AnyFunSuite {

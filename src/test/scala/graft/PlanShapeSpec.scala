@@ -3,10 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression guards for the scale-critical properties:
-  * candidate generation must stay equi-join-banded (no
-  * all-pairs operator can sneak back in), top-k-per-group must keep the
-  * WindowGroupLimit partial/final pair, and dedup scans must stay
-  * column-pruned. Asserted on the AQE FINAL plan (after execution).
+  * candidate generation must stay equi-join-banded (no all-pairs operator
+  * can sneak back in), top-k-per-group must keep the WindowGroupLimit
+  * partial/final pair, and dedup scans must stay column-pruned. Asserted
+  * on the AQE FINAL plan (after execution).
   */
 class PlanShapeSpec extends AnyFunSuite {
 

@@ -4,17 +4,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TextQueries
 
-/** q174's measured label-geometry
-  * invariants, PINNED — the round-16 scaladoc records them as
-  * measurements (pos∩neg disjoint, margins strictly positive, both
-  * branches live), but a testdata regeneration could silently blunt
-  * the slice (shrink the candidate lists below RerankNegMin, or tie
-  * teacher scores) and the oracle hash gate would still pass on the
-  * blunted rows. This spec goes red instead. The teacher side is
-  * re-derived against an INDEPENDENT Scala model (the q112
-  * discipline): plain while-loop float→double dot products straight
-  * off the embeddings parquet, bit-equal to the DotFold expression by
-  * the fixed left-to-right accumulation order.
+/** q174's measured label-geometry invariants, PINNED — the round-16
+  * scaladoc records them as measurements (pos∩neg disjoint, margins
+  * strictly positive, both branches live), but a testdata regeneration
+  * could silently blunt the slice (shrink the candidate lists below
+  * RerankNegMin, or tie teacher scores) and the oracle hash gate would
+  * still pass on the blunted rows. This spec goes red instead. The
+  * teacher side is re-derived against an INDEPENDENT Scala model (the
+  * q112 discipline): plain while-loop float→double dot products straight
+  * off the embeddings parquet, bit-equal to the DotFold expression by the
+  * fixed left-to-right accumulation order.
   */
 class RerankPairsSpec extends AnyFunSuite {
 
